@@ -32,12 +32,16 @@ object ExecutedPlanProbe {
       })
     names.foreach { name =>
       lastPlan = null
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.write.format("noop").mode("overwrite").save()
       var spin = 0
       while (lastPlan == null && spin < 200) { Thread.sleep(20); spin += 1 }
+      // the listener may not have fired yet: fall back to the DataFrame's
+      // own physical plan
+      val plan = if (lastPlan != null) lastPlan
+        else df.queryExecution.executedPlan.toString
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"/tmp/exec_$name.txt"), lastPlan)
+        java.nio.file.Paths.get(s"/tmp/exec_$name.txt"), plan)
       println(s"[execplan] $name -> /tmp/exec_$name.txt")
     }
     spark.stop()

@@ -50,13 +50,18 @@ object CodegenProbe {
             exception: Exception): Unit = ()
       })
 
-    def report(label: String, df: DataFrame): Unit = {
+    // runs `df` and returns its executed plan: the listener's copy, or —
+    // if it has not fired yet — the DataFrame's own physical plan
+    def executed(df: DataFrame): org.apache.spark.sql.execution.SparkPlan = {
       lastPlan = null
       df.write.format("noop").mode("overwrite").save()
       var spin = 0
       while (lastPlan == null && spin < 100) { Thread.sleep(20); spin += 1 }
-      val plan = if (lastPlan != null) lastPlan
-        else df.queryExecution.executedPlan
+      if (lastPlan != null) lastPlan else df.queryExecution.executedPlan
+    }
+
+    def report(label: String, df: DataFrame): Unit = {
+      val plan = executed(df)
       var wsc = 0
       var bare = List.empty[String]
       def walk(p: org.apache.spark.sql.execution.SparkPlan,
@@ -87,15 +92,10 @@ object CodegenProbe {
       println(s"[codegen]   outFields=${df.schema.fields.length}")
     }
 
-    def dump(label: String, df: DataFrame): Unit = {
-      lastPlan = null
-      df.write.format("noop").mode("overwrite").save()
-      var spin = 0
-      while (lastPlan == null && spin < 100) { Thread.sleep(20); spin += 1 }
+    def dump(label: String, df: DataFrame): Unit =
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"/tmp/codegen_$label.txt"),
-        lastPlan.toString)
-    }
+        executed(df).toString)
     dump("flat", Linking.linkFlat(spark, entities, prep,
       spark.emptyDataFrame, cfg))
 

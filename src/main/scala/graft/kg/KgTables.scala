@@ -37,8 +37,9 @@ final class KgTables(spark: SparkSession, root: String) {
     * downstream stages scan pruned parquet instead of recomputing lineage.
     * The manifest row count comes from `df.observe()` captured DURING the
     * write — a post-write re-read + count() would be a full extra scan of
-    * every stage output per run. */
-  def write(df: DataFrame, name: String, runId: String, stage: String,
+    * every stage output per run. `df` is by name: a stage already in the
+    * manifest never builds its plan, nor runs any eager job inside it. */
+  def write(df: => DataFrame, name: String, runId: String, stage: String,
       fingerprint: String, partitionBy: Seq[String] = Nil): DataFrame = {
     if (isDone(runId, stage, fingerprint)) return read(name)
     val obs = org.apache.spark.sql.Observation(s"rows_${name}_${System.nanoTime()}")

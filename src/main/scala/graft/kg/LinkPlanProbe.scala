@@ -6,12 +6,18 @@ import org.apache.spark.sql.functions._
 /** Scratch plan probe: prints the formatted physical plan of the LINK
   * chain (Linking.linkFlat over Pipeline-shaped entity rows) under the
   * broadcast regime and under forceSaltedJoins — the at-scale join shape
-  * whose exchange count the optimization rounds track (PLANS.md).
-  * Usage: runMain graft.kg.LinkPlanProbe [salted|broadcast|both]
+  * whose exchange count the optimization rounds track (PLANS.md). The
+  * salted plan is the keyed shape: the chain over the distinct
+  * (entity, qid) keys, then the three mention-row exchanges of the
+  * join-back (flags, L5 scrape text, payload).
+  * Usage: runMain graft.kg.LinkPlanProbe [salted|broadcast|both] [outDir]
+  * — with `outDir`, each plan is also written to outDir/link_flat_<mode>.txt
+  * (plans/keyed_link/ holds the committed copies).
   */
 object LinkPlanProbe {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("both")
+    val outDir = args.lift(1)
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
@@ -45,9 +51,15 @@ object LinkPlanProbe {
         else docOut.select(col("url").as("p_url"),
           when(length(col("scrape")) > 0, col("scrape")).as("p_extract"))
       val flat = Linking.linkFlat(spark, entities, prep, scrapes, cfg)
+      val plan = flat.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
       println(s"\n================ link_flat_$label ================")
-      println(flat.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      println(plan)
+      outDir.foreach { d =>
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(d, s"link_flat_$label.txt"), plan)
+      }
     }
     if (mode == "broadcast" || mode == "both")
       planFor(KgConfig.default, "broadcast")

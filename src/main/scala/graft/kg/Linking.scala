@@ -18,10 +18,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * Scale design: every dictionary join goes through `dictJoin`, which is
   * SIZE-GATED — dictionaries whose optimizer-estimated size fits under
   * `cfg.dictBroadcastMaxBytes` are broadcast; larger ones take the salted
-  * shuffle-hash path (`saltedJoin`), spreading head-entity hot keys
-  * (country/person hubs) over `cfg.nSalt` buckets on top of AQE skew-join
-  * splitting (SURVEY §4.2). `cfg.forceSaltedJoins` pins the shuffle path so
-  * tests exercise it at small scale (PipelineParitySpec).
+  * shuffle-hash path (`saltedJoin`). `cfg.forceSaltedJoins` pins the
+  * shuffle path so tests exercise it at small scale (PipelineParitySpec).
+  *
+  * Two shapes of the same chain ([[linkFlat]]):
+  *   - per-row: entity rows that CARRY their page's L5 text (`p_extract`,
+  *     the default Pipeline.run and so StreamingPipeline) run the chain
+  *     row by row — with broadcast dictionaries it is map-only;
+  *   - keyed: narrow entity rows (salted Pipeline.run, salted
+  *     runMaterialized, the kg_link_chain query) run the chain ONCE per
+  *     distinct (entity, qid) key — every linked field except the L5 text
+  *     depends only on that key, and a corpus has orders of magnitude more
+  *     mentions than keys. The results reach the mention rows through
+  *     three narrow exchanges: a salted join of each key's `resolved4`
+  *     flag (`link_plan` site `link_key_flags`), the gated L5 scrape join
+  *     on url (`l5_scrapes`), and a salted join of the per-key payload
+  *     (`link_key_payload`), last, so its output feeds the node write
+  *     directly. Head-entity skew (country/person hubs) is handled at those
+  *     two salted join-backs, which spread a hot key's mention rows over
+  *     `cfg.nSalt` buckets (SURVEY §4.2).
   */
 object Linking {
 
@@ -109,7 +124,15 @@ object Linking {
   def saltedJoin(
       probe: DataFrame, dict: DataFrame, probeKey: Column, dictKey: Column,
       nSalt: Int, joinType: String = "left",
-      saltSource: Option[Column] = None): DataFrame = {
+      saltSource: Option[Column] = None): DataFrame =
+    saltedJoinOn(probe, dict, probeKey === dictKey, nSalt, joinType, saltSource)
+
+  /** [[saltedJoin]] over an arbitrary equi-join condition `on` (e.g. a
+    * multi-column null-safe key); the salt equality is added to it. */
+  def saltedJoinOn(
+      probe: DataFrame, dict: DataFrame, on: Column,
+      nSalt: Int, joinType: String,
+      saltSource: Option[Column]): DataFrame = {
     val src = saltSource.getOrElse(defaultSaltSource(probe))
     val saltedProbe = probe.withColumn("__salt",
       pmod(xxhash64(src), lit(nSalt)).cast("int"))
@@ -118,7 +141,7 @@ object Linking {
     val saltedDict = dict.withColumn("__salt",
       explode(sequence(lit(0), lit(nSalt - 1)))).hint("shuffle_hash")
     saltedProbe.join(saltedDict,
-      probeKey === dictKey && saltedProbe("__salt") === saltedDict("__salt"),
+      on && saltedProbe("__salt") === saltedDict("__salt"),
       joinType).drop("__salt")
   }
 
@@ -130,6 +153,12 @@ object Linking {
       estBytes: BigInt, fromRowCount: Boolean) {
     def broadcast: Boolean = path == "broadcast"
   }
+
+  /** `estBytes` of a site whose path does not depend on a size: the keyed
+    * join-backs are salted unconditionally, and estimating their key
+    * table would only re-optimize the whole key chain at plan-build time
+    * to arrive at the no-stats sentinel. */
+  val NotEstimated: BigInt = BigInt(-1)
 
   /** Per-run join-decision recorder: created by the caller that will
     * surface the decisions (Pipeline.run / runMaterialized) and threaded
@@ -162,11 +191,16 @@ object Linking {
     * plans without CBO stats) — not a real size. */
   private val NoStatsSentinel = BigInt(Long.MaxValue) / 4
 
-  /** Size-gated dictionary join (the production join for every L-stage):
-    * broadcast when the dictionary's optimizer-estimated size fits under
-    * `cfg.dictBroadcastMaxBytes`; salted shuffle-hash otherwise. At 100 TB
-    * the wiki/wd dictionaries (10^8 rows) always take the salted path; the
-    * pattern/redirect tables stay broadcast.
+  /** Size-gated dictionary join (the production join for every
+    * dictionary-side L-stage): broadcast when the dictionary's
+    * optimizer-estimated size fits under `cfg.dictBroadcastMaxBytes`;
+    * salted shuffle-hash otherwise. At 100 TB the wiki/wd dictionaries
+    * (10^8 rows) always take the salted path; the pattern/redirect tables
+    * stay broadcast. In the keyed link shape ([[linkFlat]]) the probe side
+    * is the distinct (entity, qid) key set, which has no hot key — there
+    * the salting only replicates the dictionary; mention-row skew is
+    * handled at the two join-backs, which call [[saltedJoinOn]] directly
+    * and never come through this gate.
     *
     * Gate robustness: when the optimizer has NO size estimate it returns
     * the defaultSizeInBytes sentinel (8 EiB), which would force every
@@ -390,20 +424,25 @@ object Linking {
       mlExtra = mlLangs.map(l => l -> mlTable(l)))
   }
 
-  /** L1-L6: Wikipedia linking with the reference's staged fallback chain
-    * (wikipedia/service.py:1156-1259): L1 direct (redirect-resolved) →
-    * L2 language fallback → L3 opensearch → L4 synonym → L5 scrape. Each
-    * fallback resolves ONLY the still-unresolved remainder. Adds wiki_url,
-    * wiki_url_alt, wiki_extract, wiki_categories, wiki_links,
-    * wiki_wikidata_id, wiki_fallback_source, wiki_status.
+  /** L1-L4 + L7: Wikipedia linking with the reference's staged fallback
+    * chain (wikipedia/service.py:1156-1259): L1 direct (redirect-resolved)
+    * → L2 language fallback → L3 opensearch → L4 synonym. Each fallback
+    * resolves ONLY the still-unresolved remainder. Every field it adds
+    * depends on the input row's (entity, qid) alone, so `entities` is
+    * either the entity rows or their distinct key set ([[linkFlat]]).
+    * Adds wiki_url, wiki_url_alt, wiki_categories, wiki_links,
+    * wiki_wikidata_id, wiki_multilang, plus the L5 inputs resolved4,
+    * any_extract, wx_extract and wx_fallback that [[wikiL5]] turns into
+    * wiki_extract, wiki_fallback_source and wiki_status. `salt` is the
+    * probe-salt source of the salted dictionary joins.
     */
   def wikipedia(
       spark: SparkSession,
       entities: DataFrame,
       prep: Prepared,
-      scrapes: DataFrame, // (p_url, p_extract): pre-extracted page text (L5)
       cfg: KgConfig,
-      rec: JoinRecorder = JoinRecorder.noop): DataFrame = {
+      rec: JoinRecorder,
+      salt: Column): DataFrame = {
 
     val minLen = cfg.minExtractLen
     val secondaryLang = if (cfg.language == "de") "en" else "de"
@@ -419,7 +458,7 @@ object Linking {
     // consumed by L3's cleaned retry key) falls back to the entity surface
     // on a miss, as the sequential coalesce did.
     val s1 = dictJoin(entities, prep.l1Dict,
-        entities("entity"), col("l1_key"), cfg, entities("url"),
+        entities("entity"), col("l1_key"), cfg, salt,
         site = "l1_syn_primary", rec = rec)
       .withColumn("w_lookup", coalesce(col("l1_lookup"), col("entity")))
       .drop("l1_key", "l1_lookup")
@@ -433,7 +472,7 @@ object Linking {
     // mechanism); only consulted where stage 1 is unresolved. The
     // sitelink→secondary-page hop is pre-composed into prep.l2Dict, so the
     // probe joins once on the qid.
-    val s2 = dictJoin(s1, prep.l2Dict, s1("qid"), col("sl_qid"), cfg, s1("url"),
+    val s2 = dictJoin(s1, prep.l2Dict, s1("qid"), col("sl_qid"), cfg, salt,
       site = "l2_secondary", rec = rec).drop("sl_qid")
     val ok2 = col("w2_extract").isNotNull && length(col("w2_extract")) >= minLen
 
@@ -471,7 +510,7 @@ object Linking {
     val needs3 = !(ok1 || ok2)
     val s3 = dictJoin(s2c, prep.osPick,
       when(needs3, cleanTitleCol(lower(col("w_lookup")))), col("os_hit_key"),
-      cfg, col("url"), site = "l3_opensearch", rec = rec)
+      cfg, salt, site = "l3_opensearch", rec = rec)
     val ok3 = col("os_extract").isNotNull // null unless needs3 (gated key)
 
     // L4 (fallback 3): synonym retry — PRE-COMPOSED into the L1 join
@@ -487,12 +526,12 @@ object Linking {
     // the FULL wiki projection — except the L5-dependent branches — is
     // computed HERE and the per-stage candidate payloads (w_*, w2_*,
     // os_*, syn_*, w_lookup) are dropped before any further exchange. In
-    // the salted regime the L7 extra-language joins and the L5 scrape
-    // join then shuffle ONE final copy of each field instead of up to
-    // four candidate copies. Each wx_* is the original ok1..ok4
-    // when-chain with the ok1/ok2 branches partially evaluated (ok3/ok4
-    // imply !ok1 && !ok2, so branch order can be rotated without changing
-    // any outcome).
+    // the salted regime the L7 extra-language joins and the wikidata and
+    // dbpedia joins then shuffle ONE final copy of each field instead of
+    // up to four candidate copies. Each wiki_* / wx_* column below is the
+    // original ok1..ok4 when-chain with the ok1/ok2 branches partially
+    // evaluated (ok3/ok4 imply !ok1 && !ok2, so branch order can be
+    // rotated without changing any outcome).
     //
     // L7 wikipedia_multilang (models/data_models.py:22-33 +
     // wikipedia/service.py:405-458): per-language {label, url, description}
@@ -530,66 +569,35 @@ object Linking {
       when(ok2 && !ok1, lit(null).cast("string"))
         .when(ok3, col("os_url"))
         .when(ok4, col("syn_url"))
-        .otherwise(col("w_url")).as("wx_url"),
+        .otherwise(col("w_url")).as("wiki_url"),
       when(ok2 && !ok1, col("w2_url")).otherwise(lit(null).cast("string"))
-        .as("wx_url_alt"),
+        .as("wiki_url_alt"),
       cleanCategories(coalesce(
         when(ok3, col("os_categories")).when(ok4, col("syn_categories"))
           .otherwise(col("cat12")),
-        array())).as("wx_categories"),
+        array())).as("wiki_categories"),
       coalesce(
         when(ok3, col("os_links")).when(ok4, col("syn_links"))
           .otherwise(col("links12")),
-        array().cast("array<string>")).as("wx_links"),
+        array().cast("array<string>")).as("wiki_links"),
       coalesce(
         when(ok3, col("os_wikidata_id")).when(ok4, col("syn_wikidata_id"))
           .otherwise(col("wd12")),
-        col("w_wikidata_id")).as("wx_wikidata_id"),
+        col("w_wikidata_id")).as("wiki_wikidata_id"),
       (ok1 || ok2 || ok3 || ok4).as("resolved4"),
       col("w_extract").isNotNull.as("any_extract")): _*)
 
     // L7 extra languages: one dictionary join per configured language,
     // keyed on the effective qid (identical to the final wiki_wikidata_id
-    // coalesce — fully decided post-L3). Runs BEFORE the L5 scrape join:
-    // both are independent left joins, and this order lets the collapsed
-    // narrow rows cross the ml exchanges. Each table is O(dictionary) and
-    // joins through the same size-gated dictJoin.
-    val effQid = coalesce(col("qid"), col("wx_wikidata_id"))
+    // coalesce — fully decided post-L3). Runs BEFORE the L5 scrape text is
+    // consulted: the two are independent, and this order lets the
+    // collapsed narrow rows cross the ml exchanges. Each table is
+    // O(dictionary) and joins through the same size-gated dictJoin.
+    val effQid = coalesce(col("qid"), col("wiki_wikidata_id"))
     val withMl = prep.mlExtra.foldLeft(s3c) { case (df, (l, tbl)) =>
-      dictJoin(df, tbl, effQid, col(s"mlx_qid_$l"), cfg, col("url"),
+      dictJoin(df, tbl, effQid, col(s"mlx_qid_$l"), cfg, salt,
         site = s"l7_ml_$l", rec = rec).drop(s"mlx_qid_$l")
     }
-
-    // L5 (fallback 4): deterministic "scrape" = the page text already
-    // extracted by the S2 UDF in the extract pass (carried on DocOut so the
-    // 100 TB html column is read exactly once in the whole pipeline).
-    // Preferred path (Pipeline.run): the entity rows CARRY `p_extract`
-    // from the docOut explode — zero join, zero shuffle, and the link
-    // prefix is evaluated exactly once (the previous filter/union split
-    // re-executed the whole L1-L4 join tree for each branch: the round-2
-    // scaling bottleneck). Compat path (callers passing a separate scrapes
-    // table, e.g. materialized stage tables): ONE UNSALTED shuffle-hash
-    // join — scrapes is a document-scale table, so dictJoin would always
-    // exceed the broadcast budget and replicate the full page-text table
-    // nSalt× into the shuffle (and eagerly count() it when its plan stats
-    // are missing); its url keys are high-cardinality and skewless, so a
-    // plain hash join is the right shape. Already-resolved rows keep a
-    // per-row NON-matching key (NUL-prefixed url) rather than NULL:
-    // null keys all hash to one reducer, and the resolved majority would
-    // collapse into a single straggler partition.
-    val needs5 = !col("resolved4")
-    val s5 =
-      if (withMl.columns.contains("p_extract")) withMl
-      else {
-        rec.add(JoinDecision("l5_scrapes", "shuffle_hash",
-          scrapes.queryExecution.optimizedPlan.stats.sizeInBytes, fromRowCount = false))
-        val l5Key = when(needs5, col("url"))
-          .otherwise(concat(lit("\u0000"), col("url")))
-        withMl.join(scrapes.hint("shuffle_hash"), l5Key === col("p_url"), "left")
-          .drop("p_url")
-      }
-    val ok5 = needs5 && col("p_extract").isNotNull &&
-      length(col("p_extract")) >= minLen
 
     // extra-language entries from the joined sitelink tables (absent
     // languages contribute an empty map, like the reference's omission)
@@ -604,19 +612,56 @@ object Linking {
     val multilang =
       (if (mlExtras.isEmpty) col("ml_base")
        else map_concat(col("ml_base") +: mlExtras: _*)).as("wiki_multilang")
+    withMl.select(s3c.columns.filter(_ != "ml_base").map(col).toIndexedSeq :+
+      multilang: _*)
+  }
 
-    val keep = entities.columns.filter(_ != "p_extract").map(col).toIndexedSeq
-    s5.select(keep ++ Seq(
-      multilang,
+  /** L5 (fallback 4) and the final wiki_* projection: deterministic
+    * "scrape" = the page text already extracted by the S2 UDF in the
+    * extract pass (carried on DocOut so the 100 TB html column is read
+    * exactly once in the whole pipeline), consulted only by rows that L1-L4
+    * left unresolved.
+    *
+    * Per-row shape (Pipeline.run's default): the entity rows CARRY
+    * `p_extract` from the docOut explode — zero join, zero shuffle.
+    * Otherwise (narrow entity rows, e.g. materialized stage tables) the
+    * text comes from `scrapes` (p_url, p_extract) by ONE UNSALTED
+    * shuffle-hash join — scrapes is a document-scale table, so dictJoin
+    * would always exceed the broadcast budget and replicate the full
+    * page-text table nSalt× into the shuffle; its url keys are
+    * high-cardinality and skewless, so a plain hash join is the right
+    * shape. Already-resolved rows keep a per-row NON-matching key
+    * (NUL-prefixed url) rather than NULL: null keys all hash to one
+    * reducer, and the resolved majority would collapse into a single
+    * straggler partition.
+    *
+    * `payload` runs between the text attach and the projection: the keyed
+    * shape joins the per-key link payload there, so the L5 join moves only
+    * the narrow mention rows and the payload join's output feeds the node
+    * write directly. */
+  private def wikiL5(rows: DataFrame, scrapes: DataFrame, cfg: KgConfig,
+      rec: JoinRecorder)(payload: DataFrame => DataFrame): DataFrame = {
+    val needs5 = !col("resolved4")
+    val withText =
+      if (rows.columns.contains("p_extract")) rows
+      else {
+        rec.add(JoinDecision("l5_scrapes", "shuffle_hash",
+          scrapes.queryExecution.optimizedPlan.stats.sizeInBytes, fromRowCount = false))
+        val l5Key = when(needs5, col("url"))
+          .otherwise(concat(lit("\u0000"), col("url")))
+        rows.join(scrapes.hint("shuffle_hash"), l5Key === col("p_url"), "left")
+          .drop("p_url")
+      }
+    val full = payload(withText)
+    val ok5 = needs5 && col("p_extract").isNotNull &&
+      length(col("p_extract")) >= cfg.minExtractLen
+    val l5Inputs = Set("p_extract", "resolved4", "any_extract", "wx_extract",
+      "wx_fallback")
+    full.select(full.columns.filterNot(l5Inputs).map(col).toIndexedSeq ++ Seq(
       when(ok5, col("p_extract")).otherwise(col("wx_extract"))
         .as("wiki_extract"),
       when(ok5, lit("beautifulsoup")).otherwise(col("wx_fallback"))
         .as("wiki_fallback_source"),
-      col("wx_url").as("wiki_url"),
-      col("wx_url_alt").as("wiki_url_alt"),
-      col("wx_categories").as("wiki_categories"),
-      col("wx_links").as("wiki_links"),
-      col("wx_wikidata_id").as("wiki_wikidata_id"),
       // P14 status derivation: found iff any extract
       when(col("resolved4") || ok5 || col("any_extract"),
         lit("found")).otherwise(lit("not_found")).as("wiki_status")): _*)
@@ -691,10 +736,10 @@ object Linking {
   /** L9-L12: Wikidata enrichment — qid from gazetteer/wiki pageprops, then
     * ONE dictionary join against the pre-enriched dict (enrichWdDict). */
   def wikidata(spark: SparkSession, linked: DataFrame, prep: Prepared,
-      cfg: KgConfig, rec: JoinRecorder = JoinRecorder.noop): DataFrame = {
+      cfg: KgConfig, rec: JoinRecorder, salt: Column): DataFrame = {
     val withKey = linked.withColumn("wd_key",
       coalesce(col("qid"), col("wiki_wikidata_id")))
-    dictJoin(withKey, prep.enrichedWd, col("wd_key"), col("wd_qid"), cfg, col("url"),
+    dictJoin(withKey, prep.enrichedWd, col("wd_key"), col("wd_qid"), cfg, salt,
       site = "wd_enriched", rec = rec)
       .withColumn("wd_status",
         when(col("wd_qid").isNotNull, lit("found")).otherwise(lit("not_found")))
@@ -709,7 +754,7 @@ object Linking {
     * label, first candidate by uri order — the deterministic stand-in for
     * the Lookup service's relevance-ranked first hit. */
   def dbpedia(spark: SparkSession, linked: DataFrame, prep: Prepared,
-      cfg: KgConfig, rec: JoinRecorder = JoinRecorder.noop): DataFrame = {
+      cfg: KgConfig, rec: JoinRecorder, salt: Column): DataFrame = {
     // P10 URI construction as a native expression ([[graft.functions
     // .DbpediaUri]]) — keeps the L13 key projection inside
     // WholeStageCodegen (a ScalaUDF node would break the span).
@@ -720,7 +765,7 @@ object Linking {
         coalesce(element_at(col("wd_labels"), "en"), col("entity")))
       .withColumn("dbp_uri", call_function("dbpedia_uri", col("dbp_label_src")))
     val joined = dictJoin(withUri, prep.dbpSel,
-      col("dbp_uri"), col("dbp_uri_dict"), cfg, col("url"), site = "dbp_strict",
+      col("dbp_uri"), col("dbp_uri_dict"), cfg, salt, site = "dbp_strict",
       rec = rec)
     val strictOk = col("dbp_uri").isNotNull && col("dbp_label").isNotNull &&
       col("dbp_abstract").isNotNull
@@ -731,7 +776,7 @@ object Linking {
     // filter+union, which would re-execute the whole upstream link chain
     // per branch)
     val withLookup = dictJoin(joined, prep.lookupPick,
-      when(!strictOk, lower(col("dbp_label_src"))), col("lk_key"), cfg, col("url"),
+      when(!strictOk, lower(col("dbp_label_src"))), col("lk_key"), cfg, salt,
       site = "dbp_lookup", rec = rec)
     val lookupOk = col("lk_uri").isNotNull &&
       // the Lookup hit must not be the same resource the construction
@@ -807,18 +852,48 @@ object Linking {
     * user-facing nested shape ON TOP of the cache read — Catalyst
     * collapses `sources.wikipedia.status` through the nesting projection
     * back to the flat column (SimplifyExtractValueOps), so consumers of a
-    * few fields scan only those columns. */
+    * few fields scan only those columns.
+    *
+    * Entity rows that carry `p_extract` run the chain per row; otherwise
+    * it runs once per distinct (entity, qid) key and is joined back (see
+    * the object header). The two join-backs call [[saltedJoinOn]]
+    * directly, not [[dictJoin]]: the key table's size estimate overflows
+    * to the no-stats sentinel, and dictJoin's row-count fallback would
+    * execute extract plus the key chain while the plan is being built. */
   def linkFlat(
       spark: SparkSession,
       entities: DataFrame,
       prep: Prepared,
-      scrapes: DataFrame,
+      scrapes: DataFrame, // (p_url, p_extract): L5 text for narrow rows
       cfg: KgConfig,
       rec: JoinRecorder = JoinRecorder.noop): DataFrame = {
-    val w = wikipedia(spark, entities, prep, scrapes, cfg, rec)
-    val d = wikidata(spark, w, prep, cfg, rec)
-    val b = dbpedia(spark, d, prep, cfg, rec)
-    b.select(
+    def wdDbp(w: DataFrame, salt: Column): DataFrame =
+      dbpedia(spark, wikidata(spark, w, prep, cfg, rec, salt), prep, cfg, rec, salt)
+    val linked =
+      if (entities.columns.contains("p_extract")) {
+        val salt = col("url")
+        val w = wikipedia(spark, entities, prep, cfg, rec, salt)
+        wdDbp(wikiL5(w, scrapes, cfg, rec)(identity), salt)
+      } else {
+        // distinct keys have no hot key: any salt source spreads them
+        val salt = col("entity")
+        val keys = entities.select("entity", "qid").distinct()
+        val chained = wdDbp(wikipedia(spark, keys, prep, cfg, rec, salt), salt)
+        val payload = chained.withColumnsRenamed(
+          Map("entity" -> "k_entity", "qid" -> "k_qid"))
+        // null-safe: entities without a qid still meet their key row
+        val onKey = col("entity") <=> col("k_entity") && col("qid") <=> col("k_qid")
+        def joinBack(rows: DataFrame, table: DataFrame, site: String): DataFrame = {
+          rec.add(JoinDecision(site, "salted", NotEstimated, fromRowCount = false))
+          saltedJoinOn(rows, table, onKey, cfg.nSalt, "left", Some(col("url")))
+            .drop("k_entity", "k_qid")
+        }
+        val flagged = joinBack(entities,
+          payload.select("k_entity", "k_qid", "resolved4"), "link_key_flags")
+        wikiL5(flagged, scrapes, cfg, rec)(
+          joinBack(_, payload.drop("resolved4"), "link_key_payload"))
+      }
+    linked.select(
       col("url"), col("lang"), col("entity_id").as("id"), col("entity"),
       col("entity_type"), col("inferred"), col("citation"),
       col("citation_start"), col("citation_end"),

@@ -113,15 +113,16 @@ object Pipeline {
     //
     // Broadcast regime (the small-dictionary gate outcome): each entity
     // row carries its document's `p_extract` (the L5 scrape text) from the
-    // same cached docOut row — zero L5 join, zero shuffle, and no fat
-    // column ever moves (broadcast joins don't shuffle the probe).
+    // same cached docOut row, and Linking.linkFlat runs its per-row chain —
+    // zero L5 join, zero shuffle, and no fat column ever moves (broadcast
+    // joins don't shuffle the probe).
     // Salted regime (forceSaltedJoins — the at-scale shape where every
-    // dictionary exceeds the broadcast budget): every dictJoin SHUFFLES
-    // the probe side, so carrying the full page text would drag it through
-    // all nine salted exchanges. There the entity rows stay NARROW and the
-    // scrape text is re-attached by ONE unsalted shuffle-hash join at L5
-    // (Linking.wikipedia compat path) — the html-derived text crosses the
-    // wire exactly once.
+    // dictionary exceeds the broadcast budget): the entity rows stay
+    // NARROW, so linkFlat runs the chain once per distinct (entity, qid)
+    // key and joins the results back in three narrow exchanges — the
+    // salted resolved4 flags, ONE unsalted shuffle-hash join that
+    // re-attaches the scrape text at L5 (the html-derived text crosses the
+    // wire exactly once), and the salted per-key payload.
     val rec = new Linking.JoinRecorder
     val carryScrape = !cfg.forceSaltedJoins
     // under the split-scrape probe the text column is not in the cache —
@@ -233,7 +234,7 @@ object Pipeline {
     import spark.implicits._
     val fp = fingerprintOf(pages, cfg)
 
-    val docOut = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
+    lazy val docOut = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
       dicts.wdPartOf, cfg, useHtml = true, descByQid = dicts.wdDesc,
       idf = Some(dicts.idf))
     // Scrape placement mirrors Pipeline.run's regime split (see the link
@@ -242,8 +243,15 @@ object Pipeline {
     // full-corpus-width stage write AND one fewer extract pass over the
     // html), no L5 join downstream; the text is duplicated per entity
     // (~3x) in exchange. Salted regime: kg_entities stays NARROW (the
-    // probe rows cross every salted exchange) and the text is written ONCE
-    // to kg_scrapes, re-attached by the single unsalted L5 join.
+    // link stage runs keyed and its mention rows cross the three
+    // join-back exchanges) and the text is written ONCE to kg_scrapes,
+    // re-attached by the single unsalted L5 join.
+    //
+    // Every stage body is passed BY NAME to tables.write: a stage the
+    // manifest marks done builds no plan and runs no job (the eager
+    // connected-components checkpoints included), so a no-op resume only
+    // reads the manifest and re-opens the stage tables. A resumed link
+    // stage records no link_plan decisions, since its plan is never built.
     val carryScrape = !cfg.forceSaltedJoins
     val entities = tables.write(
       if (carryScrape)
