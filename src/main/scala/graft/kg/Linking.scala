@@ -23,10 +23,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *
   * Two shapes of the same chain ([[linkFlat]]):
   *   - per-row: entity rows that CARRY their page's L5 text (`p_extract`,
-  *     the default Pipeline.run and so StreamingPipeline) run the chain
-  *     row by row — with broadcast dictionaries it is map-only;
-  *   - keyed: narrow entity rows (salted Pipeline.run, salted
-  *     runMaterialized, the kg_link_chain query) run the chain ONCE per
+  *     the default Pipeline.run and so StreamingPipeline), and narrow
+  *     rows without `cfg.forceSaltedJoins` (the kg_link_chain query), run
+  *     the chain row by row — with broadcast dictionaries it is map-only,
+  *     plus the one L5 scrape join for narrow rows;
+  *   - keyed: narrow entity rows under `cfg.forceSaltedJoins` (salted
+  *     Pipeline.run, salted runMaterialized) run the chain ONCE per
   *     distinct (entity, qid) key — every linked field except the L5 text
   *     depends only on that key, and a corpus has orders of magnitude more
   *     mentions than keys. The results reach the mention rows through
@@ -854,12 +856,13 @@ object Linking {
     * back to the flat column (SimplifyExtractValueOps), so consumers of a
     * few fields scan only those columns.
     *
-    * Entity rows that carry `p_extract` run the chain per row; otherwise
-    * it runs once per distinct (entity, qid) key and is joined back (see
-    * the object header). The two join-backs call [[saltedJoinOn]]
-    * directly, not [[dictJoin]]: the key table's size estimate overflows
-    * to the no-stats sentinel, and dictJoin's row-count fallback would
-    * execute extract plus the key chain while the plan is being built. */
+    * Narrow entity rows (no `p_extract`) under `cfg.forceSaltedJoins` run
+    * the chain once per distinct (entity, qid) key and are joined back;
+    * all other rows run it per row (see the object header). The two
+    * join-backs call [[saltedJoinOn]] directly, not [[dictJoin]]: the key
+    * table's size estimate overflows to the no-stats sentinel, and
+    * dictJoin's row-count fallback would execute extract plus the key
+    * chain while the plan is being built. */
   def linkFlat(
       spark: SparkSession,
       entities: DataFrame,
@@ -869,8 +872,12 @@ object Linking {
       rec: JoinRecorder = JoinRecorder.noop): DataFrame = {
     def wdDbp(w: DataFrame, salt: Column): DataFrame =
       dbpedia(spark, wikidata(spark, w, prep, cfg, rec, salt), prep, cfg, rec, salt)
+    // keyed only where the dictionaries take the salted path: with
+    // broadcast dictionaries the per-row chain is map-only, and keying it
+    // would add exchanges without saving any
+    val keyed = cfg.forceSaltedJoins && !entities.columns.contains("p_extract")
     val linked =
-      if (entities.columns.contains("p_extract")) {
+      if (!keyed) {
         val salt = col("url")
         val w = wikipedia(spark, entities, prep, cfg, rec, salt)
         wdDbp(wikiL5(w, scrapes, cfg, rec)(identity), salt)
@@ -878,20 +885,22 @@ object Linking {
         // distinct keys have no hot key: any salt source spreads them
         val salt = col("entity")
         val keys = entities.select("entity", "qid").distinct()
-        val chained = wdDbp(wikipedia(spark, keys, prep, cfg, rec, salt), salt)
-        val payload = chained.withColumnsRenamed(
-          Map("entity" -> "k_entity", "qid" -> "k_qid"))
+        val w = wikipedia(spark, keys, prep, cfg, rec, salt)
         // null-safe: entities without a qid still meet their key row
         val onKey = col("entity") <=> col("k_entity") && col("qid") <=> col("k_qid")
-        def joinBack(rows: DataFrame, table: DataFrame, site: String): DataFrame = {
+        def joinBack(rows: DataFrame, perKey: DataFrame, site: String): DataFrame = {
           rec.add(JoinDecision(site, "salted", NotEstimated, fromRowCount = false))
+          val table = perKey.withColumnsRenamed(
+            Map("entity" -> "k_entity", "qid" -> "k_qid"))
           saltedJoinOn(rows, table, onKey, cfg.nSalt, "left", Some(col("url")))
             .drop("k_entity", "k_qid")
         }
+        // resolved4 is fully decided by the Wikipedia stages, so the flags
+        // branch stops there; only the payload runs Wikidata and DBpedia
         val flagged = joinBack(entities,
-          payload.select("k_entity", "k_qid", "resolved4"), "link_key_flags")
+          w.select("entity", "qid", "resolved4"), "link_key_flags")
         wikiL5(flagged, scrapes, cfg, rec)(
-          joinBack(_, payload.drop("resolved4"), "link_key_payload"))
+          joinBack(_, wdDbp(w, salt).drop("resolved4"), "link_key_payload"))
       }
     linked.select(
       col("url"), col("lang"), col("entity_id").as("id"), col("entity"),

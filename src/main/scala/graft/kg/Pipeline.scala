@@ -250,8 +250,11 @@ object Pipeline {
     // Every stage body is passed BY NAME to tables.write: a stage the
     // manifest marks done builds no plan and runs no job (the eager
     // connected-components checkpoints included), so a no-op resume only
-    // reads the manifest and re-opens the stage tables. A resumed link
-    // stage records no link_plan decisions, since its plan is never built.
+    // reads the manifest and re-opens the stage tables. The link plan is
+    // a lazy val shared by the link and metrics stages: when the link
+    // stage resumes but the metrics stage runs, the metrics stage builds
+    // the (never executed) link plan itself, so its link_plan decisions
+    // still reach kg_metrics.
     val carryScrape = !cfg.forceSaltedJoins
     val entities = tables.write(
       if (carryScrape)
@@ -271,12 +274,11 @@ object Pipeline {
         "kg_scrapes", runId, "extract_scrapes", fp)
 
     val rec = new Linking.JoinRecorder
-    val nodes = tables.write(
-      Linking.linkAll(spark, entities,
-        Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
-          dicts.dbp, dicts.synonyms, cfg, rec),
-        scrapes, cfg, rec),
-      "kg_nodes", runId, "link", fp)
+    lazy val linkPlan = Linking.linkAll(spark, entities,
+      Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
+        dicts.dbp, dicts.synonyms, cfg, rec),
+      scrapes, cfg, rec)
+    val nodes = tables.write(linkPlan, "kg_nodes", runId, "link", fp)
 
     val aliasEdges = spark.createDataset(dicts.aliases.map(a => (a.alias, a.canonical))).toDF("src", "dst")
     val redirectEdges = dicts.redirects.select(col("from_title").as("src"), col("to_title").as("dst"))
@@ -284,11 +286,12 @@ object Pipeline {
       ConnectedComponents.run(spark, aliasEdges.union(redirectEdges)),
       "kg_components", runId, "canonicalize", fp)
 
-    val metrics = tables.write(
+    val metrics = tables.write({
+      linkPlan // records the link decisions if the link stage resumed
       Statistics.compute(spark, nodes, edgesRaw, runId, cacheNarrow = false)
         .unionByName(tables.partitionLineage(edgesRaw, runId, "extract_edges"))
-        .unionByName(joinDecisionRows(spark, runId, rec)),
-      "kg_metrics", runId, "metrics", fp)
+        .unionByName(joinDecisionRows(spark, runId, rec))
+    }, "kg_metrics", runId, "metrics", fp)
 
     Result(nodes, edgesRaw, components, metrics)
   }

@@ -76,4 +76,23 @@ class KeyedLinkPlanSpec extends SparkSpec {
     assert(flat.filter($"entity" === e(0).name && $"wiki_status" === "found")
       .count() == 2)
   }
+
+  test("narrow rows under broadcast dictionaries keep the per-row chain") {
+    val corpus = SyntheticCorpus.generate(nPages = 20, seed = 7L)
+    val dicts = Pipeline.dictsFromCorpus(spark, corpus)
+    val prep = Pipeline.prepareLink(spark, dicts, KgConfig.default)
+    val e = corpus.entities
+    val entities = Seq(
+      EntityRow("u1", "de", "i1", e(0).name, e(0).qid, e(0).typ, e(0).name, 0, 1, "explicit", 1))
+      .toDF()
+    val scrapes = Seq(("u1", "a" * 150)).toDF("p_url", "p_extract")
+    val rec = new Linking.JoinRecorder
+    val flat = Linking.linkFlat(spark, entities, prep, scrapes, KgConfig.default, rec)
+    val sites = rec.drain().map(_.site)
+    // keying would only add exchanges to a map-only chain: no join-back
+    // sites, just the one L5 scrape join
+    assert(!sites.exists(_.startsWith("link_key_")), sites)
+    assert(sites.count(_ == "l5_scrapes") == 1, sites)
+    assert(flat.count() == 1)
+  }
 }

@@ -67,4 +67,33 @@ class ResumeSpec extends SparkSpec {
     assert(Files.exists(java.nio.file.Paths.get(dirS, "kg_scrapes")))
     assert(!Files.exists(java.nio.file.Paths.get(dirB, "kg_scrapes")))
   }
+
+  test("a resumed link stage still records its link_plan rows") {
+    val dir = Files.createTempDirectory("kg_resume_plan").toString
+    val corpus = SyntheticCorpus.generate(nPages = 40, seed = 7L)
+    val pages = spark.createDataset(corpus.pages).repartition(4)
+    val dicts = Pipeline.dictsFromCorpus(spark, corpus)
+    val cfg = KgConfig.default.copy(forceSaltedJoins = true)
+    def planRows(r: Pipeline.Result): Set[(String, String)] =
+      r.metrics.filter($"stage" === "link_plan").select("metric", "key")
+        .as[(String, String)].collect().toSet
+    val first = planRows(Pipeline.runMaterialized(spark, pages, dicts,
+      new KgTables(spark, dir), cfg, runId = "r1"))
+    assert(first.contains(("dict_join_salted", "link_key_flags")))
+    assert(first.contains(("dict_join_salted", "link_key_payload")))
+
+    // simulate a kill after kg_nodes reached the manifest but before
+    // kg_metrics did: the link stage resumes, the metrics stage re-runs
+    val manifest = java.nio.file.Paths.get(dir, "_snapshots.jsonl")
+    val lines = Files.readAllLines(manifest)
+    lines.removeIf(_.contains("\"stage\":\"metrics\""))
+    Files.write(manifest, lines)
+    val again = planRows(Pipeline.runMaterialized(spark, pages, dicts,
+      new KgTables(spark, dir), cfg, runId = "r1"))
+    assert(again == first)
+    val stages = Files.readAllLines(manifest).toArray.map(_.toString)
+    assert(stages.count(_.contains("\"stage\":\"link\"")) == 1,
+      "the link stage must resume, not re-run")
+    assert(stages.count(_.contains("\"stage\":\"metrics\"")) == 1)
+  }
 }
