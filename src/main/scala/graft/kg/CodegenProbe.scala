@@ -31,10 +31,7 @@ object CodegenProbe {
       idf = Some(dicts.idf)).toDF()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     docOut.count()
-    val entities = docOut.select(
-        when(length(col("scrape")) > 0, col("scrape")).as("p_extract"),
-        explode(col("entities")).as("e"))
-      .select(col("e.*"), col("p_extract"))
+    val entities = Pipeline.entityRows(docOut, cfg)
 
     // capture the EXECUTED plan of the noop write (AQE inserts
     // WholeStageCodegen lazily per query stage at execution time — the

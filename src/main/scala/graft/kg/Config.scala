@@ -11,11 +11,8 @@ final case class KgConfig(
     maxRelations: Int = 15,             // settings.py:38 MAX_RELATIONS
     implicitRelLimit: Int = 20,         // relationships.py:625 IMPLICIT_REL_LIMIT
     minExtractLen: Int = 100,           // wikipedia/service.py:998-1004 fallback gate
-    chunkSize: Int = 1000,              // settings.py TEXT_CHUNK_SIZE
-    chunkOverlap: Int = 50,             // settings.py TEXT_CHUNK_OVERLAP
     semanticDedup: Boolean = true,      // settings.py SEMANTIC_DEDUPLICATION
     predSimThreshold: Double = 0.85,    // deduplication.py:431 similarity_threshold
-    mode: String = "extract",           // settings.py MODE (extract|generate)
     relationExtraction: Boolean = true, // settings.py RELATION_EXTRACTION
     enableEntityInference: Boolean = true, // implicit relations stage (R2)
     // P12 — settings.py:31 ALLOWED_ENTITY_TYPES ("auto" = None = no filter)

@@ -1,7 +1,6 @@
 package graft.kg
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Scratch plan probe: prints the formatted physical plan of the LINK
   * chain (Linking.linkFlat over Pipeline-shaped entity rows) under the
@@ -38,19 +37,11 @@ object LinkPlanProbe {
       val docOut = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
         dicts.wdPartOf, cfg, useHtml = true, dicts.wdDesc,
         idf = Some(dicts.idf)).toDF()
-      val carryScrape = !cfg.forceSaltedJoins
-      val entities =
-        if (carryScrape)
-          docOut.select(
-              when(length(col("scrape")) > 0, col("scrape")).as("p_extract"),
-              explode(col("entities")).as("e"))
-            .select(col("e.*"), col("p_extract"))
-        else docOut.select(explode(col("entities")).as("e")).select("e.*")
       val scrapes =
-        if (carryScrape) spark.emptyDataFrame
-        else docOut.select(col("url").as("p_url"),
-          when(length(col("scrape")) > 0, col("scrape")).as("p_extract"))
-      val flat = Linking.linkFlat(spark, entities, prep, scrapes, cfg)
+        if (Pipeline.carryScrape(cfg)) spark.emptyDataFrame
+        else Pipeline.scrapeRows(docOut)
+      val flat = Linking.linkFlat(spark, Pipeline.entityRows(docOut, cfg),
+        prep, scrapes, cfg)
       val plan = flat.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       println(s"\n================ link_flat_$label ================")

@@ -1,7 +1,6 @@
 package graft.kg
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Scratch probe decomposing the LINK stage cost at scale (broadcast
   * regime): where do the ~18 s at 1.08M pages go?
@@ -54,10 +53,7 @@ object LinkStageProbe {
         idf = Some(dicts.idf)).toDF()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       t("E2 docOut fill (count)")(docOut.count())
-      val entities = docOut.select(
-          when(length(col("scrape")) > 0, col("scrape")).as("p_extract"),
-          explode(col("entities")).as("e"))
-        .select(col("e.*"), col("p_extract"))
+      val entities = Pipeline.entityRows(docOut, cfg)
       t("A entities noop")(noop(entities))
       val flat = Linking.linkFlat(spark, entities, prep,
         spark.emptyDataFrame, cfg)

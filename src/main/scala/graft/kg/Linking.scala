@@ -227,15 +227,6 @@ object Linking {
     else saltedJoin(probe, dict, probeKey, dictKey, cfg.nSalt, joinType, Some(saltSource))
   }
 
-  /** L3 suggestion table (opensearch stand-in, wikipedia/fallbacks.py:82-157):
-    * for each unresolved lookup term, the first (by suggestion rank) primary
-    * title that prefix-matches the term AND carries a usable extract.
-    * Suggestion rank = (title length asc, title asc) capped at 5 — the
-    * deterministic stand-in for the API's relevance order + limit:5, with
-    * "try each suggestion until one works" expressed as filter + min_by.
-    * The prefix index is a bounded explode of the title dictionary (lengths
-    * 3..40) — linear in dictionary size, the batch form of the API's own
-    * prefix index. Input `terms`: one column os_key (lowercased lookup). */
   /** The L3 prefix index (lengths 3..40 per title, ~38 rows/title): the
     * largest prepared artifact — ~4·10^9 rows at 10^8 titles, built ONCE
     * per deployment as a distributed explode. Exposed so the bench can
@@ -246,6 +237,15 @@ object Linking {
       explode(expr("transform(sequence(3, least(char_length(w_title), 40))," +
         " i -> lower(substring(w_title, 1, i)))")).as("os_prefix"))
 
+  /** L3 suggestion table (opensearch stand-in, wikipedia/fallbacks.py:82-157):
+    * for each unresolved lookup term, the first (by suggestion rank) primary
+    * title that prefix-matches the term AND carries a usable extract.
+    * Suggestion rank = (title length asc, title asc) capped at 5 — the
+    * deterministic stand-in for the API's relevance order + limit:5, with
+    * "try each suggestion until one works" expressed as filter + min_by.
+    * The prefix index is a bounded explode of the title dictionary (lengths
+    * 3..40) — linear in dictionary size, the batch form of the API's own
+    * prefix index. Input `terms`: one column os_key (lowercased lookup). */
   private def opensearchPick(terms: DataFrame, primary: DataFrame,
       minLen: Int): DataFrame = {
     val pref = prefixIndex(primary)
@@ -819,21 +819,6 @@ object Linking {
 
   /** Full L-chain: Wikipedia → Wikidata → DBpedia (orchestrator order),
     * assembling the nested node shape (SURVEY §1.1). */
-  /** Convenience overload: build the dictionary artifacts inline (tests;
-    * production/bench callers prepare + persist once and reuse). */
-  def linkAll(
-      spark: SparkSession,
-      entities: DataFrame,
-      wiki: DataFrame,
-      redirects: DataFrame,
-      wd: DataFrame,
-      dbp: DataFrame,
-      scrapes: DataFrame,
-      synonyms: DataFrame,
-      cfg: KgConfig): DataFrame =
-    linkAll(spark, entities,
-      prepare(spark, wiki, redirects, wd, dbp, synonyms, cfg), scrapes, cfg)
-
   def linkAll(
       spark: SparkSession,
       entities: DataFrame,

@@ -1,12 +1,22 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import scala.collection.mutable.ArrayBuffer
 
-/** End-to-end KG construction: pages → extract → link → relate →
-  * canonicalize → materialize (north_star stage graph; reference lifecycle
+/** End-to-end KG construction (reference lifecycle
   * core/process/orchestrator.py:143-355 re-expressed as pure
-  * DataFrame → DataFrame stages — SURVEY §3.1).
+  * DataFrame → DataFrame stages — SURVEY §3.1). One stage graph, in this
+  * order:
+  *
+  *   extract (entities, relations) → link → canonicalize → stats → materialize
+  *
+  * `run` and `runMaterialized` build the same graph and differ only in
+  * where its stage outputs live (a [[Store]]): in-memory caches, or
+  * parquet tables with a resume manifest. GalaxyView (ICDE 2025) models
+  * derived graph tables the same way: one definition, several
+  * materialization policies.
   */
 object Pipeline {
 
@@ -34,9 +44,10 @@ object Pipeline {
     * dropping it would make the returned DataFrame unreadable; CC's
     * intermediate checkpoints clean themselves up). Callers that
     * bulk-clean via a getPersistentRDDs diff (bench reps, the streaming
-    * foreachBatch) additionally reclaim that final block. Default no-op
-    * keeps runMaterialized (which caches nothing — every stage is
-    * table-backed) and test constructions unchanged. */
+    * foreachBatch) additionally reclaim that final block. In
+    * runMaterialized every stage is table-backed and only the statistics
+    * counter cache is released. The default no-op keeps test
+    * constructions unchanged. */
   final case class Result(nodes: DataFrame, edges: DataFrame,
       components: DataFrame, metrics: DataFrame,
       release: () => Unit = () => ())
@@ -58,8 +69,6 @@ object Pipeline {
       idf = lt.idf)
   }
 
-  /** In-memory run (tests, benchmarks): no table layer, returns the live
-    * DataFrames. `useHtml=true` exercises the extract_text invariant path. */
   /** Dictionary artifacts for the link stage, built once per deployment
     * (static data) and reusable across runs; persisted AND materialized so
     * later runs never pay the build. */
@@ -71,124 +80,186 @@ object Pipeline {
     p
   }
 
+  /** In-memory run (tests, benchmarks, each streaming micro-batch): no
+    * table layer; returns live DataFrames over this run's caches. */
   def run(
       spark: SparkSession,
       pages: Dataset[PageRow],
       dicts: Dicts,
       cfg: KgConfig = KgConfig.default,
       runId: String = "local",
-      useHtml: Boolean = true,
-      prepared: Option[Linking.Prepared] = None,
-      cacheNodes: Boolean = true): Result = {
-    import spark.implicits._
+      prepared: Option[Linking.Prepared] = None): Result =
+    stages(spark, pages, dicts, cfg, runId, prepared, new InMemory)
 
-    // ---- extract stage: fused map pass (E1-E3, R1-R4, D3, D6) ----
-    // Cached as a DATAFRAME, not a typed Dataset: typed flatMap would
-    // deserialize the whole DocOut row (including the fat scrape column)
-    // in every consumer, while InMemoryRelation + Catalyst explode prunes
-    // each branch to exactly the columns it reads.
-    val docOutAll = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-      dicts.wdPartOf, cfg, useHtml, dicts.wdDesc, idf = Some(dicts.idf))
-      .toDF()
-    // SPARK_GRAFT_SPLIT_SCRAPE=1 (plan-variant probe, VERDICT r4 item 2a):
-    // drop the 1200-char scrape column from the docOut cache fill and let
-    // the link stage re-run the extract pass for its one p_extract read —
-    // trades a second extract execution for a narrower (cheaper-to-fill)
-    // cache. Measured r5 at 360k pages: LOSES at both thread counts (the
-    // fused extract costs more than caching the text; see PLANS.md), so
-    // the default keeps scrape in the cache.
-    val splitScrape = sys.env.get("SPARK_GRAFT_SPLIT_SCRAPE").contains("1")
-    val docOut = (if (splitScrape) docOutAll.drop("scrape") else docOutAll)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** Materializing run with snapshot/resume (SURVEY §7.4): each stage writes
+    * parquet + manifest; a rerun with the same runId skips completed stages. */
+  def runMaterialized(
+      spark: SparkSession,
+      pages: Dataset[PageRow],
+      dicts: Dicts,
+      tables: KgTables,
+      cfg: KgConfig = KgConfig.default,
+      runId: String = "run1"): Result =
+    stages(spark, pages, dicts, cfg, runId, prepared = None,
+      new InTables(tables, runId, fingerprintOf(pages, cfg)))
 
-    // edges are persisted NARROW: the statistics passes scan them twice
-    val edges = docOut.select(explode(col("triples")).as("t")).select("t.*")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** Where the stage outputs live: the one thing `run` and
+    * `runMaterialized` choose. Stage bodies are passed by name, so a store
+    * may never build a stage at all. */
+  private sealed trait Store {
+    /** Plans this run persisted, dropped by `Result.release`. */
+    val cached = ArrayBuffer.empty[DataFrame]
+    /** The whole extract output, which every projection reads. */
+    def extract(docOut: DataFrame): DataFrame
+    /** One stage output; `reused`: later stages scan it more than once. */
+    def stage(name: String, table: String, reused: Boolean = false,
+        partitionBy: Seq[String] = Nil)(df: => DataFrame): DataFrame
+    /** The link stage: the flat chain output, as nested nodes. */
+    def nodes(flat: => DataFrame): DataFrame
+    /** Metric rows the store adds beside statistics and link_plan. */
+    def lineage(edges: DataFrame): Seq[DataFrame]
+  }
 
-    // ---- link stage: Wikipedia → Wikidata → DBpedia dictionary joins ----
-    // The link input is an UNCACHED projection straight off the docOut
-    // cache: the gated single-pass chain consumes it exactly once, so a
-    // second (entities) cache would only add a BlockManager round-trip —
-    // the round-2 scaling profile showed cache fill/read as the bound.
-    //
-    // Broadcast regime (the small-dictionary gate outcome): each entity
-    // row carries its document's `p_extract` (the L5 scrape text) from the
-    // same cached docOut row, and Linking.linkFlat runs its per-row chain —
-    // zero L5 join, zero shuffle, and no fat column ever moves (broadcast
-    // joins don't shuffle the probe).
-    // Salted regime (forceSaltedJoins — the at-scale shape where every
-    // dictionary exceeds the broadcast budget): the entity rows stay
-    // NARROW, so linkFlat runs the chain once per distinct (entity, qid)
-    // key and joins the results back in three narrow exchanges — the
-    // salted resolved4 flags, ONE unsalted shuffle-hash join that
-    // re-attaches the scrape text at L5 (the html-derived text crosses the
-    // wire exactly once), and the salted per-key payload.
-    val rec = new Linking.JoinRecorder
-    val carryScrape = !cfg.forceSaltedJoins
-    // under the split-scrape probe the text column is not in the cache —
-    // the link-stage projections read the UNCACHED extract plan instead
-    val docWithScrape = if (splitScrape) docOutAll else docOut
-    val entities =
-      if (carryScrape)
-        docWithScrape.select(
-            when(length(col("scrape")) > 0, col("scrape")).as("p_extract"),
-            explode(col("entities")).as("e"))
-          .select(col("e.*"), col("p_extract"))
-      else docOut.select(explode(col("entities")).as("e")).select("e.*")
+  /** `run`: the extract output and the edges (statistics scans them twice)
+    * are persisted whole; the entity and scrape projections stay UNCACHED
+    * (the link chain consumes each exactly once, so a second cache would
+    * only add a BlockManager round-trip — the round-2 scaling profile
+    * showed cache fill/read as the bound). The cache holds the FLAT link
+    * output with the nested shape assembled on top: the in-memory cache
+    * prunes only top-level columns and stores structs as opaque blobs, so
+    * caching the nested shape made every statistics read decompress the
+    * full fat payload (measured 3-4× slower narrow fill at local[32]). */
+  private final class InMemory extends Store {
+    private def keep(df: DataFrame): DataFrame = {
+      cached += df.persist(MEMORY_AND_DISK)
+      df
+    }
+    def extract(docOut: DataFrame): DataFrame = keep(docOut)
+    def stage(name: String, table: String, reused: Boolean,
+        partitionBy: Seq[String])(df: => DataFrame): DataFrame =
+      if (reused) keep(df) else df
+    def nodes(flat: => DataFrame): DataFrame = Linking.nest(keep(flat))
+    def lineage(edges: DataFrame): Seq[DataFrame] = Nil
+  }
+
+  /** `runMaterialized`: every stage is a table written through
+    * [[KgTables.write]], whose by-name body means a stage the manifest marks
+    * done builds no plan and runs no job (the eager connected-components
+    * checkpoints included), so a no-op resume only reads the manifest and
+    * re-opens the tables. Nothing is cached: the extract pass re-runs for
+    * each extract table, and downstream stages scan pruned parquet. */
+  private final class InTables(tables: KgTables, runId: String, fp: String)
+      extends Store {
+    def extract(docOut: DataFrame): DataFrame = docOut
+    def stage(name: String, table: String, reused: Boolean,
+        partitionBy: Seq[String])(df: => DataFrame): DataFrame =
+      tables.write(df, table, runId, name, fp, partitionBy)
+    def nodes(flat: => DataFrame): DataFrame =
+      tables.write(Linking.nest(flat), "kg_nodes", runId, "link", fp)
+    def lineage(edges: DataFrame): Seq[DataFrame] =
+      Seq(tables.partitionLineage(edges, runId, "extract_edges"))
+  }
+
+  /** The stage graph, for both stores (order in the object header). */
+  private def stages(spark: SparkSession, pages: Dataset[PageRow],
+      dicts: Dicts, cfg: KgConfig, runId: String,
+      prepared: Option[Linking.Prepared], store: Store): Result = {
+    // ---- extract: fused map pass (E1-E3, R1-R4, D3, D6) ----
+    // A DATAFRAME, not a typed Dataset: a typed flatMap would deserialize
+    // the whole DocOut row (including the fat scrape column) in every
+    // consumer, while Catalyst's explode prunes each projection to exactly
+    // the columns it reads. Lazy: a resume that skips every extract stage
+    // builds no extract plan.
+    lazy val docOut = store.extract(KgExtract.run(spark, pages, dicts.aliases,
+      dicts.patterns, dicts.wdPartOf, cfg, descByQid = dicts.wdDesc,
+      idf = Some(dicts.idf)).toDF())
+    val entities = store.stage("extract_entities", "kg_entities")(
+      entityRows(docOut, cfg))
+    // a partitioned table reads back with its partition column last; the
+    // select keeps one edge column order in both stores
+    val edges = store.stage("extract_edges", "kg_edges", reused = true,
+      partitionBy = Seq("inferred"))(edgeRows(docOut))
+      .select(EdgeColumns.map(col): _*)
     val scrapes =
-      if (carryScrape) spark.emptyDataFrame
-      else docWithScrape.select(col("url").as("p_url"),
-        when(length(col("scrape")) > 0, col("scrape")).as("p_extract"))
-    val prep = prepared.getOrElse(
-      Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd, dicts.dbp,
-        dicts.synonyms, cfg, rec))
-    // nodes are persisted by default: statistics runs several aggregates
-    // over them and must not re-execute the join chain per aggregate (at
-    // scale this stage is written to a table first — runMaterialized —
-    // which serves the same purpose). The cache holds the FLAT link output
-    // (Linking.linkFlat) with the nested user shape assembled on top: the
-    // in-memory cache prunes only top-level columns and stores structs as
-    // opaque blobs, so caching the nested shape made every statistics read
-    // decompress the full fat payload (measured 3-4× slower narrow fill at
-    // local[32]). `cacheNodes=false` is for consumers that only
-    // materialize `metrics`: statistics then reads the link plan
-    // COLUMN-PRUNED through the broadcast joins (the fat extract/multilang
-    // payload is never computed or stored), with its own narrow persist
-    // deduplicating the four passes.
-    val flatPlan = Linking.linkFlat(spark, entities, prep, scrapes, cfg, rec)
-    val nodes = Linking.nest(
-      if (cacheNodes)
-        flatPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else flatPlan)
+      if (carryScrape(cfg)) spark.emptyDataFrame
+      else store.stage("extract_scrapes", "kg_scrapes")(scrapeRows(docOut))
+
+    // ---- link: Wikipedia → Wikidata → DBpedia dictionary joins ----
+    // Lazy and shared with the metrics stage: when the link stage resumes
+    // but the metrics stage runs, the metrics stage builds the (never
+    // executed) link plan itself, so its link_plan decisions still reach
+    // the metrics.
+    val rec = new Linking.JoinRecorder
+    lazy val flat = Linking.linkFlat(spark, entities,
+      prepared.getOrElse(Linking.prepare(spark, dicts.wiki, dicts.redirects,
+        dicts.wd, dicts.dbp, dicts.synonyms, cfg, rec)),
+      scrapes, cfg, rec)
+    val nodes = store.nodes(flat)
 
     // ---- canonicalize: connected components over alias/redirect edges ----
-    val aliasEdges = spark.createDataset(dicts.aliases.map(a => (a.alias, a.canonical))).toDF("src", "dst")
-    val redirectEdges = dicts.redirects.select(col("from_title").as("src"), col("to_title").as("dst"))
-    val components = ConnectedComponents.run(spark, aliasEdges.union(redirectEdges))
+    val components = store.stage("canonicalize", "kg_components")(
+      ConnectedComponents.run(spark, canonicalInput(spark, dicts)))
 
-    // ---- statistics + lineage metrics ----
+    // ---- statistics + metrics ----
     // dictJoin path decisions (broadcast vs salted, with the size evidence)
     // are recorded at plan-construction time — surfaced as metric rows so
     // plan drift at scale is observable in the run output, not just in
     // executor logs
-    // cacheNarrow=false (round 6): the narrow stats persist predates the
-    // flat nodes cache and became pure double-caching — only ONE pass
-    // (counters) reads the fat array columns, so re-encoding them into a
-    // second cache costs more than the single pruned flat-cache read it
-    // saves. Interleaved A/B at 1.08M pages/local[32] (default → off →
-    // default, one window): stats 6.6/5.9 → 5.0/4.1 → 6.5/6.0 s; whole
-    // job 33.3/29.2 → 30.1/26.8 → 32.4/29.1 s. SPARK_GRAFT_STATS_NARROW=1
-    // re-enables the persist for future re-probes.
-    val (stats, statsCaches) = Statistics.computeTracked(spark, nodes, edges,
-      runId,
-      cacheNarrow = sys.env.get("SPARK_GRAFT_STATS_NARROW").contains("1"))
-    val metrics = stats.unionByName(joinDecisionRows(spark, runId, rec))
-
-    val cached: Seq[DataFrame] =
-      Seq(docOut, edges) ++ (if (cacheNodes) Seq(flatPlan) else Nil) ++
-        statsCaches
+    val metrics = store.stage("metrics", "kg_metrics") {
+      flat // records the link decisions if the link stage resumed
+      val (stats, statsCaches) =
+        Statistics.computeTracked(spark, nodes, edges, runId)
+      store.cached ++= statsCaches
+      (stats +: store.lineage(edges) :+ joinDecisionRows(spark, runId, rec))
+        .reduce(_.unionByName(_))
+    }
     Result(nodes, edges, components, metrics,
-      release = () => cached.foreach(_.unpersist()))
+      release = () => store.cached.foreach(_.unpersist()))
+  }
+
+  /** Scrape placement regime, read by the projections and the resume
+    * fingerprint. Broadcast dictionaries (the small-dictionary gate
+    * outcome): each entity row CARRIES its page's L5 text `p_extract`, so
+    * Linking.linkFlat runs its per-row chain — zero L5 join, zero shuffle;
+    * a table-backed run writes no scrape table (one fewer corpus-width
+    * write and extract pass), duplicating the text per entity (~3x)
+    * instead. Salted (forceSaltedJoins — the at-scale shape where every
+    * dictionary exceeds the broadcast budget): entity rows stay NARROW, so
+    * linkFlat runs the chain once per distinct (entity, qid) key and joins
+    * the results back in three narrow exchanges — the salted resolved4
+    * flags, ONE unsalted shuffle-hash join that re-attaches the scrape text
+    * at L5 (the html-derived text crosses the wire exactly once), and the
+    * salted per-key payload. */
+  private[kg] def carryScrape(cfg: KgConfig): Boolean = !cfg.forceSaltedJoins
+
+  private def pageText: Column =
+    when(length(col("scrape")) > 0, col("scrape")).as("p_extract")
+
+  /** Entity rows off the extract output, with `p_extract` when the regime
+    * carries the scrape text. */
+  private[kg] def entityRows(docOut: DataFrame, cfg: KgConfig): DataFrame =
+    if (carryScrape(cfg))
+      docOut.select(pageText, explode(col("entities")).as("e"))
+        .select(col("e.*"), col("p_extract"))
+    else docOut.select(explode(col("entities")).as("e")).select("e.*")
+
+  /** The L5 text per page, (p_url, p_extract): the link input beside narrow
+    * entity rows. */
+  private[kg] def scrapeRows(docOut: DataFrame): DataFrame =
+    docOut.select(col("url").as("p_url"), pageText)
+
+  private def edgeRows(docOut: DataFrame): DataFrame =
+    docOut.select(explode(col("triples")).as("t")).select("t.*")
+
+  private val EdgeColumns: Seq[String] =
+    Encoders.product[TripleRow].schema.fieldNames.toSeq
+
+  /** Connected-components input: alias → canonical and redirect edges. */
+  private def canonicalInput(spark: SparkSession, dicts: Dicts): DataFrame = {
+    import spark.implicits._
+    dicts.aliases.map(a => (a.alias, a.canonical)).toDF("src", "dst")
+      .union(dicts.redirects.select(col("from_title").as("src"),
+        col("to_title").as("dst")))
   }
 
   private def joinDecisionRows(spark: SparkSession, runId: String,
@@ -217,82 +288,8 @@ object Pipeline {
     val src = if (files.nonEmpty) files.sorted.mkString("\n")
               else s"plan:${pages.queryExecution.logical.semanticHash()}"
     val md = java.security.MessageDigest.getInstance("SHA-1")
-    val regime = if (cfg.forceSaltedJoins) "salted" else "carry"
+    val regime = if (carryScrape(cfg)) "carry" else "salted"
     "in=" + md.digest(src.getBytes("UTF-8")).take(8)
       .map(b => f"${b & 0xff}%02x").mkString + s"+$regime"
-  }
-
-  /** Materializing run with snapshot/resume (SURVEY §7.4): each stage writes
-    * parquet + manifest; a rerun with the same runId skips completed stages. */
-  def runMaterialized(
-      spark: SparkSession,
-      pages: Dataset[PageRow],
-      dicts: Dicts,
-      tables: KgTables,
-      cfg: KgConfig = KgConfig.default,
-      runId: String = "run1"): Result = {
-    import spark.implicits._
-    val fp = fingerprintOf(pages, cfg)
-
-    lazy val docOut = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-      dicts.wdPartOf, cfg, useHtml = true, descByQid = dicts.wdDesc,
-      idf = Some(dicts.idf))
-    // Scrape placement mirrors Pipeline.run's regime split (see the link
-    // stage comment there). Broadcast regime: each entity row CARRIES its
-    // document's L5 text in kg_entities — no kg_scrapes table (one fewer
-    // full-corpus-width stage write AND one fewer extract pass over the
-    // html), no L5 join downstream; the text is duplicated per entity
-    // (~3x) in exchange. Salted regime: kg_entities stays NARROW (the
-    // link stage runs keyed and its mention rows cross the three
-    // join-back exchanges) and the text is written ONCE to kg_scrapes,
-    // re-attached by the single unsalted L5 join.
-    //
-    // Every stage body is passed BY NAME to tables.write: a stage the
-    // manifest marks done builds no plan and runs no job (the eager
-    // connected-components checkpoints included), so a no-op resume only
-    // reads the manifest and re-opens the stage tables. The link plan is
-    // a lazy val shared by the link and metrics stages: when the link
-    // stage resumes but the metrics stage runs, the metrics stage builds
-    // the (never executed) link plan itself, so its link_plan decisions
-    // still reach kg_metrics.
-    val carryScrape = !cfg.forceSaltedJoins
-    val entities = tables.write(
-      if (carryScrape)
-        docOut.toDF().select(
-            when(length(col("scrape")) > 0, col("scrape")).as("p_extract"),
-            explode(col("entities")).as("e"))
-          .select(col("e.*"), col("p_extract"))
-      else docOut.flatMap(_.entities).toDF(),
-      "kg_entities", runId, "extract_entities", fp)
-    val edgesRaw = tables.write(docOut.flatMap(_.triples).toDF(), "kg_edges",
-      runId, "extract_edges", fp, partitionBy = Seq("inferred"))
-    val scrapes =
-      if (carryScrape) spark.emptyDataFrame
-      else tables.write(
-        docOut.toDF().select(col("url").as("p_url"),
-          when(length(col("scrape")) > 0, col("scrape")).as("p_extract")),
-        "kg_scrapes", runId, "extract_scrapes", fp)
-
-    val rec = new Linking.JoinRecorder
-    lazy val linkPlan = Linking.linkAll(spark, entities,
-      Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
-        dicts.dbp, dicts.synonyms, cfg, rec),
-      scrapes, cfg, rec)
-    val nodes = tables.write(linkPlan, "kg_nodes", runId, "link", fp)
-
-    val aliasEdges = spark.createDataset(dicts.aliases.map(a => (a.alias, a.canonical))).toDF("src", "dst")
-    val redirectEdges = dicts.redirects.select(col("from_title").as("src"), col("to_title").as("dst"))
-    val components = tables.write(
-      ConnectedComponents.run(spark, aliasEdges.union(redirectEdges)),
-      "kg_components", runId, "canonicalize", fp)
-
-    val metrics = tables.write({
-      linkPlan // records the link decisions if the link stage resumed
-      Statistics.compute(spark, nodes, edgesRaw, runId, cacheNarrow = false)
-        .unionByName(tables.partitionLineage(edgesRaw, runId, "extract_edges"))
-        .unionByName(joinDecisionRows(spark, runId, rec))
-    }, "kg_metrics", runId, "metrics", fp)
-
-    Result(nodes, edgesRaw, components, metrics)
   }
 }

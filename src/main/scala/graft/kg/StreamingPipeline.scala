@@ -96,7 +96,7 @@ object StreamingPipeline {
     val (stats, caches) = Statistics.computeTracked(spark,
       spark.read.parquet(s"$tablesRoot/kg_nodes").drop("batch_id"),
       spark.read.parquet(s"$tablesRoot/kg_edges").drop("batch_id"),
-      runId, cacheNarrow = false)
+      runId)
     val out = stats.localCheckpoint(true)
     caches.foreach(_.unpersist())
     out

@@ -117,10 +117,11 @@ object LinkOps {
     val scrapes = t(spark, dir, "documents")
       .select(concat(lit("doc://"), col("doc_id")).as("p_url"),
         when(length(col("text")) > 0, col("text")).as("p_extract"))
+    val cfg = KgConfig.default.copy(extraLanguages = Seq("fr"))
     Linking.linkAll(spark, entities,
-      wikiFixture.toDF(), redirectFixture.toDF(), wdFixture.toDF(),
-      dbpFixture.toDF(), scrapes, synonymFixture.toDF(),
-      KgConfig.default.copy(extraLanguages = Seq("fr")))
+      Linking.prepare(spark, wikiFixture.toDF(), redirectFixture.toDF(),
+        wdFixture.toDF(), dbpFixture.toDF(), synonymFixture.toDF(), cfg),
+      scrapes, cfg)
   }
 
   /** The production link chain over documents-derived mentions. */
@@ -172,8 +173,7 @@ object LinkOps {
     val edges = Seq.empty[(String, String, String, String)]
       .toDF("subject", "predicate", "object", "inferred")
     val (stats, caches) =
-      graft.kg.Statistics.computeTracked(spark, nodes, edges, "driver",
-        cacheNarrow = false)
+      graft.kg.Statistics.computeTracked(spark, nodes, edges, "driver")
     // the returned plan is lazy (Verify materializes it later), so the
     // caches created by THIS call cannot be released here — instead each
     // call releases its predecessor's, bounding repeated invocations to

@@ -47,7 +47,8 @@ class L4ComposeSpec extends SparkSpec {
           e, null, "Konzept", e, 0, e.length, "explicit", 1)
       }
     Linking.linkAll(spark, spark.createDataset(entities).toDF(),
-      wiki, redirects, wd, dbp, scrapes, synonyms, KgConfig.default)
+      Linking.prepare(spark, wiki, redirects, wd, dbp, synonyms,
+        KgConfig.default), scrapes, KgConfig.default)
       .select(col("entity"),
         col("sources.wikipedia.status").as("st"),
         col("sources.wikipedia.fallback_source").as("fb"),

@@ -23,8 +23,8 @@ class LinkingStagesSpec extends SparkSpec {
     }
     val scrapes = Seq.empty[(String, String)].toDF("p_url", "p_extract")
     Linking.linkAll(spark, spark.createDataset(entities).toDF(),
-      dicts.wiki, dicts.redirects, dicts.wd, dicts.dbp, scrapes,
-      dicts.synonyms, cfg)
+      Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd, dicts.dbp,
+        dicts.synonyms, cfg), scrapes, cfg)
       .select(col("entity"),
         col("sources.wikipedia.status").as("wp_status"),
         col("sources.wikipedia.fallback_source").as("wp_fb"),

@@ -5,12 +5,15 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Full-row node parity across the execution modes that take different
-  * link shapes: broadcast Pipeline.run (per-row chain), salted
+/** Full-row parity across the execution modes that take different link
+  * shapes or stores: broadcast Pipeline.run (per-row chain), salted
   * Pipeline.run and salted runMaterialized (chain per distinct
-  * (entity, qid) key, joined back). Whole node rows are compared as JSON,
-  * on two corpus seeds whose pages add a null-qid mention and a head
-  * entity present in most pages. */
+  * (entity, qid) key, joined back), and broadcast runMaterialized
+  * (per-row chain over the table-backed entity rows). Whole node and edge
+  * rows and the statistics rows are compared as JSON, on two corpus seeds
+  * whose pages add a null-qid mention and a head entity present in most
+  * pages; the link_plan sites must match between Pipeline.run and
+  * runMaterialized under the same config. */
 class ModeParitySpec extends SparkSpec {
   import spark.implicits._
 
@@ -39,8 +42,17 @@ class ModeParitySpec extends SparkSpec {
     (c.copy(pages = pages, aliases = c.aliases :+ alias), head.name, target.name)
   }
 
-  private def rowsOf(nodes: DataFrame): Seq[String] =
-    nodes.select(to_json(struct(col("*")))).as[String].collect().toSeq.sorted
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.select(to_json(struct(col("*")))).as[String].collect().toSeq.sorted
+
+  private def statsOf(r: Pipeline.Result): Seq[String] =
+    rowsOf(r.metrics.filter(col("stage") === "stats").drop("run_id"))
+
+  /** (metric, key) of the link_plan rows: estBytes legitimately differs
+    * between in-memory and table-backed inputs. */
+  private def planSites(r: Pipeline.Result): Set[(String, String)] =
+    r.metrics.filter(col("stage") === "link_plan")
+      .select("metric", "key").as[(String, String)].collect().toSet
 
   for (seed <- Seq(42L, 5L)) {
     test(s"broadcast, salted and salted-materialized nodes agree row for row (seed $seed)") {
@@ -61,18 +73,34 @@ class ModeParitySpec extends SparkSpec {
 
       val bcast = Pipeline.run(spark, pages, dicts, KgConfig.default)
       val saltedRun = Pipeline.run(spark, pages, dicts, salted)
-      val dir = Files.createTempDirectory("kg_mode_parity").toString
-      val materialized = Pipeline.runMaterialized(spark, pages, dicts,
-        new KgTables(spark, dir), salted)
+      def materialized(cfg: KgConfig): Pipeline.Result = {
+        val dir = Files.createTempDirectory("kg_mode_parity").toString
+        Pipeline.runMaterialized(spark, pages, dicts, new KgTables(spark, dir), cfg)
+      }
+      val saltedMat = materialized(salted)
+      val bcastMat = materialized(KgConfig.default)
 
       val want = rowsOf(bcast.nodes)
       assert(want.size == ents.size)
-      val gotSalted = rowsOf(saltedRun.nodes)
-      val gotMat = rowsOf(materialized.nodes)
-      assert(gotSalted == want,
-        s"salted Pipeline.run differs: ${gotSalted.diff(want).take(2)}")
-      assert(gotMat == want,
-        s"salted runMaterialized differs: ${gotMat.diff(want).take(2)}")
+      val wantEdges = rowsOf(bcast.edges)
+      val wantStats = statsOf(bcast)
+      assert(wantEdges.nonEmpty && wantStats.nonEmpty)
+      for ((mode, r) <- Seq("salted Pipeline.run" -> saltedRun,
+          "salted runMaterialized" -> saltedMat,
+          "broadcast runMaterialized" -> bcastMat)) {
+        val got = rowsOf(r.nodes)
+        assert(got == want, s"$mode nodes differ: ${got.diff(want).take(2)}")
+        val gotEdges = rowsOf(r.edges)
+        assert(gotEdges == wantEdges,
+          s"$mode edges differ: ${gotEdges.diff(wantEdges).take(2)}")
+        val gotStats = statsOf(r)
+        assert(gotStats == wantStats,
+          s"$mode stats differ: ${gotStats.diff(wantStats).take(2)}")
+      }
+      assert(planSites(bcastMat) == planSites(bcast),
+        "broadcast link_plan sites differ between run and runMaterialized")
+      assert(planSites(saltedMat) == planSites(saltedRun),
+        "salted link_plan sites differ between run and runMaterialized")
       bcast.release()
       saltedRun.release()
     }

@@ -42,9 +42,9 @@ class MultilangSpec extends SparkSpec {
         "citation", "citation_start", "citation_end", "inferred", "freq")
     val empty = Seq.empty[(String, String)]
     Linking.linkAll(spark, entities,
-      wiki, Seq.empty[RedirectRow].toDF(), wd,
-      Seq.empty[DbpediaRow].toDF(),
-      empty.toDF("p_url", "p_extract"), Seq.empty[SynonymRow].toDF(), cfg)
+      Linking.prepare(spark, wiki, Seq.empty[RedirectRow].toDF(), wd,
+        Seq.empty[DbpediaRow].toDF(), Seq.empty[SynonymRow].toDF(), cfg),
+      empty.toDF("p_url", "p_extract"), cfg)
   }
 
   private def ml(entity: String) = nodes
