@@ -27,7 +27,7 @@ object CodegenProbe {
       .mapPartitions(it => it.map(i => factory.page(i.toInt)))(
         org.apache.spark.sql.Encoders.product[PageRow])
     val docOut = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-      dicts.wdPartOf, cfg, useHtml = true, dicts.wdDesc,
+      dicts.wdPartOf, cfg, dicts.wdDesc,
       idf = Some(dicts.idf)).toDF()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     docOut.count()

@@ -32,7 +32,7 @@ object GenProbe {
       t("generate+extractText")(pages.map(p =>
         TextExtract.extractText(p.html).length).reduce(_ + _))
       val docOut = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-        dicts.wdPartOf, KgConfig.default, useHtml = true, descByQid = dicts.wdDesc)
+        dicts.wdPartOf, KgConfig.default, descByQid = dicts.wdDesc)
       t("generate+fullExtract(nocache)")(docOut.map(_.entities.size).reduce(_ + _))
     }
     spark.stop()

@@ -213,10 +213,8 @@ object KgExtract {
     }
   }
 
-  /** The fused extract pass. `useHtml` exercises the byte-stable
-    * extract_text path (input_hint invariant); with `useHtml=false` the
-    * pre-extracted `text` column is trusted (the natural seam the reference
-    * also exposes — api.py:239-240 pre-extracted entities). */
+  /** The fused extract pass: the byte-stable extract_text path over each
+    * page's html (input_hint invariant). */
   def run(
       spark: SparkSession,
       pages: Dataset[PageRow],
@@ -224,7 +222,6 @@ object KgExtract {
       patterns: Seq[PatternRow],
       wdPartOf: Map[String, Set[String]],
       cfg: KgConfig,
-      useHtml: Boolean = true,
       descByQid: Map[String, String] = Map.empty,
       counters: Option[Counters] = None,
       idf: Option[Map[String, Double]] = None): Dataset[DocOut] = {
@@ -249,7 +246,7 @@ object KgExtract {
       val c = bcCfg.value
       val qidInfo = bcQidInfo.value
       it.map { p =>
-        val text = if (useHtml) TextExtract.extractText(p.html) else p.text
+        val text = TextExtract.extractText(p.html)
         val ms = rawMentions(text, gaz, partOf, c.tfidfWeight)
         val (ents, trips) = DocProcess.process(p.url, text, p.lang, ms, pats,
           partOf, c, qidInfo)

@@ -5,10 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Scratch plan probe: prints the formatted physical plan of the LINK
   * chain (Linking.linkFlat over Pipeline-shaped entity rows) under the
   * broadcast regime and under forceSaltedJoins — the at-scale join shape
-  * whose exchange count the optimization rounds track (PLANS.md). The
-  * salted plan is the keyed shape: the chain over the distinct
-  * (entity, qid) keys, then the three mention-row exchanges of the
-  * join-back (flags, L5 scrape text, payload).
+  * whose exchange count the optimization rounds track (PLANS.md). Both
+  * plans join the prepared per-key tables back onto the mention rows
+  * (flags, L5 text, payload): broadcast, with no exchange; salted, with
+  * three mention-row exchanges.
   * Usage: runMain graft.kg.LinkPlanProbe [salted|broadcast|both] [outDir]
   * — with `outDir`, each plan is also written to outDir/link_flat_<mode>.txt
   * (plans/keyed_link/ holds the committed copies).
@@ -35,7 +35,7 @@ object LinkPlanProbe {
       // cache reads for them, leaving only the probe-side exchanges
       val prep = Pipeline.prepareLink(spark, dicts, cfg)
       val docOut = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-        dicts.wdPartOf, cfg, useHtml = true, dicts.wdDesc,
+        dicts.wdPartOf, cfg, dicts.wdDesc,
         idf = Some(dicts.idf)).toDF()
       val scrapes =
         if (Pipeline.carryScrape(cfg)) spark.emptyDataFrame

@@ -21,24 +21,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * shuffle-hash path (`saltedJoin`). `cfg.forceSaltedJoins` pins the
   * shuffle path so tests exercise it at small scale (PipelineParitySpec).
   *
-  * Two shapes of the same chain ([[linkFlat]]):
-  *   - per-row: entity rows that CARRY their page's L5 text (`p_extract`,
-  *     the default Pipeline.run and so StreamingPipeline), and narrow
-  *     rows without `cfg.forceSaltedJoins` (the kg_link_chain query), run
-  *     the chain row by row — with broadcast dictionaries it is map-only,
-  *     plus the one L5 scrape join for narrow rows;
-  *   - keyed: narrow entity rows under `cfg.forceSaltedJoins` (salted
-  *     Pipeline.run, salted runMaterialized) run the chain ONCE per
-  *     distinct (entity, qid) key — every linked field except the L5 text
-  *     depends only on that key, and a corpus has orders of magnitude more
-  *     mentions than keys. The results reach the mention rows through
-  *     three narrow exchanges: a salted join of each key's `resolved4`
-  *     flag (`link_plan` site `link_key_flags`), the gated L5 scrape join
-  *     on url (`l5_scrapes`), and a salted join of the per-key payload
-  *     (`link_key_payload`), last, so its output feeds the node write
-  *     directly. Head-entity skew (country/person hubs) is handled at those
-  *     two salted join-backs, which spread a hot key's mention rows over
-  *     `cfg.nSalt` buckets (SURVEY §4.2).
+  * Every linked field except the L5 text depends only on the mention's
+  * (entity, qid) key, as the reference's per-lookup-key response caches
+  * do (utils/cache_utils.py:7-56). So [[prepare]] runs the chain ONCE per
+  * key of the gazetteer, dictionary-side, and [[linkFlat]] has one shape
+  * in every regime: join each key's `resolved4` flag onto the mention
+  * rows (`link_plan` site `link_key_flags`), attach the L5 text (carried
+  * `p_extract`, or the one scrape join on url, `l5_scrapes`), and join
+  * the per-key payload last (`link_key_payload`), so its output feeds the
+  * node write directly. Both join-backs are size-gated like every other
+  * dictionary join: broadcast for persisted key tables, salted at scale,
+  * where the salt spreads a hot key's mention rows (country/person hubs)
+  * over `cfg.nSalt` buckets (SURVEY §4.2).
   */
 object Linking {
 
@@ -156,10 +150,9 @@ object Linking {
     def broadcast: Boolean = path == "broadcast"
   }
 
-  /** `estBytes` of a site whose path does not depend on a size: the keyed
-    * join-backs are salted unconditionally, and estimating their key
-    * table would only re-optimize the whole key chain at plan-build time
-    * to arrive at the no-stats sentinel. */
+  /** `estBytes` of a salted-pinned site whose dictionary has no size
+    * estimate: under `cfg.forceSaltedJoins` the path does not depend on a
+    * size, so the gate skips its row-count probe. */
   val NotEstimated: BigInt = BigInt(-1)
 
   /** Per-run join-decision recorder: created by the caller that will
@@ -194,15 +187,11 @@ object Linking {
   private val NoStatsSentinel = BigInt(Long.MaxValue) / 4
 
   /** Size-gated dictionary join (the production join for every
-    * dictionary-side L-stage): broadcast when the dictionary's
-    * optimizer-estimated size fits under `cfg.dictBroadcastMaxBytes`;
-    * salted shuffle-hash otherwise. At 100 TB the wiki/wd dictionaries
-    * (10^8 rows) always take the salted path; the pattern/redirect tables
-    * stay broadcast. In the keyed link shape ([[linkFlat]]) the probe side
-    * is the distinct (entity, qid) key set, which has no hot key — there
-    * the salting only replicates the dictionary; mention-row skew is
-    * handled at the two join-backs, which call [[saltedJoinOn]] directly
-    * and never come through this gate.
+    * dictionary-side L-stage and for the per-key join-backs of
+    * [[linkFlat]]): broadcast when the dictionary's optimizer-estimated
+    * size fits under `cfg.dictBroadcastMaxBytes`; salted shuffle-hash
+    * otherwise. At 100 TB the wiki/wd dictionaries (10^8 rows) always take
+    * the salted path; the pattern/redirect tables stay broadcast.
     *
     * Gate robustness: when the optimizer has NO size estimate it returns
     * the defaultSizeInBytes sentinel (8 EiB), which would force every
@@ -210,21 +199,33 @@ object Linking {
     * case the gate falls back to a row-count probe (one cheap job over the
     * dictionary — dictionaries are persisted artifacts, orders of
     * magnitude smaller than the probe side) with a conservative 512 B/row
-    * estimate. Every decision is recorded in the caller's per-run
-    * [[JoinRecorder]] and surfaced as a metrics row per join site. */
+    * estimate — except under `cfg.forceSaltedJoins`, whose path is fixed,
+    * so building a salted plan starts no job. Every decision is recorded
+    * in the caller's per-run [[JoinRecorder]] and surfaced as a metrics
+    * row per join site. */
   def dictJoin(
       probe: DataFrame, dict: DataFrame, probeKey: Column, dictKey: Column,
       cfg: KgConfig, saltSource: Column, joinType: String = "left",
       site: String = "anon",
-      rec: JoinRecorder = JoinRecorder.noop): DataFrame = {
+      rec: JoinRecorder = JoinRecorder.noop): DataFrame =
+    dictJoinOn(probe, dict, probeKey === dictKey, cfg, saltSource, joinType,
+      site, rec)
+
+  /** [[dictJoin]] over an arbitrary equi-join condition `on` (e.g. a
+    * multi-column null-safe key). */
+  def dictJoinOn(
+      probe: DataFrame, dict: DataFrame, on: Column,
+      cfg: KgConfig, saltSource: Column, joinType: String,
+      site: String, rec: JoinRecorder): DataFrame = {
     val planEst = dict.queryExecution.optimizedPlan.stats.sizeInBytes
     val (est, fromRows) =
-      if (planEst >= NoStatsSentinel) (BigInt(dict.count()) * 512, true)
-      else (planEst, false)
+      if (planEst < NoStatsSentinel) (planEst, false)
+      else if (cfg.forceSaltedJoins) (NotEstimated, false)
+      else (BigInt(dict.count()) * 512, true)
     val small = !cfg.forceSaltedJoins && est <= cfg.dictBroadcastMaxBytes
     rec.add(JoinDecision(site, if (small) "broadcast" else "salted", est, fromRows))
-    if (small) probe.join(broadcast(dict), probeKey === dictKey, joinType)
-    else saltedJoin(probe, dict, probeKey, dictKey, cfg.nSalt, joinType, Some(saltSource))
+    if (small) probe.join(broadcast(dict), on, joinType)
+    else saltedJoinOn(probe, dict, on, cfg.nSalt, joinType, Some(saltSource))
   }
 
   /** The L3 prefix index (lengths 3..40 per title, ~38 rows/title): the
@@ -291,7 +292,16 @@ object Linking {
   /** All dictionary-derived link tables, built ONCE per deployment
     * (production: static dictionary artifacts; bench: hoisted out of the
     * per-run timed loop and persisted). Nothing here depends on the entity
-    * rows — every member is O(dictionary). */
+    * rows — every member is O(dictionary), the per-key tables O(keys).
+    *
+    * `keys` are the distinct (entity, qid) pairs the mention rows can
+    * carry. The per-key tables run the L1-L4/L7 → Wikidata → DBpedia chain
+    * over them on first use, so a caller that persists [[dictionaries]]
+    * first plans the key chain over the cached tables
+    * ([[Pipeline.prepareLink]]): `keyWiki` is the Wikipedia result, which
+    * decides `resolved4`; `keyPayload` adds Wikidata and DBpedia to it.
+    * `decisions` holds every join site decided here, for each run's
+    * `link_plan` rows. */
   final case class Prepared(
       // `primary` is NOT consumed by the link chain (its payload is
       // pre-composed into l1Dict/osPick) and is NOT persisted —
@@ -303,18 +313,23 @@ object Linking {
       // L7 extra-language multilang tables: per language l, a
       // (mlx_qid_l, mlx_l:struct<label,url,description>) dictionary built
       // from that language's wiki pages via Wikidata sitelinks
-      mlExtra: Seq[(String, DataFrame)] = Nil) {
-    def all: Seq[DataFrame] =
-      Seq(l1Dict, l2Dict, osPick,
-        enrichedWd, dbpSel, lookupPick) ++ mlExtra.map(_._2)
-    def persistAll(): Prepared = {
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      all.foreach(_.persist(MEMORY_AND_DISK))
-      this
-    }
+      mlExtra: Seq[(String, DataFrame)],
+      keys: DataFrame, cfg: KgConfig, rec: JoinRecorder) {
+    def dictionaries: Seq[DataFrame] =
+      Seq(l1Dict, l2Dict, osPick, enrichedWd, dbpSel, lookupPick) ++
+        mlExtra.map(_._2)
+    // distinct keys have no hot key: any salt source spreads them
+    lazy val keyWiki: DataFrame = wikipedia(keys, this, rec, col("entity"))
+    lazy val keyPayload: DataFrame =
+      dbpedia(wikidata(keyWiki, this, rec, col("entity")), this, rec, col("entity"))
+        .drop("resolved4")
+    def keyTables: Seq[DataFrame] = Seq(keyWiki, keyPayload)
+    lazy val decisions: Seq[JoinDecision] = { keyTables; rec.drain() }
+    def all: Seq[DataFrame] = dictionaries ++ keyTables
   }
 
-  /** Build every dictionary-derived table of the link stage. */
+  /** Build every dictionary-derived table of the link stage, and the
+    * per-key tables over `keys` (distinct (entity, qid) pairs). */
   def prepare(
       spark: SparkSession,
       wiki: DataFrame,
@@ -322,8 +337,9 @@ object Linking {
       wd: DataFrame,
       dbp: DataFrame,
       synonyms: DataFrame,
-      cfg: KgConfig,
-      rec: JoinRecorder = JoinRecorder.noop): Prepared = {
+      keys: DataFrame,
+      cfg: KgConfig): Prepared = {
+    val rec = new JoinRecorder
     val minLen = cfg.minExtractLen
     val primary = wiki.filter(col("lang") === cfg.language)
       .select(col("title").as("w_title"), col("url").as("w_url"),
@@ -423,29 +439,25 @@ object Linking {
       osPick = opensearchPick(lookupTerms, primary, minLen),
       enrichedWd = enrichWdDict(wd, cfg, rec),
       dbpSel = dbpSel, lookupPick = lookupPick,
-      mlExtra = mlLangs.map(l => l -> mlTable(l)))
+      mlExtra = mlLangs.map(l => l -> mlTable(l)),
+      keys = keys, cfg = cfg, rec = rec)
   }
 
   /** L1-L4 + L7: Wikipedia linking with the reference's staged fallback
     * chain (wikipedia/service.py:1156-1259): L1 direct (redirect-resolved)
     * → L2 language fallback → L3 opensearch → L4 synonym. Each fallback
     * resolves ONLY the still-unresolved remainder. Every field it adds
-    * depends on the input row's (entity, qid) alone, so `entities` is
-    * either the entity rows or their distinct key set ([[linkFlat]]).
-    * Adds wiki_url, wiki_url_alt, wiki_categories, wiki_links,
-    * wiki_wikidata_id, wiki_multilang, plus the L5 inputs resolved4,
-    * any_extract, wx_extract and wx_fallback that [[wikiL5]] turns into
-    * wiki_extract, wiki_fallback_source and wiki_status. `salt` is the
-    * probe-salt source of the salted dictionary joins.
+    * depends on the key (entity, qid) alone, so it runs over the distinct
+    * `keys` ([[Prepared.keyWiki]]). Adds wiki_url, wiki_url_alt,
+    * wiki_categories, wiki_links, wiki_wikidata_id, wiki_multilang, plus
+    * the L5 inputs resolved4, any_extract, wx_extract and wx_fallback that
+    * [[linkFlat]] turns into wiki_extract, wiki_fallback_source and
+    * wiki_status. `salt` is the probe-salt source of the salted
+    * dictionary joins.
     */
-  def wikipedia(
-      spark: SparkSession,
-      entities: DataFrame,
-      prep: Prepared,
-      cfg: KgConfig,
-      rec: JoinRecorder,
+  private def wikipedia(keys: DataFrame, prep: Prepared, rec: JoinRecorder,
       salt: Column): DataFrame = {
-
+    val cfg = prep.cfg
     val minLen = cfg.minExtractLen
     val secondaryLang = if (cfg.language == "de") "en" else "de"
 
@@ -459,8 +471,8 @@ object Linking {
     // wikipedia/fallbacks.py:82-234). w_lookup (the resolved lookup term,
     // consumed by L3's cleaned retry key) falls back to the entity surface
     // on a miss, as the sequential coalesce did.
-    val s1 = dictJoin(entities, prep.l1Dict,
-        entities("entity"), col("l1_key"), cfg, salt,
+    val s1 = dictJoin(keys, prep.l1Dict,
+        keys("entity"), col("l1_key"), cfg, salt,
         site = "l1_syn_primary", rec = rec)
       .withColumn("w_lookup", coalesce(col("l1_lookup"), col("entity")))
       .drop("l1_key", "l1_lookup")
@@ -554,7 +566,7 @@ object Linking {
       when(ok3, col("os_extract")).when(ok4, col("syn_extract")).otherwise(col("w_extract")))
     val mlSecondary = mlEntry(secondaryLang,
       col("w2_title"), col("w2_url"), col("w2_extract"))
-    val carryCols = entities.columns.map(col).toIndexedSeq
+    val carryCols = keys.columns.map(col).toIndexedSeq
     val s3c = s3.select(carryCols ++ Seq(
       map_concat(mlPrimary, mlSecondary).as("ml_base"),
       when(ok3, col("os_extract")).when(ok4, col("syn_extract"))
@@ -616,57 +628,6 @@ object Linking {
        else map_concat(col("ml_base") +: mlExtras: _*)).as("wiki_multilang")
     withMl.select(s3c.columns.filter(_ != "ml_base").map(col).toIndexedSeq :+
       multilang: _*)
-  }
-
-  /** L5 (fallback 4) and the final wiki_* projection: deterministic
-    * "scrape" = the page text already extracted by the S2 UDF in the
-    * extract pass (carried on DocOut so the 100 TB html column is read
-    * exactly once in the whole pipeline), consulted only by rows that L1-L4
-    * left unresolved.
-    *
-    * Per-row shape (Pipeline.run's default): the entity rows CARRY
-    * `p_extract` from the docOut explode — zero join, zero shuffle.
-    * Otherwise (narrow entity rows, e.g. materialized stage tables) the
-    * text comes from `scrapes` (p_url, p_extract) by ONE UNSALTED
-    * shuffle-hash join — scrapes is a document-scale table, so dictJoin
-    * would always exceed the broadcast budget and replicate the full
-    * page-text table nSalt× into the shuffle; its url keys are
-    * high-cardinality and skewless, so a plain hash join is the right
-    * shape. Already-resolved rows keep a per-row NON-matching key
-    * (NUL-prefixed url) rather than NULL: null keys all hash to one
-    * reducer, and the resolved majority would collapse into a single
-    * straggler partition.
-    *
-    * `payload` runs between the text attach and the projection: the keyed
-    * shape joins the per-key link payload there, so the L5 join moves only
-    * the narrow mention rows and the payload join's output feeds the node
-    * write directly. */
-  private def wikiL5(rows: DataFrame, scrapes: DataFrame, cfg: KgConfig,
-      rec: JoinRecorder)(payload: DataFrame => DataFrame): DataFrame = {
-    val needs5 = !col("resolved4")
-    val withText =
-      if (rows.columns.contains("p_extract")) rows
-      else {
-        rec.add(JoinDecision("l5_scrapes", "shuffle_hash",
-          scrapes.queryExecution.optimizedPlan.stats.sizeInBytes, fromRowCount = false))
-        val l5Key = when(needs5, col("url"))
-          .otherwise(concat(lit("\u0000"), col("url")))
-        rows.join(scrapes.hint("shuffle_hash"), l5Key === col("p_url"), "left")
-          .drop("p_url")
-      }
-    val full = payload(withText)
-    val ok5 = needs5 && col("p_extract").isNotNull &&
-      length(col("p_extract")) >= cfg.minExtractLen
-    val l5Inputs = Set("p_extract", "resolved4", "any_extract", "wx_extract",
-      "wx_fallback")
-    full.select(full.columns.filterNot(l5Inputs).map(col).toIndexedSeq ++ Seq(
-      when(ok5, col("p_extract")).otherwise(col("wx_extract"))
-        .as("wiki_extract"),
-      when(ok5, lit("beautifulsoup")).otherwise(col("wx_fallback"))
-        .as("wiki_fallback_source"),
-      // P14 status derivation: found iff any extract
-      when(col("resolved4") || ok5 || col("any_extract"),
-        lit("found")).otherwise(lit("not_found")).as("wiki_status")): _*)
   }
 
   /** Dictionary-side referenced-label enrichment
@@ -737,8 +698,9 @@ object Linking {
 
   /** L9-L12: Wikidata enrichment — qid from gazetteer/wiki pageprops, then
     * ONE dictionary join against the pre-enriched dict (enrichWdDict). */
-  def wikidata(spark: SparkSession, linked: DataFrame, prep: Prepared,
-      cfg: KgConfig, rec: JoinRecorder, salt: Column): DataFrame = {
+  private def wikidata(linked: DataFrame, prep: Prepared, rec: JoinRecorder,
+      salt: Column): DataFrame = {
+    val cfg = prep.cfg
     val withKey = linked.withColumn("wd_key",
       coalesce(col("qid"), col("wiki_wikidata_id")))
     dictJoin(withKey, prep.enrichedWd, col("wd_key"), col("wd_qid"), cfg, salt,
@@ -755,12 +717,13 @@ object Linking {
     * remainder: a name→resource lookup keyed on the lowercased English
     * label, first candidate by uri order — the deterministic stand-in for
     * the Lookup service's relevance-ranked first hit. */
-  def dbpedia(spark: SparkSession, linked: DataFrame, prep: Prepared,
-      cfg: KgConfig, rec: JoinRecorder, salt: Column): DataFrame = {
+  private def dbpedia(linked: DataFrame, prep: Prepared, rec: JoinRecorder,
+      salt: Column): DataFrame = {
+    val cfg = prep.cfg
     // P10 URI construction as a native expression ([[graft.functions
     // .DbpediaUri]]) — keeps the L13 key projection inside
     // WholeStageCodegen (a ScalaUDF node would break the span).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    linked.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
       "dbpedia_uri", args => graft.functions.DbpediaUri(args.head), "built-in")
     val withUri = linked
       .withColumn("dbp_label_src",
@@ -841,13 +804,22 @@ object Linking {
     * back to the flat column (SimplifyExtractValueOps), so consumers of a
     * few fields scan only those columns.
     *
-    * Narrow entity rows (no `p_extract`) under `cfg.forceSaltedJoins` run
-    * the chain once per distinct (entity, qid) key and are joined back;
-    * all other rows run it per row (see the object header). The two
-    * join-backs call [[saltedJoinOn]] directly, not [[dictJoin]]: the key
-    * table's size estimate overflows to the no-stats sentinel, and
-    * dictJoin's row-count fallback would execute extract plus the key
-    * chain while the plan is being built. */
+    * One shape in every regime (object header): the per-key `resolved4`
+    * flags join, the L5 text, the per-key payload join. Both join-backs go
+    * through [[dictJoinOn]] on the null-safe key, so entities without a
+    * qid still meet their key row; `prep` must hold every key the rows
+    * carry. L5 (fallback 4) is the deterministic "scrape": the page text
+    * the extract pass already produced (so the 100 TB html column is read
+    * once per extract pass), consulted only by rows that L1-L4 left
+    * unresolved. Rows that CARRY it (`p_extract`, Pipeline.run's default)
+    * need no join. Otherwise it comes from `scrapes` (p_url, p_extract) by
+    * ONE UNSALTED shuffle-hash join: scrapes is a document-scale table, so
+    * dictJoin would always exceed the broadcast budget and replicate the
+    * full page-text table nSalt× into the shuffle; its url keys are
+    * high-cardinality and skewless. Already-resolved rows keep a per-row
+    * NON-matching key (NUL-prefixed url) rather than NULL: null keys all
+    * hash to one reducer, and the resolved majority would collapse into a
+    * single straggler partition. */
   def linkFlat(
       spark: SparkSession,
       entities: DataFrame,
@@ -855,45 +827,41 @@ object Linking {
       scrapes: DataFrame, // (p_url, p_extract): L5 text for narrow rows
       cfg: KgConfig,
       rec: JoinRecorder = JoinRecorder.noop): DataFrame = {
-    def wdDbp(w: DataFrame, salt: Column): DataFrame =
-      dbpedia(spark, wikidata(spark, w, prep, cfg, rec, salt), prep, cfg, rec, salt)
-    // keyed only where the dictionaries take the salted path: with
-    // broadcast dictionaries the per-row chain is map-only, and keying it
-    // would add exchanges without saving any
-    val keyed = cfg.forceSaltedJoins && !entities.columns.contains("p_extract")
-    val linked =
-      if (!keyed) {
-        val salt = col("url")
-        val w = wikipedia(spark, entities, prep, cfg, rec, salt)
-        wdDbp(wikiL5(w, scrapes, cfg, rec)(identity), salt)
-      } else {
-        // distinct keys have no hot key: any salt source spreads them
-        val salt = col("entity")
-        val keys = entities.select("entity", "qid").distinct()
-        val w = wikipedia(spark, keys, prep, cfg, rec, salt)
-        // null-safe: entities without a qid still meet their key row
-        val onKey = col("entity") <=> col("k_entity") && col("qid") <=> col("k_qid")
-        def joinBack(rows: DataFrame, perKey: DataFrame, site: String): DataFrame = {
-          rec.add(JoinDecision(site, "salted", NotEstimated, fromRowCount = false))
-          val table = perKey.withColumnsRenamed(
-            Map("entity" -> "k_entity", "qid" -> "k_qid"))
-          saltedJoinOn(rows, table, onKey, cfg.nSalt, "left", Some(col("url")))
-            .drop("k_entity", "k_qid")
-        }
-        // resolved4 is fully decided by the Wikipedia stages, so the flags
-        // branch stops there; only the payload runs Wikidata and DBpedia
-        val flagged = joinBack(entities,
-          w.select("entity", "qid", "resolved4"), "link_key_flags")
-        wikiL5(flagged, scrapes, cfg, rec)(
-          joinBack(_, wdDbp(w, salt).drop("resolved4"), "link_key_payload"))
+    prep.decisions.foreach(rec.add)
+    val onKey = col("entity") <=> col("k_entity") && col("qid") <=> col("k_qid")
+    def joinBack(rows: DataFrame, perKey: DataFrame, site: String): DataFrame =
+      dictJoinOn(rows,
+        perKey.withColumnsRenamed(Map("entity" -> "k_entity", "qid" -> "k_qid")),
+        onKey, cfg, col("url"), "left", site, rec).drop("k_entity", "k_qid")
+    val flagged = joinBack(entities,
+      prep.keyWiki.select("entity", "qid", "resolved4"), "link_key_flags")
+    val needs5 = !col("resolved4")
+    val withText =
+      if (entities.columns.contains("p_extract")) flagged
+      else {
+        rec.add(JoinDecision("l5_scrapes", "shuffle_hash",
+          scrapes.queryExecution.optimizedPlan.stats.sizeInBytes, fromRowCount = false))
+        val l5Key = when(needs5, col("url"))
+          .otherwise(concat(lit("\u0000"), col("url")))
+        flagged.join(scrapes.hint("shuffle_hash"), l5Key === col("p_url"), "left")
+          .drop("p_url")
       }
+    val linked = joinBack(withText, prep.keyPayload, "link_key_payload")
+    val ok5 = needs5 && col("p_extract").isNotNull &&
+      length(col("p_extract")) >= cfg.minExtractLen
     linked.select(
       col("url"), col("lang"), col("entity_id").as("id"), col("entity"),
       col("entity_type"), col("inferred"), col("citation"),
       col("citation_start"), col("citation_end"),
-      col("wiki_url"), col("wiki_url_alt"), col("wiki_extract"),
+      col("wiki_url"), col("wiki_url_alt"),
+      when(ok5, col("p_extract")).otherwise(col("wx_extract")).as("wiki_extract"),
       col("wiki_categories"), col("wiki_links"), col("wiki_wikidata_id"),
-      col("wiki_multilang"), col("wiki_fallback_source"), col("wiki_status"),
+      col("wiki_multilang"),
+      when(ok5, lit("beautifulsoup")).otherwise(col("wx_fallback"))
+        .as("wiki_fallback_source"),
+      // P14 status derivation: found iff any extract
+      when(col("resolved4") || ok5 || col("any_extract"), lit("found"))
+        .otherwise(lit("not_found")).as("wiki_status"),
       col("wd_qid"), col("wd_labels"), col("wd_descriptions"),
       col("wd_aliases"), col("wd_instance_of"), col("wd_subclass_of"),
       col("wd_part_of"), col("wd_has_part"), col("wd_coordinates"),

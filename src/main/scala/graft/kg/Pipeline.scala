@@ -3,6 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import java.util.concurrent.Executors
 import scala.collection.mutable.ArrayBuffer
 
 /** End-to-end KG construction (reference lifecycle
@@ -71,13 +72,34 @@ object Pipeline {
 
   /** Dictionary artifacts for the link stage, built once per deployment
     * (static data) and reusable across runs; persisted AND materialized so
-    * later runs never pay the build. */
+    * later runs never pay the build. The dictionaries are materialized
+    * first, so the per-key chain is planned over their caches and its
+    * joins see their real sizes; they are independent, so their counts
+    * run side by side (each is a short job, bound by scheduling and
+    * broadcast latency, not by cores). The key payload is planned over
+    * the cached Wikipedia result, so it follows that one. */
   def prepareLink(spark: SparkSession, dicts: Dicts,
       cfg: KgConfig = KgConfig.default): Linking.Prepared = {
-    val p = Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
-      dicts.dbp, dicts.synonyms, cfg).persistAll()
-    p.all.foreach(_.count())
+    val p = prepare(spark, dicts, cfg)
+    val pool = Executors.newFixedThreadPool(p.dictionaries.size)
+    try p.dictionaries.map(d => pool.submit(() => d.persist(MEMORY_AND_DISK).count()))
+      .foreach(_.get())
+    finally pool.shutdown()
+    p.keyTables.foreach(_.persist(MEMORY_AND_DISK).count())
     p
+  }
+
+  /** The link artifacts over the gazetteer's keys: the distinct
+    * (canonical, qid) pairs of the alias table are every (entity, qid) an
+    * extract can produce — explicit mentions take them from a gazetteer
+    * candidate, E4 implicit entities from the alias-derived qid info. */
+  private def prepare(spark: SparkSession, dicts: Dicts,
+      cfg: KgConfig): Linking.Prepared = {
+    import spark.implicits._
+    val keys = dicts.aliases.map(a => (a.canonical, a.qid)).distinct
+      .toDF("entity", "qid")
+    Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd, dicts.dbp,
+      dicts.synonyms, keys, cfg)
   }
 
   /** In-memory run (tests, benchmarks, each streaming micro-batch): no
@@ -191,9 +213,7 @@ object Pipeline {
     // the metrics.
     val rec = new Linking.JoinRecorder
     lazy val flat = Linking.linkFlat(spark, entities,
-      prepared.getOrElse(Linking.prepare(spark, dicts.wiki, dicts.redirects,
-        dicts.wd, dicts.dbp, dicts.synonyms, cfg, rec)),
-      scrapes, cfg, rec)
+      prepared.getOrElse(prepare(spark, dicts, cfg)), scrapes, cfg, rec)
     val nodes = store.nodes(flat)
 
     // ---- canonicalize: connected components over alias/redirect edges ----
@@ -220,16 +240,15 @@ object Pipeline {
   /** Scrape placement regime, read by the projections and the resume
     * fingerprint. Broadcast dictionaries (the small-dictionary gate
     * outcome): each entity row CARRIES its page's L5 text `p_extract`, so
-    * Linking.linkFlat runs its per-row chain — zero L5 join, zero shuffle;
-    * a table-backed run writes no scrape table (one fewer corpus-width
-    * write and extract pass), duplicating the text per entity (~3x)
-    * instead. Salted (forceSaltedJoins — the at-scale shape where every
-    * dictionary exceeds the broadcast budget): entity rows stay NARROW, so
-    * linkFlat runs the chain once per distinct (entity, qid) key and joins
-    * the results back in three narrow exchanges — the salted resolved4
-    * flags, ONE unsalted shuffle-hash join that re-attaches the scrape text
-    * at L5 (the html-derived text crosses the wire exactly once), and the
-    * salted per-key payload. */
+    * Linking.linkFlat needs no L5 join and, with broadcast key tables, no
+    * shuffle; a table-backed run writes no scrape table (one fewer
+    * corpus-width write and extract pass), duplicating the text per entity
+    * (~3x) instead. Salted (forceSaltedJoins — the at-scale shape where
+    * every dictionary exceeds the broadcast budget): entity rows stay
+    * NARROW, so each of linkFlat's three mention-row exchanges (the salted
+    * resolved4 flags, ONE unsalted shuffle-hash join that re-attaches the
+    * scrape text at L5, the salted per-key payload) moves narrow rows, and
+    * the html-derived text crosses the wire exactly once. */
   private[kg] def carryScrape(cfg: KgConfig): Boolean = !cfg.forceSaltedJoins
 
   private def pageText: Column =

@@ -120,7 +120,8 @@ object LinkOps {
     val cfg = KgConfig.default.copy(extraLanguages = Seq("fr"))
     Linking.linkAll(spark, entities,
       Linking.prepare(spark, wikiFixture.toDF(), redirectFixture.toDF(),
-        wdFixture.toDF(), dbpFixture.toDF(), synonymFixture.toDF(), cfg),
+        wdFixture.toDF(), dbpFixture.toDF(), synonymFixture.toDF(),
+        entities.select("entity", "qid").distinct(), cfg),
       scrapes, cfg)
   }
 

@@ -61,7 +61,7 @@ class StreamingSpec extends SparkSpec {
       .parquet(stageDir.resolve("p").toString)
       .as[PageRow]
     val triples = KgExtract.run(spark, streamed, dicts.aliases, dicts.patterns,
-        dicts.wdPartOf, KgConfig.default, useHtml = true, descByQid = dicts.wdDesc)
+        dicts.wdPartOf, KgConfig.default, descByQid = dicts.wdDesc)
       .flatMap(_.triples)
     val q = triples.writeStream
       .outputMode("append")
@@ -75,7 +75,7 @@ class StreamingSpec extends SparkSpec {
       .as[(String, String, String, String)].collect().toSet
     val want = KgExtract.run(spark, spark.createDataset(corpus.pages),
         dicts.aliases, dicts.patterns, dicts.wdPartOf, KgConfig.default,
-        useHtml = true, descByQid = dicts.wdDesc)
+        descByQid = dicts.wdDesc)
       .flatMap(_.triples)
       .select($"url", $"subject", $"predicate", $"object")
       .as[(String, String, String, String)].collect().toSet

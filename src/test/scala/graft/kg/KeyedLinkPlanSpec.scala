@@ -4,12 +4,16 @@ import graft.SparkSpec
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.functions._
 
-/** The keyed (salted) link shape must stay lazy: building its plan over
-  * stats-less inputs runs no Spark job — the two join-backs bypass
-  * dictJoin, whose row-count fallback would execute the key chain while
-  * the plan is built. */
-class KeyedLinkPlanSpec extends SparkSpec {
+/** The keyed link shape in both regimes: salted, building its plan over
+  * stats-less inputs runs no Spark job (dictJoin skips its row-count
+  * fallback when the path is pinned); broadcast, the materialized key
+  * tables join back onto rows that carry their L5 text without any
+  * shuffle. */
+class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   /** RDD-backed copy: LogicalRDD carries no size statistics, so the
@@ -28,12 +32,20 @@ class KeyedLinkPlanSpec extends SparkSpec {
   }
 
   test("building the salted keyed link plan starts no Spark job") {
-    val corpus = SyntheticCorpus.generate(nPages = 20, seed = 7L)
+    val generated = SyntheticCorpus.generate(nPages = 20, seed = 7L)
+    val e = generated.entities
+    // a gazetteer alias without a qid, so the prepared tables hold the
+    // (e(7).name, null) key of the third row
+    val corpus = generated.copy(aliases = generated.aliases :+
+      AliasRow("Nullbegriff", e(7).name, null, e(7).typ, 1.0, "de"))
     val dicts = Pipeline.dictsFromCorpus(spark, corpus)
     val cfg = KgConfig.default.copy(forceSaltedJoins = true, nSalt = 4)
-    // the dictionaries are prepared (and materialized) before counting
-    val prep = Pipeline.prepareLink(spark, dicts, cfg)
-    val e = corpus.entities
+    // not materialized, as in runMaterialized: the key chain is planned
+    // inside linkFlat, and its stats-less key tables reach the join-backs
+    val keys = statsLess(corpus.aliases.map(a => (a.canonical, a.qid)).distinct
+      .toDF("entity", "qid"))
+    val prep = Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
+      dicts.dbp, dicts.synonyms, keys, cfg)
     val rows = Seq(
       EntityRow("u1", "de", "i1", e(0).name, e(0).qid, e(0).typ, e(0).name, 0, 1, "explicit", 1),
       EntityRow("u2", "de", "i2", e(0).name, e(0).qid, e(0).typ, e(0).name, 0, 1, "explicit", 1),
@@ -75,24 +87,31 @@ class KeyedLinkPlanSpec extends SparkSpec {
     assert(flat.count() == rows.size)
     assert(flat.filter($"entity" === e(0).name && $"wiki_status" === "found")
       .count() == 2)
+    assert(flat.filter($"wd_status".isNull || $"dbp_status".isNull).count() == 0)
   }
 
-  test("narrow rows under broadcast dictionaries keep the per-row chain") {
+  test("broadcast key tables join back onto p_extract rows without a shuffle") {
     val corpus = SyntheticCorpus.generate(nPages = 20, seed = 7L)
     val dicts = Pipeline.dictsFromCorpus(spark, corpus)
     val prep = Pipeline.prepareLink(spark, dicts, KgConfig.default)
     val e = corpus.entities
     val entities = Seq(
-      EntityRow("u1", "de", "i1", e(0).name, e(0).qid, e(0).typ, e(0).name, 0, 1, "explicit", 1))
-      .toDF()
-    val scrapes = Seq(("u1", "a" * 150)).toDF("p_url", "p_extract")
+      EntityRow("u1", "de", "i1", e(0).name, e(0).qid, e(0).typ, e(0).name, 0, 1, "explicit", 1),
+      EntityRow("u2", "de", "i2", e(1).name, e(1).qid, e(1).typ, e(1).name, 0, 1, "explicit", 1))
+      .toDF().withColumn("p_extract", lit("a" * 150))
     val rec = new Linking.JoinRecorder
-    val flat = Linking.linkFlat(spark, entities, prep, scrapes, KgConfig.default, rec)
-    val sites = rec.drain().map(_.site)
-    // keying would only add exchanges to a map-only chain: no join-back
-    // sites, just the one L5 scrape join
-    assert(!sites.exists(_.startsWith("link_key_")), sites)
-    assert(sites.count(_ == "l5_scrapes") == 1, sites)
-    assert(flat.count() == 1)
+    val flat = Linking.linkFlat(spark, entities, prep, spark.emptyDataFrame,
+      KgConfig.default, rec)
+    val shuffles = collect(flat.queryExecution.executedPlan) {
+      case s: ShuffleExchangeLike => s
+    }
+    assert(shuffles.isEmpty, s"the flat plan shuffles: $shuffles")
+    val ds = rec.drain()
+    for (site <- Seq("link_key_flags", "link_key_payload")) {
+      val d = ds.filter(_.site == site)
+      assert(d.size == 1 && d.head.broadcast, s"$site: $d")
+    }
+    assert(!ds.exists(_.site == "l5_scrapes"), ds)
+    assert(flat.count() == 2)
   }
 }

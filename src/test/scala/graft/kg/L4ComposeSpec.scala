@@ -46,9 +46,11 @@ class L4ComposeSpec extends SparkSpec {
         EntityRow("fixture://doc", "de", TextUtils.entityId("fixture://doc", e),
           e, null, "Konzept", e, 0, e.length, "explicit", 1)
       }
-    Linking.linkAll(spark, spark.createDataset(entities).toDF(),
+    val rows = spark.createDataset(entities).toDF()
+    Linking.linkAll(spark, rows,
       Linking.prepare(spark, wiki, redirects, wd, dbp, synonyms,
-        KgConfig.default), scrapes, KgConfig.default)
+        rows.select("entity", "qid").distinct(), KgConfig.default),
+      scrapes, KgConfig.default)
       .select(col("entity"),
         col("sources.wikipedia.status").as("st"),
         col("sources.wikipedia.fallback_source").as("fb"),

@@ -39,9 +39,11 @@ class LinkComposeSpec extends SparkSpec {
       EntityRow("fixture://doc", "de", TextUtils.entityId("fixture://doc", e),
         e, null, "Konzept", e, 0, e.length, "explicit", 1)
     }
-    Linking.linkAll(spark, spark.createDataset(entities).toDF(),
+    val rows = spark.createDataset(entities).toDF()
+    Linking.linkAll(spark, rows,
       Linking.prepare(spark, wiki, redirects, wd, dbp, synonyms,
-        KgConfig.default), scrapes, KgConfig.default)
+        rows.select("entity", "qid").distinct(), KgConfig.default),
+      scrapes, KgConfig.default)
       .select(col("entity"),
         col("sources.wikipedia.status").as("st"),
         col("sources.wikipedia.fallback_source").as("fb"),
@@ -81,7 +83,8 @@ class LinkComposeSpec extends SparkSpec {
       Seq(RedirectRow("Delta", "Alpha", "de"),
         RedirectRow("Missing", "Nowhere", "de")).toDF(),
       Seq.empty[WdEntityRow].toDF(), Seq.empty[DbpediaRow].toDF(),
-      Seq.empty[SynonymRow].toDF(), KgConfig.default)
+      Seq.empty[SynonymRow].toDF(), Seq.empty[(String, String)].toDF("entity", "qid"),
+      KgConfig.default)
     val rows = prep.l1Dict
       .select("l1_key", "l1_lookup", "w_url").as[(String, String, String)]
       .collect().toSet

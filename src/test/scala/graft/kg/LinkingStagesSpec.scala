@@ -22,9 +22,11 @@ class LinkingStagesSpec extends SparkSpec {
         e.name, e.qid, e.typ, e.name, 0, e.name.length, "explicit", 1)
     }
     val scrapes = Seq.empty[(String, String)].toDF("p_url", "p_extract")
-    Linking.linkAll(spark, spark.createDataset(entities).toDF(),
+    val rows = spark.createDataset(entities).toDF()
+    Linking.linkAll(spark, rows,
       Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd, dicts.dbp,
-        dicts.synonyms, cfg), scrapes, cfg)
+        dicts.synonyms, rows.select("entity", "qid").distinct(), cfg),
+      scrapes, cfg)
       .select(col("entity"),
         col("sources.wikipedia.status").as("wp_status"),
         col("sources.wikipedia.fallback_source").as("wp_fb"),

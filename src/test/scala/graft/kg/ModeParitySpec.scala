@@ -5,15 +5,17 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Full-row parity across the execution modes that take different link
-  * shapes or stores: broadcast Pipeline.run (per-row chain), salted
-  * Pipeline.run and salted runMaterialized (chain per distinct
-  * (entity, qid) key, joined back), and broadcast runMaterialized
-  * (per-row chain over the table-backed entity rows). Whole node and edge
+/** Full-row parity across the execution modes that take different join
+  * paths or stores: broadcast and salted Pipeline.run, broadcast and
+  * salted runMaterialized (table-backed entity rows). Whole node and edge
   * rows and the statistics rows are compared as JSON, on two corpus seeds
   * whose pages add a null-qid mention and a head entity present in most
-  * pages; the link_plan sites must match between Pipeline.run and
-  * runMaterialized under the same config. */
+  * pages; the second seed also infers E4 implicit entities. The link_plan
+  * sites must match between Pipeline.run and runMaterialized under the
+  * same config. Every mode must also give every node a status from all
+  * three sources: a mention whose (entity, qid) key the prepared link
+  * tables lack gets nulls there in every mode alike, which the
+  * cross-mode comparison alone cannot see. */
 class ModeParitySpec extends SparkSpec {
   import spark.implicits._
 
@@ -54,37 +56,46 @@ class ModeParitySpec extends SparkSpec {
     r.metrics.filter(col("stage") === "link_plan")
       .select("metric", "key").as[(String, String)].collect().toSet
 
-  for (seed <- Seq(42L, 5L)) {
+  private def unlinked(r: Pipeline.Result): Long =
+    r.nodes.filter(col("sources.wikipedia.status").isNull ||
+      col("sources.wikidata.status").isNull ||
+      col("sources.dbpedia.status").isNull).count()
+
+  for ((seed, infer) <- Seq(42L -> false, 5L -> true)) {
     test(s"broadcast, salted and salted-materialized nodes agree row for row (seed $seed)") {
       val (c, headName, targetName) = corpus(seed)
       val pages = spark.createDataset(c.pages).repartition(4)
       val dicts = Pipeline.dictsFromCorpus(spark, c)
-      val salted = KgConfig.default.copy(forceSaltedJoins = true, nSalt = 4)
+      val base = KgConfig.default.copy(inferEntities = infer)
+      val salted = base.copy(forceSaltedJoins = true, nSalt = 4)
 
-      // the test data really holds the two cases
+      // the test data really holds the cases
       val ents = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-          dicts.wdPartOf, KgConfig.default, descByQid = dicts.wdDesc,
+          dicts.wdPartOf, base, descByQid = dicts.wdDesc,
           idf = Some(dicts.idf))
-        .flatMap(_.entities).select("entity", "qid").as[(String, String)]
-        .collect().toSeq
-      assert(ents.contains((targetName, null)), "no null-qid mention")
+        .flatMap(_.entities).select("entity", "qid", "inferred")
+        .as[(String, String, String)].collect().toSeq
+      assert(ents.exists(e => e._1 == targetName && e._2 == null),
+        "no null-qid mention")
       assert(ents.count(_._1 == headName) > c.pages.size / 2,
         "head entity is not in most pages")
+      assert(!infer || ents.exists(_._3 == "implicit"), "no E4 implicit entity")
 
-      val bcast = Pipeline.run(spark, pages, dicts, KgConfig.default)
+      val bcast = Pipeline.run(spark, pages, dicts, base)
       val saltedRun = Pipeline.run(spark, pages, dicts, salted)
       def materialized(cfg: KgConfig): Pipeline.Result = {
         val dir = Files.createTempDirectory("kg_mode_parity").toString
         Pipeline.runMaterialized(spark, pages, dicts, new KgTables(spark, dir), cfg)
       }
       val saltedMat = materialized(salted)
-      val bcastMat = materialized(KgConfig.default)
+      val bcastMat = materialized(base)
 
       val want = rowsOf(bcast.nodes)
       assert(want.size == ents.size)
       val wantEdges = rowsOf(bcast.edges)
       val wantStats = statsOf(bcast)
       assert(wantEdges.nonEmpty && wantStats.nonEmpty)
+      assert(unlinked(bcast) == 0, "broadcast Pipeline.run left nodes unlinked")
       for ((mode, r) <- Seq("salted Pipeline.run" -> saltedRun,
           "salted runMaterialized" -> saltedMat,
           "broadcast runMaterialized" -> bcastMat)) {
@@ -96,6 +107,7 @@ class ModeParitySpec extends SparkSpec {
         val gotStats = statsOf(r)
         assert(gotStats == wantStats,
           s"$mode stats differ: ${gotStats.diff(wantStats).take(2)}")
+        assert(unlinked(r) == 0, s"$mode left nodes unlinked")
       }
       assert(planSites(bcastMat) == planSites(bcast),
         "broadcast link_plan sites differ between run and runMaterialized")

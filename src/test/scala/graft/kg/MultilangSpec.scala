@@ -43,7 +43,8 @@ class MultilangSpec extends SparkSpec {
     val empty = Seq.empty[(String, String)]
     Linking.linkAll(spark, entities,
       Linking.prepare(spark, wiki, Seq.empty[RedirectRow].toDF(), wd,
-        Seq.empty[DbpediaRow].toDF(), Seq.empty[SynonymRow].toDF(), cfg),
+        Seq.empty[DbpediaRow].toDF(), Seq.empty[SynonymRow].toDF(),
+        entities.select("entity", "qid").distinct(), cfg),
       empty.toDF("p_url", "p_extract"), cfg)
   }
 
@@ -71,7 +72,8 @@ class MultilangSpec extends SparkSpec {
     val prep = Linking.prepare(spark,
       Seq.empty[WikiPageRow].toDF(), Seq.empty[RedirectRow].toDF(),
       Seq.empty[WdEntityRow].toDF(), Seq.empty[DbpediaRow].toDF(),
-      Seq.empty[SynonymRow].toDF(), cfg)
+      Seq.empty[SynonymRow].toDF(), Seq.empty[(String, String)].toDF("entity", "qid"),
+      cfg)
     assert(prep.mlExtra.isEmpty)
   }
 }
