@@ -36,22 +36,41 @@ object Pipeline {
       synonyms: DataFrame,
       wdPartOf: Map[String, Set[String]],
       wdDesc: Map[String, String],
-      idf: Map[String, Double])
+      idf: Map[String, Double]) {
+    /** Connected components of the alias → canonical and redirect graph
+      * (the canonicalize stage). They depend on the dictionaries alone, so
+      * they are built once per Dicts, on first read, and every run over
+      * these dictionaries shares them. */
+    lazy val components: DataFrame = {
+      val spark = redirects.sparkSession
+      import spark.implicits._
+      ConnectedComponents.run(spark,
+        aliases.map(a => (a.alias, a.canonical)).toDF("src", "dst")
+          .union(redirects.select(col("from_title").as("src"),
+            col("to_title").as("dst"))))
+    }
+  }
 
-  /** `release()` unpersists every plan this run cached (docOut, edges,
+  /** `components` is built on first read: an in-memory run that never
+    * reads it runs no connected-components job ([[Dicts.components]]);
+    * runMaterialized writes it as a stage and reads it back from there.
+    * `release()` unpersists every plan this run cached (docOut, edges,
     * flat nodes, statistics caches) — call it once the outputs are
-    * materialized. The ONE block it deliberately excludes is the
-    * localCheckpoint backing `components` (its lineage is truncated, so
-    * dropping it would make the returned DataFrame unreadable; CC's
-    * intermediate checkpoints clean themselves up). Callers that
-    * bulk-clean via a getPersistentRDDs diff (bench reps, the streaming
-    * foreachBatch) additionally reclaim that final block. In
-    * runMaterialized every stage is table-backed and only the statistics
-    * counter cache is released. The default no-op keeps test
-    * constructions unchanged. */
-  final case class Result(nodes: DataFrame, edges: DataFrame,
-      components: DataFrame, metrics: DataFrame,
-      release: () => Unit = () => ())
+    * materialized. It leaves the components alone: they belong to the
+    * dictionaries, not to the run. In runMaterialized every stage is
+    * table-backed and only the statistics counter cache is released. The
+    * default no-op keeps test constructions unchanged. */
+  final class Result(val nodes: DataFrame, val edges: DataFrame,
+      components0: => DataFrame, val metrics: DataFrame,
+      val release: () => Unit) {
+    lazy val components: DataFrame = components0
+  }
+
+  object Result {
+    def apply(nodes: DataFrame, edges: DataFrame, components: => DataFrame,
+        metrics: DataFrame, release: () => Unit = () => ()): Result =
+      new Result(nodes, edges, components, metrics, release)
+  }
 
   def dictsFromCorpus(spark: SparkSession, c: SyntheticCorpus.Corpus): Dicts = {
     import spark.implicits._
@@ -97,9 +116,9 @@ object Pipeline {
       cfg: KgConfig): Linking.Prepared = {
     import spark.implicits._
     val keys = dicts.aliases.map(a => (a.canonical, a.qid)).distinct
-      .toDF("entity", "qid")
     Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd, dicts.dbp,
-      dicts.synonyms, keys, cfg)
+      dicts.synonyms, keys.toDF("entity", "qid"), cfg,
+      keyCount = Some(keys.size.toLong))
   }
 
   /** In-memory run (tests, benchmarks, each streaming micro-batch): no
@@ -111,7 +130,22 @@ object Pipeline {
       cfg: KgConfig = KgConfig.default,
       runId: String = "local",
       prepared: Option[Linking.Prepared] = None): Result =
-    stages(spark, pages, dicts, cfg, runId, prepared, new InMemory)
+    stages(spark, pages, dicts, cfg, runId, prepared, new InMemory,
+      finishStats = true)
+
+  /** One streaming micro-batch: [[run]], except that the metrics hold no
+    * statistics rows. The batch writes the additive
+    * [[Statistics.state]] of its nodes and edges instead, and
+    * [[StreamingPipeline.corpusMetrics]] finishes the merged states. */
+  private[kg] def runSegment(
+      spark: SparkSession,
+      pages: Dataset[PageRow],
+      dicts: Dicts,
+      cfg: KgConfig,
+      runId: String,
+      prepared: Option[Linking.Prepared]): Result =
+    stages(spark, pages, dicts, cfg, runId, prepared, new InMemory,
+      finishStats = false)
 
   /** Materializing run with snapshot/resume (SURVEY §7.4): each stage writes
     * parquet + manifest; a rerun with the same runId skips completed stages. */
@@ -123,7 +157,7 @@ object Pipeline {
       cfg: KgConfig = KgConfig.default,
       runId: String = "run1"): Result =
     stages(spark, pages, dicts, cfg, runId, prepared = None,
-      new InTables(tables, runId, fingerprintOf(pages, cfg)))
+      new InTables(tables, runId, fingerprintOf(pages, cfg)), finishStats = true)
 
   /** Where the stage outputs live: the one thing `run` and
     * `runMaterialized` choose. Stage bodies are passed by name, so a store
@@ -136,6 +170,9 @@ object Pipeline {
     /** One stage output; `reused`: later stages scan it more than once. */
     def stage(name: String, table: String, reused: Boolean = false,
         partitionBy: Seq[String] = Nil)(df: => DataFrame): DataFrame
+    /** A stage no later stage reads, built on first read of the result
+      * unless the store writes it now. */
+    def leaf(name: String, table: String)(df: => DataFrame): () => DataFrame
     /** The link stage: the flat chain output, as nested nodes. */
     def nodes(flat: => DataFrame): DataFrame
     /** Metric rows the store adds beside statistics and link_plan. */
@@ -160,22 +197,28 @@ object Pipeline {
     def stage(name: String, table: String, reused: Boolean,
         partitionBy: Seq[String])(df: => DataFrame): DataFrame =
       if (reused) keep(df) else df
+    def leaf(name: String, table: String)(df: => DataFrame): () => DataFrame =
+      () => df
     def nodes(flat: => DataFrame): DataFrame = Linking.nest(keep(flat))
     def lineage(edges: DataFrame): Seq[DataFrame] = Nil
   }
 
   /** `runMaterialized`: every stage is a table written through
     * [[KgTables.write]], whose by-name body means a stage the manifest marks
-    * done builds no plan and runs no job (the eager connected-components
-    * checkpoints included), so a no-op resume only reads the manifest and
-    * re-opens the tables. Nothing is cached: the extract pass re-runs for
-    * each extract table, and downstream stages scan pruned parquet. */
+    * done builds no plan and runs no job, so a no-op resume only reads the
+    * manifest and re-opens the tables. Nothing is cached: the extract pass
+    * re-runs for each extract table, and downstream stages scan pruned
+    * parquet. */
   private final class InTables(tables: KgTables, runId: String, fp: String)
       extends Store {
     def extract(docOut: DataFrame): DataFrame = docOut
     def stage(name: String, table: String, reused: Boolean,
         partitionBy: Seq[String])(df: => DataFrame): DataFrame =
       tables.write(df, table, runId, name, fp, partitionBy)
+    def leaf(name: String, table: String)(df: => DataFrame): () => DataFrame = {
+      val t = stage(name, table, reused = false, Nil)(df)
+      () => t
+    }
     def nodes(flat: => DataFrame): DataFrame =
       tables.write(Linking.nest(flat), "kg_nodes", runId, "link", fp)
     def lineage(edges: DataFrame): Seq[DataFrame] =
@@ -185,7 +228,8 @@ object Pipeline {
   /** The stage graph, for both stores (order in the object header). */
   private def stages(spark: SparkSession, pages: Dataset[PageRow],
       dicts: Dicts, cfg: KgConfig, runId: String,
-      prepared: Option[Linking.Prepared], store: Store): Result = {
+      prepared: Option[Linking.Prepared], store: Store,
+      finishStats: Boolean): Result = {
     // ---- extract: fused map pass (E1-E3, R1-R4, D3, D6) ----
     // A DATAFRAME, not a typed Dataset: a typed flatMap would deserialize
     // the whole DocOut row (including the fat scrape column) in every
@@ -217,8 +261,7 @@ object Pipeline {
     val nodes = store.nodes(flat)
 
     // ---- canonicalize: connected components over alias/redirect edges ----
-    val components = store.stage("canonicalize", "kg_components")(
-      ConnectedComponents.run(spark, canonicalInput(spark, dicts)))
+    val components = store.leaf("canonicalize", "kg_components")(dicts.components)
 
     // ---- statistics + metrics ----
     // dictJoin path decisions (broadcast vs salted, with the size evidence)
@@ -227,13 +270,18 @@ object Pipeline {
     // executor logs
     val metrics = store.stage("metrics", "kg_metrics") {
       flat // records the link decisions if the link stage resumed
-      val (stats, statsCaches) =
-        Statistics.computeTracked(spark, nodes, edges, runId)
-      store.cached ++= statsCaches
-      (stats +: store.lineage(edges) :+ joinDecisionRows(spark, runId, rec))
+      val stats =
+        if (!finishStats) Nil
+        else {
+          val (rows, caches) =
+            Statistics.finish(Statistics.state(nodes, edges), runId)
+          store.cached ++= caches
+          Seq(rows)
+        }
+      (stats ++ store.lineage(edges) :+ joinDecisionRows(spark, runId, rec))
         .reduce(_.unionByName(_))
     }
-    Result(nodes, edges, components, metrics,
+    Result(nodes, edges, components(), metrics,
       release = () => store.cached.foreach(_.unpersist()))
   }
 
@@ -272,14 +320,6 @@ object Pipeline {
 
   private val EdgeColumns: Seq[String] =
     Encoders.product[TripleRow].schema.fieldNames.toSeq
-
-  /** Connected-components input: alias → canonical and redirect edges. */
-  private def canonicalInput(spark: SparkSession, dicts: Dicts): DataFrame = {
-    import spark.implicits._
-    dicts.aliases.map(a => (a.alias, a.canonical)).toDF("src", "dst")
-      .union(dicts.redirects.select(col("from_title").as("src"),
-        col("to_title").as("dst")))
-  }
 
   private def joinDecisionRows(spark: SparkSession, runId: String,
       rec: Linking.JoinRecorder): DataFrame = {

@@ -10,18 +10,36 @@ import org.apache.spark.sql.functions._
   * (run_id, stage, metric, key, value) so the same sink carries lineage
   * counts (north_rule: per-partition lineage rows + metrics).
   *
+  * Two steps, so that statistics over several node/edge sets merge
+  * exactly (GalaxyView, ICDE 2025: a derived view maintained from its
+  * deltas):
+  *   - [[state]] (lazy, unpersisted) is ADDITIVE: the pass-1 sums over
+  *     the nodes, and the phase-1 (metric, key, sub, count) rows of the
+  *     fused counter pass, with `sub` the neighbor for entity_connections
+  *     (null elsewhere). The union of two states is the state of the union
+  *     of their inputs, and keeping `sub` keeps the distinct-neighbor
+  *     count exact across the parts.
+  *   - [[finish]] re-groups a (merged) state by (metric, key, sub), then
+  *     collapses `sub` (phase 2), ranks, cuts the top-10s and derives the
+  *     percents and the relationship total. Its output rows depend only on
+  *     the merged state, so `finish(state(A) ∪ state(B))` equals
+  *     `compute(A ∪ B)`.
+  * A batch run emits `finish(state)`; a streaming micro-batch writes its
+  * state, and [[StreamingPipeline.corpusMetrics]] finishes the union.
+  *
   * The whole computation is ONE lazy plan built from TWO data passes
   * (no driver collects, no eager jobs):
-  *   1. one scalar aggregate over nodes (totals + linked counts/percents),
+  *   1. one scalar aggregate over nodes (totals + linked counts),
   *   2. ONE fused counter pass: the node-side explode (six counter
   *      families), the edge-side explode (predicates + inference ratios)
   *      and the symmetric entity-connections pairs union into a single
   *      (metric, key, sub) stream aggregated by one two-phase groupBy
-  *      (sub = neighbor for entity_connections, null elsewhere — the
-  *      second phase collapses it into a distinct-neighbor count) and
-  *      ranked by one window; the tiny grouped result is persisted so the
-  *      top-10/percent projection and the relationship total read it
-  *      without recomputing the scans.
+  *      (the second phase collapses sub into a distinct-neighbor count)
+  *      and ranked by one window; the tiny grouped result is persisted so
+  *      the top-10/percent projection and the relationship total read it
+  *      without recomputing the scans. Over an in-memory state the
+  *      re-group adds no exchange: the phase-1 output is already
+  *      partitioned by (metric, key, sub).
   * The round-1 version ran ~9 separate branch scans and round-3 still ran
   * four (the per-subtree driver scheduling + AQE re-planning was the
   * measured thread-invariant ~4-8 s floor that capped 8→32 scaling).
@@ -29,19 +47,48 @@ import org.apache.spark.sql.functions._
   */
 object Statistics {
 
+  /** The pass-1 sums: (metric, key) of the state row, and the column
+    * [[finish]] reads it back into. No phase-1 counter row uses these
+    * metric names. */
+  private val SumRows = Seq(
+    ("total", "entities", "total"),
+    ("linked_count", "wikipedia", "wp"),
+    ("linked_count", "wikidata", "wd"),
+    ("linked_count", "dbpedia", "dbp"),
+    ("entity_inference", "implicit", "ent_impl"))
+
+  // `sub` is the second-phase grouping refinement: the neighbor id for
+  // entity_connections (phase 2 counts DISTINCT subs per key), null for
+  // every counting family (phase 2 passes the phase-1 count through).
+  private def nullSub: Column = lit(null).cast("string").as("sub")
+
+  private def row(metric: Column, key: Column, value: Column): Column =
+    struct(metric.cast("string").as("metric"), key.cast("string").as("key"),
+      value.cast("double").as("value"))
+
+  /** Additive statistics state, (metric, key, sub, value) rows in two
+    * parts: `sums` (pass 1, sub null) and `counts` (phase 1). The parts
+    * stay apart so that finish over an in-memory state runs each pass
+    * once; a filter over their union would re-run the counter pass. */
+  final case class State(sums: DataFrame, counts: DataFrame) {
+    /** Both parts as one table: the rows a streaming batch writes. */
+    def rows: DataFrame = sums.unionByName(counts)
+  }
+
+  object State {
+    /** The state held in `rows`: any union of [[State.rows]] tables. */
+    def of(rows: DataFrame): State = {
+      val isSum = col("metric").isin(SumRows.map(_._1).distinct: _*)
+      State(rows.filter(isSum), rows.filter(!isSum))
+    }
+  }
+
   def compute(spark: SparkSession, nodesFull: DataFrame, edges: DataFrame,
       runId: String): DataFrame =
-    computeTracked(spark, nodesFull, edges, runId)._1
+    finish(state(nodesFull, edges), runId)._1
 
-  /** Like [[compute]], but also returns the plans this call PERSISTED (the
-    * tiny grouped counter table), so the caller can unpersist them once the
-    * metrics are materialized — compute() itself cannot: the returned plan
-    * is lazy and the cache exists precisely to serve its eventual
-    * execution. Callers that invoke compute repeatedly in one session
-    * (bench reps, per-query oracles) must release, or each call leaks its
-    * cache for the session lifetime. */
-  def computeTracked(spark: SparkSession, nodesFull: DataFrame,
-      edges: DataFrame, runId: String): (DataFrame, Seq[DataFrame]) = {
+  /** The additive state of one node/edge set (object header). */
+  def state(nodesFull: DataFrame, edges: DataFrame): State = {
     // Every array is coalesced HERE: pass 2 concat()s them into one explode,
     // and Spark's concat returns NULL if ANY input array is NULL — a single
     // null array (e.g. instance_of on a wd_status=not_found node) would
@@ -81,37 +128,20 @@ object Statistics {
       dbpArr(col("sources.dbpedia.part_of")).as("dbp_partof"),
       dbpArr(col("sources.dbpedia.has_part")).as("dbp_haspart"))
 
-    def row(metric: Column, key: Column, value: Column): Column =
-      struct(metric.cast("string").as("metric"), key.cast("string").as("key"),
-        value.cast("double").as("value"))
-
-    // ---- pass 1: A1 + A3 + A8-entities in ONE aggregate — totals, linked
-    // counts + percents (DBpedia counts only status=="linked",
+    // ---- pass 1: A1 + A3 + A8-entities in ONE aggregate — the entity
+    // total and the linked counts (DBpedia counts only status=="linked",
     // wikipedia/wikidata count found — context_statistics.py:44-48,
-    // :114-152) and the entity_inference count/percent pair
-    // (context_statistics_top10.py:454-480). Percent rounding parity: the
-    // reference's Python round(.,1) is banker's rounding → bround.
-    def pct(c: Column) = when(col("total") === 0, 0.0)
-      .otherwise(bround(lit(100.0) * c / col("total"), 1))
-    val linked = nodes.agg(
+    // :114-152) and the implicit-entity count
+    // (context_statistics_top10.py:454-480); finish derives the rest.
+    val sums = nodes.agg(
         count(lit(1)).cast("double").as("total"),
         sum(when(col("wp_status") === "found", 1.0).otherwise(0.0)).as("wp"),
         sum(when(col("wd_status") === "found", 1.0).otherwise(0.0)).as("wd"),
         sum(when(col("dbp_status") === "linked", 1.0).otherwise(0.0)).as("dbp"),
         sum(when(col("ent_inferred") === "implicit", 1.0).otherwise(0.0)).as("ent_impl"))
-      .withColumn("ent_expl", col("total") - col("ent_impl"))
-      .select(explode(array(
-        row(lit("total"), lit("entities"), col("total")),
-        row(lit("linked_count"), lit("wikipedia"), col("wp")),
-        row(lit("linked_count"), lit("wikidata"), col("wd")),
-        row(lit("linked_count"), lit("dbpedia"), col("dbp")),
-        row(lit("linked_percent"), lit("wikipedia"), pct(col("wp"))),
-        row(lit("linked_percent"), lit("wikidata"), pct(col("wd"))),
-        row(lit("linked_percent"), lit("dbpedia"), pct(col("dbp"))),
-        row(lit("entity_inference"), lit("explicit"), col("ent_expl")),
-        row(lit("entity_inference"), lit("implicit"), col("ent_impl")),
-        row(lit("entity_inference_percent"), lit("explicit"), pct(col("ent_expl"))),
-        row(lit("entity_inference_percent"), lit("implicit"), pct(col("ent_impl"))))).as("m"))
+      .select(explode(array(SumRows.map { case (m, k, c) =>
+        struct(lit(m).as("metric"), lit(k).as("key"), nullSub, col(c).as("value"))
+      }: _*)).as("m"))
       .select("m.*")
 
     // ---- pass 2 (fused counters): all node-side counters, edge-side
@@ -162,10 +192,6 @@ object Statistics {
         val cond = col("pos") < col(s"__b$i")
         Some(acc.fold(when(cond, name))(_.when(cond, name)))
       }.get
-    // `sub` is the second-phase grouping refinement: the neighbor id for
-    // entity_connections (phase 2 counts DISTINCT subs per key), null for
-    // every counting family (phase 2 passes the phase-1 count through).
-    val nullSub = lit(null).cast("string").as("sub")
     val nodeExploded = nodes
       .select(col("*") +:
         bounds.zipWithIndex.map { case (b, i) => b.as(s"__b$i") }: _*)
@@ -194,14 +220,55 @@ object Statistics {
         struct(lit("entity_connections").as("metric"),
           col("object").as("key"), col("subject").as("sub")))).as("mk"))
       .select("mk.*")
-    // Two-phase aggregate: phase 1 dedups (metric, key, sub) — for
-    // entity_connections that IS the distinct-neighbor set; phase 2
-    // collapses sub (count rows for connections, sum counts elsewhere).
+    // Phase 1 of the two-phase aggregate: dedup (metric, key, sub) — for
+    // entity_connections that IS the distinct-neighbor set. Counts of the
+    // same (metric, key, sub) in two states add up, so the rows merge.
+    val counts = nodeExploded.unionByName(edgeExploded)
+      .groupBy("metric", "key", "sub")
+      .agg(count(lit(1)).cast("double").as("value"))
+    State(sums, counts)
+  }
+
+  /** The statistics rows of a (merged) state (object header), plus the
+    * plans this call PERSISTED (the tiny grouped counter table), so the
+    * caller can unpersist them once the metrics are materialized — finish
+    * itself cannot: the returned plan is lazy and the cache exists
+    * precisely to serve its eventual execution. Callers that finish
+    * repeatedly in one session (bench reps, per-query oracles) must
+    * release, or each call leaks its cache for the session lifetime. */
+  def finish(state: State, runId: String): (DataFrame, Seq[DataFrame]) = {
+    // Percent rounding parity: the reference's Python round(.,1) is
+    // banker's rounding → bround.
+    def pct(c: Column) = when(col("total") === 0, 0.0)
+      .otherwise(bround(lit(100.0) * c / col("total"), 1))
+    // a sum over no non-null value stays null, as pass 1 over no nodes
+    // leaves the linked counts
+    def sumOf(metric: String, key: String): Column =
+      sum(when(col("metric") === metric && col("key") === key, col("value")))
+    val sumCols = SumRows.map { case (m, k, c) => sumOf(m, k).as(c) }
+    val linked = state.sums.agg(sumCols.head, sumCols.tail: _*)
+      .withColumn("ent_expl", col("total") - col("ent_impl"))
+      .select(explode(array(
+        row(lit("total"), lit("entities"), col("total")),
+        row(lit("linked_count"), lit("wikipedia"), col("wp")),
+        row(lit("linked_count"), lit("wikidata"), col("wd")),
+        row(lit("linked_count"), lit("dbpedia"), col("dbp")),
+        row(lit("linked_percent"), lit("wikipedia"), pct(col("wp"))),
+        row(lit("linked_percent"), lit("wikidata"), pct(col("wd"))),
+        row(lit("linked_percent"), lit("dbpedia"), pct(col("dbp"))),
+        row(lit("entity_inference"), lit("explicit"), col("ent_expl")),
+        row(lit("entity_inference"), lit("implicit"), col("ent_impl")),
+        row(lit("entity_inference_percent"), lit("explicit"), pct(col("ent_expl"))),
+        row(lit("entity_inference_percent"), lit("implicit"), pct(col("ent_impl"))))).as("m"))
+      .select("m.*")
+
+    // Re-group the merged phase-1 rows, then phase 2 collapses sub (count
+    // rows for connections, sum counts elsewhere).
     // The grouped result is TINY (counter keys, not data rows) and feeds
     // three consumers (rank/percent projection, relationship total), so it
     // is persisted — without it each consumer would re-run the full union.
-    val grouped = nodeExploded.unionByName(edgeExploded)
-      .groupBy("metric", "key", "sub").agg(count(lit(1)).as("c"))
+    val grouped = state.counts
+      .groupBy("metric", "key", "sub").agg(sum("value").as("c"))
       .groupBy("metric", "key")
       .agg(sum("c").as("s"), count(lit(1)).as("d"))
       .select(col("metric"), col("key"),

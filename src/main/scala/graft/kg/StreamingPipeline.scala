@@ -12,8 +12,8 @@ import org.apache.spark.sql.streaming.Trigger
   * Streaming file-source checkpoint = the resume ledger, complementing the
   * batch manifest protocol of [[KgTables]]) and adds the resulting
   * node/edge/metric rows to the output tables. Each micro-batch runs the
-  * unchanged batch stages ([[Pipeline.run]]: extract → link → relate →
-  * stats) via foreachBatch — valid because the edge/node output is a
+  * unchanged batch stages (extract → link → relate, as [[Pipeline.run]])
+  * via foreachBatch — valid because the edge/node output is a
   * per-document function (per-doc dedup, static dictionaries), so
   * streaming accumulation equals the one-shot batch run row-for-row
   * (KgStreamingSpec asserts this).
@@ -27,11 +27,15 @@ import org.apache.spark.sql.streaming.Trigger
   * is byte-equivalent). Readers see `batch_id` as an ordinary partition
   * column via parquet partition discovery.
   *
-  * Metrics caveat: the appended kg_metrics rows are PER-SEGMENT statistics
-  * (per-batch top-10s, totals and percents under run_id=stream-N). Unlike
-  * node/edge rows they are not additive — a top-10 of per-batch top-10s is
-  * not the corpus top-10 — so corpus-level statistics must be recomputed
-  * over the accumulated tables: that is [[corpusMetrics]].
+  * Metrics caveat: a batch's kg_metrics partition holds only that batch's
+  * run rows (its `link_plan` join decisions, under run_id=stream-N), no
+  * statistics. Top-10s and percents are not additive — a top-10 of
+  * per-batch top-10s is not the corpus top-10 — so each batch instead
+  * writes the ADDITIVE statistics state of its nodes and edges
+  * ([[Statistics.state]]: pass-1 sums and phase-1 (metric, key, sub)
+  * counts) to its own `kg_stats_state/batch_id=<id>` partition, and
+  * [[corpusMetrics]] finishes the union of those states into the corpus
+  * statistics without rescanning any node or edge.
   *
   * At scale this is the "new segments arrive daily" entry: the dictionary
   * artifacts are prepared once ([[Pipeline.prepareLink]]) and reused across
@@ -61,7 +65,7 @@ object StreamingPipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         val before = s.sparkContext.getPersistentRDDs.keySet
-        val res = Pipeline.run(s, batch.as[PageRow], dicts, cfg,
+        val res = Pipeline.runSegment(s, batch.as[PageRow], dicts, cfg,
           runId = s"stream-$batchId", prepared = Some(prep))
         // idempotent sink: one partition directory per batch, overwritten
         // on foreachBatch replay (see scaladoc) — append-into-shared-dir
@@ -71,6 +75,7 @@ object StreamingPipeline {
             .parquet(s"$tablesRoot/$table/batch_id=$batchId")
         sink(res.edges, "kg_edges")
         sink(res.nodes, "kg_nodes")
+        sink(Statistics.state(res.nodes, res.edges).rows, "kg_stats_state")
         sink(res.metrics, "kg_metrics")
         // drop only the caches THIS batch created (prepared dictionary
         // tables persist across batches)
@@ -85,17 +90,14 @@ object StreamingPipeline {
     batches.get()
   }
 
-  /** Corpus-level statistics over the ACCUMULATED node/edge tables — the
-    * batch recompute that the per-segment kg_metrics rows cannot replace
-    * (per-batch top-10s/percents are not additive; see class scaladoc).
-    * Node/edge rows ARE additive (per-document functions), so reading the
-    * union of all batch partitions and running the one-shot statistics
-    * pass over it equals a single batch run's metrics. */
+  /** Corpus-level statistics: [[Statistics.finish]] over the union of
+    * every batch's `kg_stats_state` partition. The states are additive, so
+    * this equals a single batch run's statistics rows; it reads no node or
+    * edge row. */
   def corpusMetrics(spark: SparkSession, tablesRoot: String,
       runId: String = "corpus"): DataFrame = {
-    val (stats, caches) = Statistics.computeTracked(spark,
-      spark.read.parquet(s"$tablesRoot/kg_nodes").drop("batch_id"),
-      spark.read.parquet(s"$tablesRoot/kg_edges").drop("batch_id"),
+    val (stats, caches) = Statistics.finish(Statistics.State.of(
+      spark.read.parquet(s"$tablesRoot/kg_stats_state").drop("batch_id")),
       runId)
     val out = stats.localCheckpoint(true)
     caches.foreach(_.unpersist())

@@ -1,6 +1,7 @@
 package graft.kg
 
 import graft.SparkSpec
+import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -12,7 +13,8 @@ import org.apache.spark.sql.functions._
   * stats-less inputs runs no Spark job (dictJoin skips its row-count
   * fallback when the path is pinned); broadcast, the materialized key
   * tables join back onto rows that carry their L5 text without any
-  * shuffle. */
+  * shuffle; and a default-regime run without prepared tables sizes its
+  * unmaterialized key tables by the gazetteer's key count. */
 class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -113,5 +115,28 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     assert(!ds.exists(_.site == "l5_scrapes"), ds)
     assert(flat.count() == 2)
+  }
+
+  test("default-regime runMaterialized broadcasts both join-backs on the key-count bound") {
+    val corpus = SyntheticCorpus.generate(nPages = 20, seed = 7L)
+    val dicts = Pipeline.dictsFromCorpus(spark, corpus)
+    val dir = Files.createTempDirectory("kg_key_bound").toString
+    val res = Pipeline.runMaterialized(spark, spark.createDataset(corpus.pages),
+      dicts, new KgTables(spark, dir), KgConfig.default)
+    val plan = res.metrics.filter($"stage" === "link_plan")
+      .select("metric", "key", "value").as[(String, String, Double)].collect()
+    // the bound: one row per gazetteer key at the key table's default row
+    // size; a row-count probe would record 512 B per row instead
+    val keys = corpus.aliases.map(a => (a.canonical, a.qid)).distinct
+    val prep = Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
+      dicts.dbp, dicts.synonyms, keys.toDF("entity", "qid"), KgConfig.default)
+    val rowBytes = Map(
+      "link_key_flags" -> prep.keyWiki.select("entity", "qid", "resolved4").schema.defaultSize,
+      "link_key_payload" -> prep.keyPayload.schema.defaultSize)
+    for ((site, bytes) <- rowBytes) {
+      val d = plan.filter(_._2 == site).toSeq
+      assert(d.map(_._1) == Seq("dict_join_broadcast"), s"$site: $d")
+      assert(d.head._3 == keys.size.toDouble * bytes, s"$site: $d")
+    }
   }
 }

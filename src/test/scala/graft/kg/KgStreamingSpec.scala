@@ -1,7 +1,7 @@
 package graft.kg
 
 import graft.SparkSpec
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** Incremental (Structured Streaming, Trigger.AvailableNow) KG
   * construction: streaming accumulation over arriving page segments must
@@ -63,6 +63,17 @@ class KgStreamingSpec extends SparkSpec {
     def statRows(df: org.apache.spark.sql.DataFrame) =
       df.filter($"stage" === "stats").select("metric", "key", "value")
         .as[(String, String, Double)].collect().toSet
+    // the batches' kg_metrics partitions carry no statistics rows, and
+    // corpusMetrics needs no node or edge row: it finishes the batches'
+    // kg_stats_state partitions
+    assert(spark.read.parquet(s"$outDir/kg_metrics")
+      .filter($"stage" === "stats").count() == 0)
+    for (t <- Seq("kg_nodes", "kg_edges")) {
+      val files = Files.walk(Paths.get(outDir, t))
+      try files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p))
+      finally files.close()
+    }
     assert(statRows(StreamingPipeline.corpusMetrics(spark, outDir)) ==
       statRows(batch.metrics))
     batch.release()

@@ -1,6 +1,7 @@
 package graft.kg
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 
 /** Statistics (A1-A10) over a hand-built node/edge fixture with known
   * counts — including the null-array regression (a wd_status=not_found
@@ -114,5 +115,66 @@ class StatisticsSpec extends SparkSpec {
     assert(metrics(("entity_connections", "a")) == 2.0)
     assert(metrics(("entity_connections", "c")) == 2.0)
     assert(metrics(("entity_connections", "b")) == 2.0)
+  }
+
+  test("finish over two merged half states equals compute over the whole") {
+    import spark.implicits._
+    // 400 nodes: twelve internal-link keys whose counts tie across the
+    // top-10 cut (L0-L3: 34, L4-L11: 33, so key order keeps L10, L11 and
+    // L4-L7), 49 implicit (12.25% → banker's 12.2), wikipedia found on
+    // 320, dbpedia linked on the even ids; every key occurs in both halves
+    val nodes = spark.range(400).selectExpr("id",
+      """named_struct(
+           'typ', CASE WHEN id % 7 = 0 THEN 'Ort' ELSE 'Person' END,
+           'inferred', CASE WHEN id < 49 THEN 'implicit' ELSE 'explicit' END
+         ) AS details""",
+      """named_struct(
+           'wikipedia', named_struct(
+             'status', CASE WHEN id % 5 = 0 THEN 'not_found' ELSE 'found' END,
+             'fallback_source', CAST(NULL AS STRING),
+             'categories', array('KatA'),
+             'internal_links', array(concat('L', CAST(id % 12 AS STRING)))),
+           'wikidata', named_struct(
+             'status', 'found',
+             'instance_of', array(named_struct('id', 'Q5', 'label', 'Mensch')),
+             'subclass_of', CAST(array() AS ARRAY<STRUCT<id:STRING,label:STRING>>),
+             'part_of', CAST(array() AS ARRAY<STRUCT<id:STRING,label:STRING>>),
+             'has_part', CAST(array() AS ARRAY<STRUCT<id:STRING,label:STRING>>)),
+           'dbpedia', named_struct(
+             'status', CASE WHEN id % 2 = 0 THEN 'linked' ELSE 'not_found' END,
+             'fallback_source', CAST(NULL AS STRING),
+             'types', array('http://dbpedia.org/resource/TypeA'),
+             'categories', CAST(array() AS ARRAY<STRING>),
+             'subjects', CAST(array() AS ARRAY<STRING>),
+             'part_of', CAST(array() AS ARRAY<STRING>),
+             'has_part', CAST(array() AS ARRAY<STRING>))
+         ) AS sources""")
+    def edges(rows: (String, String, String, String)*): DataFrame =
+      rows.toDF("subject", "predicate", "object", "inferred")
+    // the pair (a, b) is related in both halves
+    val edgesA = edges(("a", "kennt", "b", "explicit"),
+      ("a", "kennt", "c", "explicit"), ("b", "mag", "c", "explicit"))
+    val edgesB = edges(("a", "kennt", "b", "explicit"),
+      ("b", "ist teil von", "a", "implicit"), ("d", "kennt", "a", "explicit"))
+    val (nodesA, nodesB) = (nodes.filter($"id" % 3 === 0), nodes.filter($"id" % 3 =!= 0))
+
+    val merged = Statistics.State.of(Statistics.state(nodesA, edgesA).rows
+      .unionByName(Statistics.state(nodesB, edgesB).rows))
+    val (got, caches) = Statistics.finish(merged, "t")
+    val want = Statistics.compute(spark, nodes, edgesA.unionByName(edgesB), "t")
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    assert(rows(got) == rows(want), rows(got).diff(rows(want)))
+    caches.foreach(_.unpersist())
+
+    // the whole-corpus rows the merge has to reproduce
+    val m = want.collect().map(r => (r.getString(2), r.getString(3)) -> r.getDouble(4)).toMap
+    assert(m(("entity_connections", "a")) == 3.0) // b, c, d: b counted once
+    assert(m(("entity_connections", "b")) == 2.0)
+    assert(m.keySet.filter(_._1 == "top10_internal_links").map(_._2) ==
+      Set("L0", "L1", "L2", "L3", "L10", "L11", "L4", "L5", "L6", "L7"))
+    assert(m(("entity_inference_percent", "implicit")) == 12.2)
+    assert(m(("linked_percent", "wikipedia")) == 80.0)
+    assert(m(("relationships_inferred_percent", "implicit")) == 16.7)
+    assert(m(("top10_categories", "KatA")) == 400.0)
   }
 }
