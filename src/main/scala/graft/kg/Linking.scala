@@ -30,10 +30,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * `p_extract`, or the one scrape join on url, `l5_scrapes`), and join
   * the per-key payload last (`link_key_payload`), so its output feeds the
   * node write directly. Both join-backs are size-gated like every other
-  * dictionary join: broadcast for persisted key tables and for key tables
-  * that [[Prepared.keyCount]] bounds small, salted at scale, where the
-  * salt spreads a hot key's mention rows (country/person hubs)
-  * over `cfg.nSalt` buckets (SURVEY §4.2).
+  * dictionary join: broadcast for the persisted key tables of
+  * [[Pipeline.prepareLink]], salted at scale, where the salt spreads a hot
+  * key's mention rows (country/person hubs) over `cfg.nSalt` buckets
+  * (SURVEY §4.2).
   */
 object Linking {
 
@@ -213,16 +213,12 @@ object Linking {
       site, rec)
 
   /** [[dictJoin]] over an arbitrary equi-join condition `on` (e.g. a
-    * multi-column null-safe key). `maxBytes`: an upper bound on the
-    * dictionary's size that the caller knows, which caps the plan's
-    * estimate and stands in for the row-count probe. */
+    * multi-column null-safe key). */
   def dictJoinOn(
       probe: DataFrame, dict: DataFrame, on: Column,
       cfg: KgConfig, saltSource: Column, joinType: String,
-      site: String, rec: JoinRecorder,
-      maxBytes: Option[BigInt] = None): DataFrame = {
-    val planEst = maxBytes.foldLeft(
-      dict.queryExecution.optimizedPlan.stats.sizeInBytes)(_ min _)
+      site: String, rec: JoinRecorder): DataFrame = {
+    val planEst = dict.queryExecution.optimizedPlan.stats.sizeInBytes
     val (est, fromRows) =
       if (planEst < NoStatsSentinel) (planEst, false)
       else if (cfg.forceSaltedJoins) (NotEstimated, false)
@@ -306,9 +302,7 @@ object Linking {
     * ([[Pipeline.prepareLink]]): `keyWiki` is the Wikipedia result, which
     * decides `resolved4`; `keyPayload` adds Wikidata and DBpedia to it.
     * `decisions` holds every join site decided here, for each run's
-    * `link_plan` rows. `keyCount`, when the caller knows it, bounds the
-    * size estimate of each key table at the join-backs: an unmaterialized
-    * key chain otherwise estimates as the product of its joins. */
+    * `link_plan` rows. */
   final case class Prepared(
       // `primary` is NOT consumed by the link chain (its payload is
       // pre-composed into l1Dict/osPick) and is NOT persisted —
@@ -321,8 +315,7 @@ object Linking {
       // (mlx_qid_l, mlx_l:struct<label,url,description>) dictionary built
       // from that language's wiki pages via Wikidata sitelinks
       mlExtra: Seq[(String, DataFrame)],
-      keys: DataFrame, keyCount: Option[Long], cfg: KgConfig,
-      rec: JoinRecorder) {
+      keys: DataFrame, cfg: KgConfig, rec: JoinRecorder) {
     def dictionaries: Seq[DataFrame] =
       Seq(l1Dict, l2Dict, osPick, enrichedWd, dbpSel, lookupPick) ++
         mlExtra.map(_._2)
@@ -337,8 +330,7 @@ object Linking {
   }
 
   /** Build every dictionary-derived table of the link stage, and the
-    * per-key tables over `keys` (distinct (entity, qid) pairs, `keyCount`
-    * of them if known). */
+    * per-key tables over `keys` (distinct (entity, qid) pairs). */
   def prepare(
       spark: SparkSession,
       wiki: DataFrame,
@@ -347,8 +339,7 @@ object Linking {
       dbp: DataFrame,
       synonyms: DataFrame,
       keys: DataFrame,
-      cfg: KgConfig,
-      keyCount: Option[Long] = None): Prepared = {
+      cfg: KgConfig): Prepared = {
     val rec = new JoinRecorder
     val minLen = cfg.minExtractLen
     val primary = wiki.filter(col("lang") === cfg.language)
@@ -450,7 +441,7 @@ object Linking {
       enrichedWd = enrichWdDict(wd, cfg, rec),
       dbpSel = dbpSel, lookupPick = lookupPick,
       mlExtra = mlLangs.map(l => l -> mlTable(l)),
-      keys = keys, keyCount = keyCount, cfg = cfg, rec = rec)
+      keys = keys, cfg = cfg, rec = rec)
   }
 
   /** L1-L4 + L7: Wikipedia linking with the reference's staged fallback
@@ -839,14 +830,10 @@ object Linking {
       rec: JoinRecorder = JoinRecorder.noop): DataFrame = {
     prep.decisions.foreach(rec.add)
     val onKey = col("entity") <=> col("k_entity") && col("qid") <=> col("k_qid")
-    def joinBack(rows: DataFrame, perKey: DataFrame, site: String): DataFrame = {
-      val keyed =
-        perKey.withColumnsRenamed(Map("entity" -> "k_entity", "qid" -> "k_qid"))
-      // one row per key, each estimated at its schema's default size
-      val maxBytes = prep.keyCount.map(BigInt(_) * keyed.schema.defaultSize)
-      dictJoinOn(rows, keyed, onKey, cfg, col("url"), "left", site, rec, maxBytes)
-        .drop("k_entity", "k_qid")
-    }
+    def joinBack(rows: DataFrame, perKey: DataFrame, site: String): DataFrame =
+      dictJoinOn(rows,
+        perKey.withColumnsRenamed(Map("entity" -> "k_entity", "qid" -> "k_qid")),
+        onKey, cfg, col("url"), "left", site, rec).drop("k_entity", "k_qid")
     val flagged = joinBack(entities,
       prep.keyWiki.select("entity", "qid", "resolved4"), "link_key_flags")
     val needs5 = !col("resolved4")

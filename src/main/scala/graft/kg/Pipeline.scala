@@ -3,7 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-import java.util.concurrent.Executors
+import java.util.concurrent.{ConcurrentHashMap, Executors}
 import scala.collection.mutable.ArrayBuffer
 
 /** End-to-end KG construction (reference lifecycle
@@ -25,7 +25,10 @@ object Pipeline {
     * BOUNDED link tables from [[KgExtract.boundedLinkTables]]: part_of
     * restricted to alias-table qids, descriptions to ambiguous surfaces'
     * candidates, idf the distributed-df vocabulary map — driver memory
-    * O(gazetteer + vocabulary), not O(all dictionary entities). */
+    * O(gazetteer + vocabulary), not O(all dictionary entities). Everything
+    * derived from the dictionaries alone (the link artifacts per config,
+    * the connected components) is built once per Dicts, on first use, and
+    * shared by every run over it. */
   final case class Dicts(
       aliases: Seq[AliasRow],
       patterns: Seq[PatternRow],
@@ -37,6 +40,10 @@ object Pipeline {
       wdPartOf: Map[String, Set[String]],
       wdDesc: Map[String, String],
       idf: Map[String, Double]) {
+    /** The link artifacts of [[Pipeline.prepareLink]], one per config,
+      * each built on first use. */
+    private[kg] val links = new ConcurrentHashMap[KgConfig, Linking.Prepared]()
+
     /** Connected components of the alias → canonical and redirect graph
       * (the canonicalize stage). They depend on the dictionaries alone, so
       * they are built once per Dicts, on first read, and every run over
@@ -56,10 +63,10 @@ object Pipeline {
     * runMaterialized writes it as a stage and reads it back from there.
     * `release()` unpersists every plan this run cached (docOut, edges,
     * flat nodes, statistics caches) — call it once the outputs are
-    * materialized. It leaves the components alone: they belong to the
-    * dictionaries, not to the run. In runMaterialized every stage is
-    * table-backed and only the statistics counter cache is released. The
-    * default no-op keeps test constructions unchanged. */
+    * materialized. It leaves the components and the link artifacts alone:
+    * they belong to the dictionaries, not to the run. In runMaterialized
+    * every stage is table-backed and only the statistics counter cache is
+    * released. The default no-op keeps test constructions unchanged. */
   final class Result(val nodes: DataFrame, val edges: DataFrame,
       components0: => DataFrame, val metrics: DataFrame,
       val release: () => Unit) {
@@ -89,37 +96,33 @@ object Pipeline {
       idf = lt.idf)
   }
 
-  /** Dictionary artifacts for the link stage, built once per deployment
-    * (static data) and reusable across runs; persisted AND materialized so
-    * later runs never pay the build. The dictionaries are materialized
+  /** Dictionary artifacts for the link stage, built once per Dicts and
+    * config on first use ([[Dicts.links]]), so every run over these
+    * dictionaries, with or without `prepared`, links over the same
+    * persisted AND materialized tables. The dictionaries are materialized
     * first, so the per-key chain is planned over their caches and its
     * joins see their real sizes; they are independent, so their counts
     * run side by side (each is a short job, bound by scheduling and
     * broadcast latency, not by cores). The key payload is planned over
-    * the cached Wikipedia result, so it follows that one. */
+    * the cached Wikipedia result, so it follows that one. The keys are
+    * the distinct (canonical, qid) pairs of the alias table: every
+    * (entity, qid) an extract can produce — explicit mentions take them
+    * from a gazetteer candidate, E4 implicit entities from the
+    * alias-derived qid info. */
   def prepareLink(spark: SparkSession, dicts: Dicts,
-      cfg: KgConfig = KgConfig.default): Linking.Prepared = {
-    val p = prepare(spark, dicts, cfg)
-    val pool = Executors.newFixedThreadPool(p.dictionaries.size)
-    try p.dictionaries.map(d => pool.submit(() => d.persist(MEMORY_AND_DISK).count()))
-      .foreach(_.get())
-    finally pool.shutdown()
-    p.keyTables.foreach(_.persist(MEMORY_AND_DISK).count())
-    p
-  }
-
-  /** The link artifacts over the gazetteer's keys: the distinct
-    * (canonical, qid) pairs of the alias table are every (entity, qid) an
-    * extract can produce — explicit mentions take them from a gazetteer
-    * candidate, E4 implicit entities from the alias-derived qid info. */
-  private def prepare(spark: SparkSession, dicts: Dicts,
-      cfg: KgConfig): Linking.Prepared = {
-    import spark.implicits._
-    val keys = dicts.aliases.map(a => (a.canonical, a.qid)).distinct
-    Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd, dicts.dbp,
-      dicts.synonyms, keys.toDF("entity", "qid"), cfg,
-      keyCount = Some(keys.size.toLong))
-  }
+      cfg: KgConfig = KgConfig.default): Linking.Prepared =
+    dicts.links.computeIfAbsent(cfg, _ => {
+      import spark.implicits._
+      val keys = dicts.aliases.map(a => (a.canonical, a.qid)).distinct
+      val p = Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
+        dicts.dbp, dicts.synonyms, keys.toDF("entity", "qid"), cfg)
+      val pool = Executors.newFixedThreadPool(p.dictionaries.size)
+      try p.dictionaries.map(d => pool.submit(() => d.persist(MEMORY_AND_DISK).count()))
+        .foreach(_.get())
+      finally pool.shutdown()
+      p.keyTables.foreach(_.persist(MEMORY_AND_DISK).count())
+      p
+    })
 
   /** In-memory run (tests, benchmarks, each streaming micro-batch): no
     * table layer; returns live DataFrames over this run's caches. */
@@ -254,10 +257,10 @@ object Pipeline {
     // Lazy and shared with the metrics stage: when the link stage resumes
     // but the metrics stage runs, the metrics stage builds the (never
     // executed) link plan itself, so its link_plan decisions still reach
-    // the metrics.
+    // the metrics; when both resume, no link artifact is built at all.
     val rec = new Linking.JoinRecorder
     lazy val flat = Linking.linkFlat(spark, entities,
-      prepared.getOrElse(prepare(spark, dicts, cfg)), scrapes, cfg, rec)
+      prepared.getOrElse(prepareLink(spark, dicts, cfg)), scrapes, cfg, rec)
     val nodes = store.nodes(flat)
 
     // ---- canonicalize: connected components over alias/redirect edges ----

@@ -38,8 +38,9 @@ import org.apache.spark.sql.streaming.Trigger
   * statistics without rescanning any node or edge.
   *
   * At scale this is the "new segments arrive daily" entry: the dictionary
-  * artifacts are prepared once ([[Pipeline.prepareLink]]) and reused across
-  * batches; per-batch work is proportional to the new files only.
+  * artifacts are prepared once per dictionary set ([[Pipeline.prepareLink]])
+  * and reused across batches and invocations; per-batch work is
+  * proportional to the new files only.
   */
 object StreamingPipeline {
 
@@ -64,7 +65,6 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        val before = s.sparkContext.getPersistentRDDs.keySet
         val res = Pipeline.runSegment(s, batch.as[PageRow], dicts, cfg,
           runId = s"stream-$batchId", prepared = Some(prep))
         // idempotent sink: one partition directory per batch, overwritten
@@ -77,11 +77,9 @@ object StreamingPipeline {
         sink(res.nodes, "kg_nodes")
         sink(Statistics.state(res.nodes, res.edges).rows, "kg_stats_state")
         sink(res.metrics, "kg_metrics")
-        // drop only the caches THIS batch created (prepared dictionary
-        // tables persist across batches)
-        s.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => before.contains(id) }
-          .values.foreach(_.unpersist(true))
+        // drop the caches THIS batch created, CacheManager entries
+        // included (the prepared link artifacts persist across batches)
+        res.release()
         batches.incrementAndGet()
         ()
       }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * stats-less inputs runs no Spark job (dictJoin skips its row-count
   * fallback when the path is pinned); broadcast, the materialized key
   * tables join back onto rows that carry their L5 text without any
-  * shuffle; and a default-regime run without prepared tables sizes its
-  * unmaterialized key tables by the gazetteer's key count. */
+  * shuffle; and runs without prepared tables link over the artifacts
+  * that Pipeline.prepareLink built once for their Dicts and config. */
 class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -42,8 +42,8 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       AliasRow("Nullbegriff", e(7).name, null, e(7).typ, 1.0, "de"))
     val dicts = Pipeline.dictsFromCorpus(spark, corpus)
     val cfg = KgConfig.default.copy(forceSaltedJoins = true, nSalt = 4)
-    // not materialized, as in runMaterialized: the key chain is planned
-    // inside linkFlat, and its stats-less key tables reach the join-backs
+    // not materialized: the key chain is planned inside linkFlat, and its
+    // stats-less key tables reach the join-backs
     val keys = statsLess(corpus.aliases.map(a => (a.canonical, a.qid)).distinct
       .toDF("entity", "qid"))
     val prep = Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
@@ -117,26 +117,39 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(flat.count() == 2)
   }
 
-  test("default-regime runMaterialized broadcasts both join-backs on the key-count bound") {
+  test("runMaterialized reuses one set of link artifacts per Dicts and config") {
     val corpus = SyntheticCorpus.generate(nPages = 20, seed = 7L)
     val dicts = Pipeline.dictsFromCorpus(spark, corpus)
-    val dir = Files.createTempDirectory("kg_key_bound").toString
-    val res = Pipeline.runMaterialized(spark, spark.createDataset(corpus.pages),
-      dicts, new KgTables(spark, dir), KgConfig.default)
-    val plan = res.metrics.filter($"stage" === "link_plan")
-      .select("metric", "key", "value").as[(String, String, Double)].collect()
-    // the bound: one row per gazetteer key at the key table's default row
-    // size; a row-count probe would record 512 B per row instead
-    val keys = corpus.aliases.map(a => (a.canonical, a.qid)).distinct
-    val prep = Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
-      dicts.dbp, dicts.synonyms, keys.toDF("entity", "qid"), KgConfig.default)
-    val rowBytes = Map(
-      "link_key_flags" -> prep.keyWiki.select("entity", "qid", "resolved4").schema.defaultSize,
-      "link_key_payload" -> prep.keyPayload.schema.defaultSize)
-    for ((site, bytes) <- rowBytes) {
-      val d = plan.filter(_._2 == site).toSeq
-      assert(d.map(_._1) == Seq("dict_join_broadcast"), s"$site: $d")
-      assert(d.head._3 == keys.size.toDouble * bytes, s"$site: $d")
+    val pages = spark.createDataset(corpus.pages)
+    def materialized(runId: String): Pipeline.Result = {
+      val dir = Files.createTempDirectory("kg_link_memo").toString
+      Pipeline.runMaterialized(spark, pages, dicts, new KgTables(spark, dir),
+        KgConfig.default, runId = runId)
     }
+    materialized("m1").release()
+    // the first run built the artifacts into the Dicts
+    val prep = dicts.links.get(KgConfig.default)
+    assert(prep != null, "runMaterialized built no link artifacts into the Dicts")
+    assert(Pipeline.prepareLink(spark, dicts, KgConfig.default) eq prep)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+
+    val second = materialized("m2")
+    second.release()
+    assert(Pipeline.prepareLink(spark, dicts, KgConfig.default) eq prep)
+    val added = spark.sparkContext.getPersistentRDDs.keySet.filterNot(persisted)
+    assert(added.isEmpty, s"the second run persisted RDDs $added")
+
+    val plan = second.metrics.filter($"stage" === "link_plan")
+      .select("metric", "key", "value").as[(String, String, Double)].collect()
+      .toSeq
+    // the persisted key tables carry their real sizes: no row-count probe
+    // (512 B per row) stands in for them
+    val keys = corpus.aliases.map(a => (a.canonical, a.qid)).distinct.size
+    for (site <- Seq("link_key_flags", "link_key_payload")) {
+      val d = plan.filter(_._2 == site)
+      assert(d.map(_._1) == Seq("dict_join_broadcast"), s"$site: $d")
+      assert(d.head._3 != keys * 512.0, s"$site: $d")
+    }
+    assert(!plan.exists(_._1 == "dict_join_salted"), s"salted sites: $plan")
   }
 }

@@ -10,6 +10,18 @@ import java.nio.file.{Files, Paths}
 class KgStreamingSpec extends SparkSpec {
   import spark.implicits._
 
+  /** (CacheManager entries, persistent RDDs) of the session: a batch that
+    * leaves either behind grows them from one batch to the next. The entry
+    * list is private to the CacheManager, so it is read by reflection. */
+  private def caches(): (Int, Int) = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val f = cm.getClass.getDeclaredField("cachedData")
+    f.setAccessible(true)
+    (f.get(cm).asInstanceOf[Seq[_]].size,
+      spark.sparkContext.getPersistentRDDs.size)
+  }
+
   private def edgeSet(df: org.apache.spark.sql.DataFrame) =
     df.select("url", "subject", "predicate", "object", "inferred")
       .as[(String, String, String, String, String)].collect().toSet
@@ -29,6 +41,7 @@ class KgStreamingSpec extends SparkSpec {
     assert(b1 >= 1)
     val afterSeg1 = edgeSet(spark.read.parquet(s"$outDir/kg_edges"))
     assert(afterSeg1.nonEmpty)
+    val cachedAfterSeg1 = caches()
 
     // rerun with nothing new: checkpoint skips all seen files
     StreamingPipeline.runAvailableNow(spark, pagesDir, dicts, outDir, ckpt)
@@ -38,6 +51,10 @@ class KgStreamingSpec extends SparkSpec {
     spark.createDataset(corpus.pages.drop(50)).repartition(2)
       .write.mode("append").parquet(pagesDir)
     StreamingPipeline.runAvailableNow(spark, pagesDir, dicts, outDir, ckpt)
+    // each batch releases what it cached; the link artifacts it reuses
+    // were built once, by the first invocation
+    assert(caches() == cachedAfterSeg1,
+      "a micro-batch left cache entries or persisted RDDs behind")
 
     // streaming accumulation == one-shot batch run over all 80 pages
     val batch = Pipeline.run(spark,

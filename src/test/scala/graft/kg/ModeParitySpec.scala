@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * whose pages add a null-qid mention and a head entity present in most
   * pages; the second seed also infers E4 implicit entities. The link_plan
   * sites must match between Pipeline.run and runMaterialized under the
-  * same config. Every mode must also give every node a status from all
-  * three sources: a mention whose (entity, qid) key the prepared link
-  * tables lack gets nulls there in every mode alike, which the
-  * cross-mode comparison alone cannot see. */
+  * same config, and the broadcast modes must record no salted site.
+  * Every mode must also give every node a status from all three sources:
+  * a mention whose (entity, qid) key the prepared link tables lack gets
+  * nulls there in every mode alike, which the cross-mode comparison alone
+  * cannot see. */
 class ModeParitySpec extends SparkSpec {
   import spark.implicits._
 
@@ -111,6 +112,10 @@ class ModeParitySpec extends SparkSpec {
       }
       assert(planSites(bcastMat) == planSites(bcast),
         "broadcast link_plan sites differ between run and runMaterialized")
+      // both link over the dictionaries' materialized artifacts, whose
+      // real sizes fit the broadcast budget
+      assert(!planSites(bcast).exists(_._1 == "dict_join_salted"),
+        s"broadcast run and runMaterialized took salted sites: ${planSites(bcast)}")
       assert(planSites(saltedMat) == planSites(saltedRun),
         "salted link_plan sites differ between run and runMaterialized")
       bcast.release()

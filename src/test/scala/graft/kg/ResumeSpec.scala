@@ -46,6 +46,25 @@ class ResumeSpec extends SparkSpec {
     assert(edges3 == edges1) // deterministic ids → identical content
   }
 
+  test("a no-op resume builds no link artifacts") {
+    val dir = Files.createTempDirectory("kg_resume_noop").toString
+    val corpus = SyntheticCorpus.generate(nPages = 40, seed = 7L)
+    val pages = spark.createDataset(corpus.pages).repartition(4)
+    Pipeline.runMaterialized(spark, pages, Pipeline.dictsFromCorpus(spark, corpus),
+      new KgTables(spark, dir), runId = "r1").release()
+
+    val fresh = Pipeline.dictsFromCorpus(spark, corpus)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val res = Pipeline.runMaterialized(spark, pages, fresh,
+      new KgTables(spark, dir), runId = "r1")
+    // every stage is done, the metrics stage included, so the link plan
+    // is never built and nothing asks for the link artifacts
+    assert(res.nodes.count() > 0 && res.metrics.count() > 0)
+    assert(fresh.links.isEmpty, "the resume built link artifacts")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "the resume persisted RDDs")
+  }
+
   test("salted-regime materialized run writes kg_scrapes and matches broadcast") {
     val corpus = SyntheticCorpus.generate(nPages = 40, seed = 7L)
     val pages = spark.createDataset(corpus.pages).repartition(4)
