@@ -213,30 +213,33 @@ object KgExtract {
     }
   }
 
+  /** lang -> middle -> pattern: the relation patterns as DocProcess reads them. */
+  def patternIndex(patterns: Seq[PatternRow]): Map[String, Map[String, PatternRow]] =
+    patterns.groupBy(_.lang).map { case (l, ps) => l -> ps.map(p => p.middle -> p).toMap }
+
+  /** qid -> (canonical, type) for the E4 implied-entity stage. */
+  def qidInfo(aliases: Seq[AliasRow]): Map[String, (String, String)] =
+    aliases.groupBy(_.qid).map { case (q, as) =>
+      val a = as.minBy(_.canonical); q -> (a.canonical, a.entity_type)
+    }
+
   /** The fused extract pass: the byte-stable extract_text path over each
-    * page's html (input_hint invariant). */
+    * page's html (input_hint invariant). The gazetteer always takes the
+    * corpus IDF of `dicts`: its bounded descriptions cover only the
+    * ambiguous candidates, so an IDF computed over them would disagree. */
   def run(
       spark: SparkSession,
       pages: Dataset[PageRow],
-      aliases: Seq[AliasRow],
-      patterns: Seq[PatternRow],
-      wdPartOf: Map[String, Set[String]],
+      dicts: Pipeline.Dicts,
       cfg: KgConfig,
-      descByQid: Map[String, String] = Map.empty,
-      counters: Option[Counters] = None,
-      idf: Option[Map[String, Double]] = None): Dataset[DocOut] = {
+      counters: Option[Counters] = None): Dataset[DocOut] = {
     import spark.implicits._
-    val bcGaz: Broadcast[Gazetteer] =
-      spark.sparkContext.broadcast(buildGazetteer(aliases, descByQid, idf))
-    val bcPats = spark.sparkContext.broadcast(
-      patterns.groupBy(_.lang).map { case (l, ps) => l -> ps.map(p => p.middle -> p).toMap })
-    val bcPartOf = spark.sparkContext.broadcast(wdPartOf)
+    val bcGaz: Broadcast[Gazetteer] = spark.sparkContext.broadcast(
+      buildGazetteer(dicts.aliases, dicts.wdDesc, Some(dicts.idf)))
+    val bcPats = spark.sparkContext.broadcast(patternIndex(dicts.patterns))
+    val bcPartOf = spark.sparkContext.broadcast(dicts.wdPartOf)
     val bcCfg = spark.sparkContext.broadcast(cfg)
-    // qid -> (canonical, type) for the E4 implied-entity stage
-    val bcQidInfo = spark.sparkContext.broadcast(
-      aliases.groupBy(_.qid).map { case (q, as) =>
-        val a = as.minBy(_.canonical); q -> (a.canonical, a.entity_type)
-      })
+    val bcQidInfo = spark.sparkContext.broadcast(qidInfo(dicts.aliases))
     val cnt = counters.getOrElse(Counters(spark))
 
     pages.mapPartitions { it =>

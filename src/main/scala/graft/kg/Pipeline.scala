@@ -239,9 +239,7 @@ object Pipeline {
     // consumer, while Catalyst's explode prunes each projection to exactly
     // the columns it reads. Lazy: a resume that skips every extract stage
     // builds no extract plan.
-    lazy val docOut = store.extract(KgExtract.run(spark, pages, dicts.aliases,
-      dicts.patterns, dicts.wdPartOf, cfg, descByQid = dicts.wdDesc,
-      idf = Some(dicts.idf)).toDF())
+    lazy val docOut = store.extract(KgExtract.run(spark, pages, dicts, cfg).toDF())
     val entities = store.stage("extract_entities", "kg_entities")(
       entityRows(docOut, cfg))
     // a partitioned table reads back with its partition column last; the
@@ -300,14 +298,14 @@ object Pipeline {
     * resolved4 flags, ONE unsalted shuffle-hash join that re-attaches the
     * scrape text at L5, the salted per-key payload) moves narrow rows, and
     * the html-derived text crosses the wire exactly once. */
-  private[kg] def carryScrape(cfg: KgConfig): Boolean = !cfg.forceSaltedJoins
+  private[graft] def carryScrape(cfg: KgConfig): Boolean = !cfg.forceSaltedJoins
 
   private def pageText: Column =
     when(length(col("scrape")) > 0, col("scrape")).as("p_extract")
 
   /** Entity rows off the extract output, with `p_extract` when the regime
     * carries the scrape text. */
-  private[kg] def entityRows(docOut: DataFrame, cfg: KgConfig): DataFrame =
+  private[graft] def entityRows(docOut: DataFrame, cfg: KgConfig): DataFrame =
     if (carryScrape(cfg))
       docOut.select(pageText, explode(col("entities")).as("e"))
         .select(col("e.*"), col("p_extract"))
@@ -315,7 +313,7 @@ object Pipeline {
 
   /** The L5 text per page, (p_url, p_extract): the link input beside narrow
     * entity rows. */
-  private[kg] def scrapeRows(docOut: DataFrame): DataFrame =
+  private[graft] def scrapeRows(docOut: DataFrame): DataFrame =
     docOut.select(col("url").as("p_url"), pageText)
 
   private def edgeRows(docOut: DataFrame): DataFrame =

@@ -60,7 +60,7 @@ object MentionOps {
     * reachable forever. */
   private val dictsCache = new java.util.HashMap[SparkSession, Pipeline.Dicts]()
 
-  private def dictsFor(spark: SparkSession): Pipeline.Dicts =
+  private[graft] def dictsFor(spark: SparkSession): Pipeline.Dicts =
     dictsCache.synchronized {
       dictsCache.keySet.removeIf(s => s.sparkContext.isStopped)
       dictsCache.computeIfAbsent(spark,

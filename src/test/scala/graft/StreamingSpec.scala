@@ -60,8 +60,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = spark.readStream.schema(pagesDf.schema)
       .parquet(stageDir.resolve("p").toString)
       .as[PageRow]
-    val triples = KgExtract.run(spark, streamed, dicts.aliases, dicts.patterns,
-        dicts.wdPartOf, KgConfig.default, descByQid = dicts.wdDesc)
+    val triples = KgExtract.run(spark, streamed, dicts, KgConfig.default)
       .flatMap(_.triples)
     val q = triples.writeStream
       .outputMode("append")
@@ -74,8 +73,7 @@ class StreamingSpec extends SparkSpec {
     val got = spark.sql("SELECT url, subject, predicate, object FROM kg_stream_triples")
       .as[(String, String, String, String)].collect().toSet
     val want = KgExtract.run(spark, spark.createDataset(corpus.pages),
-        dicts.aliases, dicts.patterns, dicts.wdPartOf, KgConfig.default,
-        descByQid = dicts.wdDesc)
+        dicts, KgConfig.default)
       .flatMap(_.triples)
       .select($"url", $"subject", $"predicate", $"object")
       .as[(String, String, String, String)].collect().toSet

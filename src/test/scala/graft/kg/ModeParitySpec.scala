@@ -71,9 +71,7 @@ class ModeParitySpec extends SparkSpec {
       val salted = base.copy(forceSaltedJoins = true, nSalt = 4)
 
       // the test data really holds the cases
-      val ents = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-          dicts.wdPartOf, base, descByQid = dicts.wdDesc,
-          idf = Some(dicts.idf))
+      val ents = KgExtract.run(spark, pages, dicts, base)
         .flatMap(_.entities).select("entity", "qid", "inferred")
         .as[(String, String, String)].collect().toSeq
       assert(ents.exists(e => e._1 == targetName && e._2 == null),

@@ -40,9 +40,8 @@ class TrainingSinkSpec extends SparkSpec {
     val pages = spark.createDataset(corpus.pages).repartition(4)
     val dicts = Pipeline.dictsFromCorpus(spark, corpus)
     val cnt = KgExtract.Counters(spark)
-    val out = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-      dicts.wdPartOf, KgConfig.default,
-      descByQid = dicts.wdDesc, counters = Some(cnt))
+    val out = KgExtract.run(spark, pages, dicts, KgConfig.default,
+      counters = Some(cnt))
     val nEnts = out.flatMap(_.entities).count()
     assert(cnt.pages.value == 30)
     assert(cnt.entities.value == nEnts)
