@@ -27,11 +27,15 @@ final case class KgConfig(
     // wiki dictionaries via Wikidata sitelinks (data-bound: only languages
     // with a dictionary can be listed here).
     extraLanguages: Seq[String] = Nil,
-    nSalt: Int = 8,                     // skew salting factor for dictionary joins
-    // dictJoin gate: dictionaries estimated under this take the broadcast
-    // path; larger ones take the salted shuffle-hash path (Linking.dictJoin)
+    nSalt: Int = 8,                     // skew salting factor of the gated joins
+    // Linking.dictJoin gate of the three joins whose probe can hold a hot
+    // key (link_key_flags, link_key_payload, wd_ref_labels): dictionaries
+    // estimated under this are broadcast; larger ones, or ones without an
+    // estimate, take the salted shuffle-hash path
     dictBroadcastMaxBytes: Long = 64L << 20,
-    forceSaltedJoins: Boolean = false   // tests: pin the shuffle path at small scale
+    // tests: pin those three joins to the salted path at small scale (and
+    // keep entity rows narrow, Pipeline.carryScrape)
+    forceSaltedJoins: Boolean = false
 )
 
 object KgConfig {

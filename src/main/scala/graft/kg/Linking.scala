@@ -15,12 +15,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * unions rather than repeated anti-joins, so one pass over the entity set
   * resolves all stages.
   *
-  * Scale design: every dictionary join goes through `dictJoin`, which is
-  * SIZE-GATED — dictionaries whose optimizer-estimated size fits under
-  * `cfg.dictBroadcastMaxBytes` are broadcast; larger ones take the salted
-  * shuffle-hash path (`saltedJoin`). `cfg.forceSaltedJoins` pins the
-  * shuffle path so tests exercise it at small scale (PipelineParitySpec).
-  *
   * Every linked field except the L5 text depends only on the mention's
   * (entity, qid) key, as the reference's per-lookup-key response caches
   * do (utils/cache_utils.py:7-56). So [[prepare]] runs the chain ONCE per
@@ -29,11 +23,21 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * rows (`link_plan` site `link_key_flags`), attach the L5 text (carried
   * `p_extract`, or the one scrape join on url, `l5_scrapes`), and join
   * the per-key payload last (`link_key_payload`), so its output feeds the
-  * node write directly. Both join-backs are size-gated like every other
-  * dictionary join: broadcast for the persisted key tables of
-  * [[Pipeline.prepareLink]], salted at scale, where the salt spreads a hot
-  * key's mention rows (country/person hubs) over `cfg.nSalt` buckets
-  * (SURVEY §4.2).
+  * node write directly.
+  *
+  * Scale design, one rule: salt only a join whose probe side can hold a
+  * hot key. The key chain probes with distinct keys, which hold none, so
+  * its dictionary joins are plain left joins and Spark picks broadcast or
+  * shuffle at runtime. Three sites go through the size-gated `dictJoin`:
+  * the two mention-row join-backs, where a hub key (country, person)
+  * repeats over many mention rows, and `wd_ref_labels`, whose probe is the
+  * exploded referenced ids of the Wikidata dictionary, where hub qids
+  * repeat. A dictionary whose plan-estimated size fits under
+  * `cfg.dictBroadcastMaxBytes` is broadcast; a larger one, or one without
+  * a size estimate, takes the salted shuffle-hash path (`saltedJoin`),
+  * whose salt spreads a hot key over `cfg.nSalt` buckets (SURVEY §4.2).
+  * `cfg.forceSaltedJoins` pins the salted path so tests exercise it at
+  * small scale (PipelineParitySpec).
   */
 object Linking {
 
@@ -146,15 +150,9 @@ object Linking {
     * ("broadcast" | "salted" | "shuffle_hash") and the size evidence behind
     * it. Surfaced by Pipeline into the metrics table so plan drift at scale
     * is observable, not silent. */
-  final case class JoinDecision(site: String, path: String,
-      estBytes: BigInt, fromRowCount: Boolean) {
+  final case class JoinDecision(site: String, path: String, estBytes: BigInt) {
     def broadcast: Boolean = path == "broadcast"
   }
-
-  /** `estBytes` of a salted-pinned site whose dictionary has no size
-    * estimate: under `cfg.forceSaltedJoins` the path does not depend on a
-    * size, so the gate skips its row-count probe. */
-  val NotEstimated: BigInt = BigInt(-1)
 
   /** Per-run join-decision recorder: created by the caller that will
     * surface the decisions (Pipeline.run / runMaterialized) and threaded
@@ -182,28 +180,16 @@ object Linking {
     }
   }
 
-  /** Optimizer estimates at/above this are the "no stats" sentinel
-    * (spark.sql.defaultSizeInBytes = Long.MaxValue propagated through
-    * plans without CBO stats) — not a real size. */
-  private val NoStatsSentinel = BigInt(Long.MaxValue) / 4
-
-  /** Size-gated dictionary join (the production join for every
-    * dictionary-side L-stage and for the per-key join-backs of
-    * [[linkFlat]]): broadcast when the dictionary's optimizer-estimated
-    * size fits under `cfg.dictBroadcastMaxBytes`; salted shuffle-hash
-    * otherwise. At 100 TB the wiki/wd dictionaries (10^8 rows) always take
-    * the salted path; the pattern/redirect tables stay broadcast.
-    *
-    * Gate robustness: when the optimizer has NO size estimate it returns
-    * the defaultSizeInBytes sentinel (8 EiB), which would force every
-    * stats-less dictionary onto the salted path even when tiny. In that
-    * case the gate falls back to a row-count probe (one cheap job over the
-    * dictionary — dictionaries are persisted artifacts, orders of
-    * magnitude smaller than the probe side) with a conservative 512 B/row
-    * estimate — except under `cfg.forceSaltedJoins`, whose path is fixed,
-    * so building a salted plan starts no job. Every decision is recorded
-    * in the caller's per-run [[JoinRecorder]] and surfaced as a metrics
-    * row per join site. */
+  /** Size-gated dictionary join, for a join whose probe side can hold a
+    * hot key (the three sites of the object header): broadcast when the
+    * dictionary's plan-estimated size fits under
+    * `cfg.dictBroadcastMaxBytes` and `cfg.forceSaltedJoins` is off; salted
+    * shuffle-hash otherwise. The decision reads the optimized plan's
+    * estimate alone and starts no job. A plan without size statistics
+    * estimates the defaultSizeInBytes sentinel (8 EiB), which exceeds any
+    * budget, so it takes the salted path, correct at any size. Every
+    * decision is recorded in the caller's per-run [[JoinRecorder]] and
+    * surfaced as a metrics row per join site. */
   def dictJoin(
       probe: DataFrame, dict: DataFrame, probeKey: Column, dictKey: Column,
       cfg: KgConfig, saltSource: Column, joinType: String = "left",
@@ -218,13 +204,9 @@ object Linking {
       probe: DataFrame, dict: DataFrame, on: Column,
       cfg: KgConfig, saltSource: Column, joinType: String,
       site: String, rec: JoinRecorder): DataFrame = {
-    val planEst = dict.queryExecution.optimizedPlan.stats.sizeInBytes
-    val (est, fromRows) =
-      if (planEst < NoStatsSentinel) (planEst, false)
-      else if (cfg.forceSaltedJoins) (NotEstimated, false)
-      else (BigInt(dict.count()) * 512, true)
+    val est = dict.queryExecution.optimizedPlan.stats.sizeInBytes
     val small = !cfg.forceSaltedJoins && est <= cfg.dictBroadcastMaxBytes
-    rec.add(JoinDecision(site, if (small) "broadcast" else "salted", est, fromRows))
+    rec.add(JoinDecision(site, if (small) "broadcast" else "salted", est))
     if (small) probe.join(broadcast(dict), on, joinType)
     else saltedJoinOn(probe, dict, on, cfg.nSalt, joinType, Some(saltSource))
   }
@@ -290,24 +272,21 @@ object Linking {
       .select(col("term").as("syn_hit_term"), col("syn.*"))
   }
 
-  /** All dictionary-derived link tables, built ONCE per deployment
-    * (production: static dictionary artifacts; bench: hoisted out of the
-    * per-run timed loop and persisted). Nothing here depends on the entity
-    * rows — every member is O(dictionary), the per-key tables O(keys).
+  /** The dictionary-derived link tables and the two key tables built
+    * over them. Nothing here depends on the entity rows: the dictionary
+    * tables are O(dictionary), the key tables O(keys).
     *
     * `keys` are the distinct (entity, qid) pairs the mention rows can
-    * carry. The per-key tables run the L1-L4/L7 → Wikidata → DBpedia chain
-    * over them on first use, so a caller that persists [[dictionaries]]
-    * first plans the key chain over the cached tables
-    * ([[Pipeline.prepareLink]]): `keyWiki` is the Wikipedia result, which
+    * carry. The key tables run the L1-L4/L7 → Wikidata → DBpedia chain
+    * over them on first use: `keyWiki` is the Wikipedia result, which
     * decides `resolved4`; `keyPayload` adds Wikidata and DBpedia to it.
-    * `decisions` holds every join site decided here, for each run's
-    * `link_plan` rows. */
+    * [[linkFlat]] reads only these two, and [[Pipeline.prepareLink]]
+    * persists only these two. `decisions` holds the gated join site
+    * decided here (`wd_ref_labels`), for each run's `link_plan` rows. */
   final case class Prepared(
       // `primary` is NOT consumed by the link chain (its payload is
-      // pre-composed into l1Dict/osPick) and is NOT persisted —
-      // kept only as the build lineage for diagnostics (the bench's
-      // prefix-index size metric)
+      // pre-composed into l1Dict/osPick) — kept only as the build lineage
+      // for diagnostics (the bench's prefix-index size metric)
       primary: DataFrame, l1Dict: DataFrame, l2Dict: DataFrame,
       osPick: DataFrame,
       enrichedWd: DataFrame, dbpSel: DataFrame, lookupPick: DataFrame,
@@ -315,18 +294,12 @@ object Linking {
       // (mlx_qid_l, mlx_l:struct<label,url,description>) dictionary built
       // from that language's wiki pages via Wikidata sitelinks
       mlExtra: Seq[(String, DataFrame)],
-      keys: DataFrame, cfg: KgConfig, rec: JoinRecorder) {
-    def dictionaries: Seq[DataFrame] =
-      Seq(l1Dict, l2Dict, osPick, enrichedWd, dbpSel, lookupPick) ++
-        mlExtra.map(_._2)
-    // distinct keys have no hot key: any salt source spreads them
-    lazy val keyWiki: DataFrame = wikipedia(keys, this, rec, col("entity"))
+      keys: DataFrame, cfg: KgConfig, decisions: Seq[JoinDecision]) {
+    lazy val keyWiki: DataFrame = wikipedia(keys, this)
     lazy val keyPayload: DataFrame =
-      dbpedia(wikidata(keyWiki, this, rec, col("entity")), this, rec, col("entity"))
-        .drop("resolved4")
-    def keyTables: Seq[DataFrame] = Seq(keyWiki, keyPayload)
-    lazy val decisions: Seq[JoinDecision] = { keyTables; rec.drain() }
-    def all: Seq[DataFrame] = dictionaries ++ keyTables
+      dbpedia(wikidata(keyWiki, this), this).drop("resolved4")
+    /** The two key tables, in build order. */
+    def all: Seq[DataFrame] = Seq(keyWiki, keyPayload)
   }
 
   /** Build every dictionary-derived table of the link stage, and the
@@ -360,9 +333,9 @@ object Linking {
       .select(col("qid").as("sl_qid"), col("title").as("sl_title"))
     // L1 dictionary with the redirect hop PRE-COMPOSED dictionary-side:
     // the probe takes ONE join on the entity surface instead of
-    // redirect-resolve + primary — one fewer probe-side exchange in the
-    // salted (at-scale) regime, where every probe join reshuffles the
-    // entity rows. Key space: every redirect source (payload = the target
+    // redirect-resolve + primary — one fewer probe-side exchange when the
+    // joins shuffle (at scale), where every probe join reshuffles the
+    // key rows. Key space: every redirect source (payload = the target
     // page, possibly absent — the resolved lookup term must survive for
     // L3 even when the target page does not exist) plus every primary
     // title that is NOT itself a redirect source (a redirect shadows the
@@ -435,13 +408,14 @@ object Linking {
     }
     val mlLangs = cfg.extraLanguages
       .filter(l => l != cfg.language && l != secondaryLang).distinct
+    val enrichedWd = enrichWdDict(wd, cfg, rec)
     Prepared(
       primary = primary, l1Dict = l1Dict, l2Dict = l2Dict,
       osPick = opensearchPick(lookupTerms, primary, minLen),
-      enrichedWd = enrichWdDict(wd, cfg, rec),
+      enrichedWd = enrichedWd,
       dbpSel = dbpSel, lookupPick = lookupPick,
       mlExtra = mlLangs.map(l => l -> mlTable(l)),
-      keys = keys, cfg = cfg, rec = rec)
+      keys = keys, cfg = cfg, decisions = rec.drain())
   }
 
   /** L1-L4 + L7: Wikipedia linking with the reference's staged fallback
@@ -453,11 +427,10 @@ object Linking {
     * wiki_categories, wiki_links, wiki_wikidata_id, wiki_multilang, plus
     * the L5 inputs resolved4, any_extract, wx_extract and wx_fallback that
     * [[linkFlat]] turns into wiki_extract, wiki_fallback_source and
-    * wiki_status. `salt` is the probe-salt source of the salted
-    * dictionary joins.
+    * wiki_status. Distinct keys hold no hot key, so every dictionary join
+    * here is a plain left join.
     */
-  private def wikipedia(keys: DataFrame, prep: Prepared, rec: JoinRecorder,
-      salt: Column): DataFrame = {
+  private def wikipedia(keys: DataFrame, prep: Prepared): DataFrame = {
     val cfg = prep.cfg
     val minLen = cfg.minExtractLen
     val secondaryLang = if (cfg.language == "de") "en" else "de"
@@ -465,16 +438,14 @@ object Linking {
     // L1 + L4: ONE probe join. The redirect hop (round 5,
     // async_fetchers.py:231 redirects:true) AND the synonym pick (round 6)
     // are PRE-COMPOSED into prep.l1Dict dictionary-side — both stages key
-    // on the raw entity surface, so the fat entity rows cross a single
-    // exchange for the two of them in the salted (at-scale) regime. The
+    // on the raw entity surface, so the key rows cross a single exchange
+    // for the two of them when the join shuffles (at scale). The
     // syn_* payload rides along and is consulted only under the needs4
     // gate below, preserving the staged order (opensearch before synonym,
     // wikipedia/fallbacks.py:82-234). w_lookup (the resolved lookup term,
     // consumed by L3's cleaned retry key) falls back to the entity surface
     // on a miss, as the sequential coalesce did.
-    val s1 = dictJoin(keys, prep.l1Dict,
-        keys("entity"), col("l1_key"), cfg, salt,
-        site = "l1_syn_primary", rec = rec)
+    val s1 = keys.join(prep.l1Dict, keys("entity") === col("l1_key"), "left")
       .withColumn("w_lookup", coalesce(col("l1_lookup"), col("entity")))
       .drop("l1_key", "l1_lookup")
 
@@ -487,14 +458,14 @@ object Linking {
     // mechanism); only consulted where stage 1 is unresolved. The
     // sitelink→secondary-page hop is pre-composed into prep.l2Dict, so the
     // probe joins once on the qid.
-    val s2 = dictJoin(s1, prep.l2Dict, s1("qid"), col("sl_qid"), cfg, salt,
-      site = "l2_secondary", rec = rec).drop("sl_qid")
+    val s2 = s1.join(prep.l2Dict, s1("qid") === col("sl_qid"), "left")
+      .drop("sl_qid")
     val ok2 = col("w2_extract").isNotNull && length(col("w2_extract")) >= minLen
 
     // Early payload collapse (guide §2.3 — project before the exchange):
     // ok1/ok2 are decided here, so the (categories, links, wikidata_id)
     // candidate pairs collapse into one column each BEFORE the L3
-    // exchange — the salted L3 shuffle carries one copy instead of two.
+    // exchange — a shuffled L3 join carries one copy instead of two.
     // (w_/w2_ title+url+extract survive until after L3: the multilang
     // struct and the remaining otherwise-branches need them individually.)
     val s2c = s2
@@ -523,9 +494,9 @@ object Linking {
     // whitespace collapsed) — the reference's clean_title applied to
     // retry lookups (translation_utils.py:123).
     val needs3 = !(ok1 || ok2)
-    val s3 = dictJoin(s2c, prep.osPick,
-      when(needs3, cleanTitleCol(lower(col("w_lookup")))), col("os_hit_key"),
-      cfg, salt, site = "l3_opensearch", rec = rec)
+    val s3 = s2c.join(prep.osPick,
+      when(needs3, cleanTitleCol(lower(col("w_lookup")))) === col("os_hit_key"),
+      "left")
     val ok3 = col("os_extract").isNotNull // null unless needs3 (gated key)
 
     // L4 (fallback 3): synonym retry — PRE-COMPOSED into the L1 join
@@ -540,9 +511,9 @@ object Linking {
     // after the L3 join every Wikipedia gate (ok1..ok4) is decided, so
     // the FULL wiki projection — except the L5-dependent branches — is
     // computed HERE and the per-stage candidate payloads (w_*, w2_*,
-    // os_*, syn_*, w_lookup) are dropped before any further exchange. In
-    // the salted regime the L7 extra-language joins and the wikidata and
-    // dbpedia joins then shuffle ONE final copy of each field instead of
+    // os_*, syn_*, w_lookup) are dropped before any further exchange. When
+    // they shuffle, the L7 extra-language joins and the wikidata and
+    // dbpedia joins then move ONE final copy of each field instead of
     // up to four candidate copies. Each wiki_* / wx_* column below is the
     // original ok1..ok4 when-chain with the ok1/ok2 branches partially
     // evaluated (ok3/ok4 imply !ok1 && !ok2, so branch order can be
@@ -607,11 +578,10 @@ object Linking {
     // coalesce — fully decided post-L3). Runs BEFORE the L5 scrape text is
     // consulted: the two are independent, and this order lets the
     // collapsed narrow rows cross the ml exchanges. Each table is
-    // O(dictionary) and joins through the same size-gated dictJoin.
+    // O(dictionary) and joins as the other key-chain joins do.
     val effQid = coalesce(col("qid"), col("wiki_wikidata_id"))
     val withMl = prep.mlExtra.foldLeft(s3c) { case (df, (l, tbl)) =>
-      dictJoin(df, tbl, effQid, col(s"mlx_qid_$l"), cfg, salt,
-        site = s"l7_ml_$l", rec = rec).drop(s"mlx_qid_$l")
+      df.join(tbl, effQid === col(s"mlx_qid_$l"), "left").drop(s"mlx_qid_$l")
     }
 
     // extra-language entries from the joined sitelink tables (absent
@@ -699,13 +669,10 @@ object Linking {
 
   /** L9-L12: Wikidata enrichment — qid from gazetteer/wiki pageprops, then
     * ONE dictionary join against the pre-enriched dict (enrichWdDict). */
-  private def wikidata(linked: DataFrame, prep: Prepared, rec: JoinRecorder,
-      salt: Column): DataFrame = {
-    val cfg = prep.cfg
+  private def wikidata(linked: DataFrame, prep: Prepared): DataFrame = {
     val withKey = linked.withColumn("wd_key",
       coalesce(col("qid"), col("wiki_wikidata_id")))
-    dictJoin(withKey, prep.enrichedWd, col("wd_key"), col("wd_qid"), cfg, salt,
-      site = "wd_enriched", rec = rec)
+    withKey.join(prep.enrichedWd, col("wd_key") === col("wd_qid"), "left")
       .withColumn("wd_status",
         when(col("wd_qid").isNotNull, lit("found")).otherwise(lit("not_found")))
       .drop("wd_key")
@@ -718,9 +685,7 @@ object Linking {
     * remainder: a name→resource lookup keyed on the lowercased English
     * label, first candidate by uri order — the deterministic stand-in for
     * the Lookup service's relevance-ranked first hit. */
-  private def dbpedia(linked: DataFrame, prep: Prepared, rec: JoinRecorder,
-      salt: Column): DataFrame = {
-    val cfg = prep.cfg
+  private def dbpedia(linked: DataFrame, prep: Prepared): DataFrame = {
     // P10 URI construction as a native expression ([[graft.functions
     // .DbpediaUri]]) — keeps the L13 key projection inside
     // WholeStageCodegen (a ScalaUDF node would break the span).
@@ -730,9 +695,8 @@ object Linking {
       .withColumn("dbp_label_src",
         coalesce(element_at(col("wd_labels"), "en"), col("entity")))
       .withColumn("dbp_uri", call_function("dbpedia_uri", col("dbp_label_src")))
-    val joined = dictJoin(withUri, prep.dbpSel,
-      col("dbp_uri"), col("dbp_uri_dict"), cfg, salt, site = "dbp_strict",
-      rec = rec)
+    val joined = withUri.join(prep.dbpSel,
+      col("dbp_uri") === col("dbp_uri_dict"), "left")
     val strictOk = col("dbp_uri").isNotNull && col("dbp_label").isNotNull &&
       col("dbp_abstract").isNotNull
 
@@ -741,9 +705,8 @@ object Linking {
     // joined in a GATED single pass (null key for strict hits — no
     // filter+union, which would re-execute the whole upstream link chain
     // per branch)
-    val withLookup = dictJoin(joined, prep.lookupPick,
-      when(!strictOk, lower(col("dbp_label_src"))), col("lk_key"), cfg, salt,
-      site = "dbp_lookup", rec = rec)
+    val withLookup = joined.join(prep.lookupPick,
+      when(!strictOk, lower(col("dbp_label_src"))) === col("lk_key"), "left")
     val lookupOk = col("lk_uri").isNotNull &&
       // the Lookup hit must not be the same resource the construction
       // already tried (that one failed strict)
@@ -841,7 +804,7 @@ object Linking {
       if (entities.columns.contains("p_extract")) flagged
       else {
         rec.add(JoinDecision("l5_scrapes", "shuffle_hash",
-          scrapes.queryExecution.optimizedPlan.stats.sizeInBytes, fromRowCount = false))
+          scrapes.queryExecution.optimizedPlan.stats.sizeInBytes))
         val l5Key = when(needs5, col("url"))
           .otherwise(concat(lit("\u0000"), col("url")))
         flagged.join(scrapes.hint("shuffle_hash"), l5Key === col("p_url"), "left")

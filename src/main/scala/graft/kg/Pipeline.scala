@@ -3,7 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable.ArrayBuffer
 
 /** End-to-end KG construction (reference lifecycle
@@ -96,19 +96,16 @@ object Pipeline {
       idf = lt.idf)
   }
 
-  /** Dictionary artifacts for the link stage, built once per Dicts and
-    * config on first use ([[Dicts.links]]), so every run over these
-    * dictionaries, with or without `prepared`, links over the same
-    * persisted AND materialized tables. The dictionaries are materialized
-    * first, so the per-key chain is planned over their caches and its
-    * joins see their real sizes; they are independent, so their counts
-    * run side by side (each is a short job, bound by scheduling and
-    * broadcast latency, not by cores). The key payload is planned over
-    * the cached Wikipedia result, so it follows that one. The keys are
-    * the distinct (canonical, qid) pairs of the alias table: every
-    * (entity, qid) an extract can produce — explicit mentions take them
-    * from a gazetteer candidate, E4 implicit entities from the
-    * alias-derived qid info. */
+  /** The link artifacts, built once per Dicts and config on first use
+    * ([[Dicts.links]]), so every run over these dictionaries, with or
+    * without `prepared`, links over the same persisted AND materialized
+    * key tables, whose join-backs then see real sizes. Only the two key
+    * tables are kept: the dictionary tables are read once, by the key
+    * chain. The key payload is planned over the cached Wikipedia result,
+    * so it follows that one. The keys are the distinct (canonical, qid)
+    * pairs of the alias table: every (entity, qid) an extract can produce
+    * — explicit mentions take them from a gazetteer candidate, E4
+    * implicit entities from the alias-derived qid info. */
   def prepareLink(spark: SparkSession, dicts: Dicts,
       cfg: KgConfig = KgConfig.default): Linking.Prepared =
     dicts.links.computeIfAbsent(cfg, _ => {
@@ -116,11 +113,7 @@ object Pipeline {
       val keys = dicts.aliases.map(a => (a.canonical, a.qid)).distinct
       val p = Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
         dicts.dbp, dicts.synonyms, keys.toDF("entity", "qid"), cfg)
-      val pool = Executors.newFixedThreadPool(p.dictionaries.size)
-      try p.dictionaries.map(d => pool.submit(() => d.persist(MEMORY_AND_DISK).count()))
-        .foreach(_.get())
-      finally pool.shutdown()
-      p.keyTables.foreach(_.persist(MEMORY_AND_DISK).count())
+      p.all.foreach(_.persist(MEMORY_AND_DISK).count())
       p
     })
 

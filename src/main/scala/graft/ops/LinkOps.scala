@@ -97,11 +97,38 @@ object LinkOps {
       "the filter abstract", Nil, Nil),
     DbpediaRow("http://dbpedia.org/resource/Join", "join", null, Nil, Nil))
 
+  /** Both queries link with the L7 fr entries. */
+  private val LinkCfg = KgConfig.default.copy(extraLanguages = Seq("fr"))
+
+  private val dictsCache = new java.util.HashMap[SparkSession, Pipeline.Dicts]()
+
+  /** The fixture as a dictionary set, memoized per session like
+    * [[MentionOps.dictsFor]], so Pipeline.prepareLink builds its link
+    * artifacts once per session, as it does for every pipeline run. Its
+    * aliases are the (term, qid) pairs of `qidOf`; MentionOps.Terms is
+    * qidOf's key set, so these are exactly the keys the mention rows
+    * carry. The extract-side members stay empty: no query extracts. */
+  private def fixtureDicts(spark: SparkSession): Pipeline.Dicts =
+    dictsCache.synchronized {
+      dictsCache.keySet.removeIf(s => s.sparkContext.isStopped)
+      dictsCache.computeIfAbsent(spark, s => {
+        import s.implicits._
+        Pipeline.Dicts(
+          aliases = qidOf.toSeq.sorted.map { case (term, qid) =>
+            AliasRow(term, term, qid, "Konzept", 1.0, "de")
+          },
+          patterns = Nil,
+          wiki = wikiFixture.toDF(), redirects = redirectFixture.toDF(),
+          wd = wdFixture.toDF(), dbp = dbpFixture.toDF(),
+          synonyms = synonymFixture.toDF(),
+          wdPartOf = Map.empty, wdDesc = Map.empty, idf = Map.empty)
+      })
+    }
+
   /** The REAL link chain (Linking.linkAll) over documents-derived mentions
     * against the hand-derivable dictionary fixture — shared by the
     * kg_link_chain projection and the kg_stats statistics query. */
   private def linkChainNodes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val entities = MentionOps.kgMentions(spark, dir)
       .select(concat(lit("doc://"), col("doc_id")).as("url"),
         lit("de").as("lang"), col("term").as("entity"), col("n"))
@@ -117,12 +144,8 @@ object LinkOps {
     val scrapes = t(spark, dir, "documents")
       .select(concat(lit("doc://"), col("doc_id")).as("p_url"),
         when(length(col("text")) > 0, col("text")).as("p_extract"))
-    val cfg = KgConfig.default.copy(extraLanguages = Seq("fr"))
     Linking.linkAll(spark, entities,
-      Linking.prepare(spark, wikiFixture.toDF(), redirectFixture.toDF(),
-        wdFixture.toDF(), dbpFixture.toDF(), synonymFixture.toDF(),
-        entities.select("entity", "qid").distinct(), cfg),
-      scrapes, cfg)
+      Pipeline.prepareLink(spark, fixtureDicts(spark), LinkCfg), scrapes, LinkCfg)
   }
 
   /** The production link chain over documents-derived mentions. */

@@ -1,20 +1,18 @@
 package graft.kg
 
-import graft.SparkSpec
+import graft.{CacheState, JobFence, SparkSpec}
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
 /** The keyed link shape in both regimes: salted, building its plan over
-  * stats-less inputs runs no Spark job (dictJoin skips its row-count
-  * fallback when the path is pinned); broadcast, the materialized key
-  * tables join back onto rows that carry their L5 text without any
-  * shuffle; and runs without prepared tables link over the artifacts
-  * that Pipeline.prepareLink built once for their Dicts and config. */
+  * stats-less inputs runs no Spark job (the dictJoin gate reads plan
+  * estimates only); broadcast, the materialized key tables join back onto
+  * rows that carry their L5 text without any shuffle; Pipeline.prepareLink
+  * keeps only the two key tables; and runs without prepared tables link
+  * over the artifacts that it built once for their Dicts and config. */
 class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -23,15 +21,6 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     * everything derived from it. */
   private def statsLess(df: DataFrame): DataFrame =
     spark.createDataFrame(df.rdd, df.schema)
-
-  /** Job starts seen by the listener bus, tagged with the job's "fence"
-    * local property (null for untagged jobs). */
-  private final class JobLog extends SparkListener {
-    val fences = new ConcurrentLinkedQueue[String]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      fences.add(Option(e.properties).flatMap(p => Option(p.getProperty("fence")))
-        .getOrElse("untagged"))
-  }
 
   test("building the salted keyed link plan starts no Spark job") {
     val generated = SyntheticCorpus.generate(nPages = 20, seed = 7L)
@@ -58,33 +47,20 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(entities.queryExecution.optimizedPlan.stats.sizeInBytes >=
       BigInt(Long.MaxValue) / 8, "input must be stats-less")
 
-    val log = new JobLog
-    spark.sparkContext.addSparkListener(log)
     val rec = new Linking.JoinRecorder
-    val flat =
-      try {
-        val f = Linking.linkFlat(spark, entities, prep, scrapes, cfg, rec)
-        f.queryExecution.executedPlan
-        // the bus delivers job starts in order: once the fence job is
-        // seen, any job started while the plan was built has been seen too
-        spark.sparkContext.setLocalProperty("fence", "plan-built")
-        spark.sparkContext.parallelize(Seq(1), 1).count()
-        spark.sparkContext.setLocalProperty("fence", null)
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (!log.fences.contains("plan-built") && System.nanoTime() < deadline)
-          Thread.sleep(10)
-        f
-      } finally spark.sparkContext.removeSparkListener(log)
-    val seen = log.fences.toArray.toSeq
-    assert(seen == Seq("plan-built"), s"plan building ran jobs: $seen")
+    val (flat, jobs) = JobFence.jobsOf(spark) {
+      val f = Linking.linkFlat(spark, entities, prep, scrapes, cfg, rec)
+      f.queryExecution.executedPlan
+      f
+    }
+    assert(jobs.isEmpty, s"plan building ran jobs: $jobs")
 
     val ds = rec.drain()
     for (site <- Seq("link_key_flags", "link_key_payload")) {
       val d = ds.filter(_.site == site)
       assert(d.size == 1, s"expected one decision for $site, got $d")
-      assert(d.head.path == "salted" && !d.head.fromRowCount, d.head.toString)
+      assert(d.head.path == "salted", d.head.toString)
     }
-    assert(!ds.exists(_.fromRowCount), s"no site may fall back to a count: $ds")
     // the plan still answers: one node per entity row, null qid included
     assert(flat.count() == rows.size)
     assert(flat.filter($"entity" === e(0).name && $"wiki_status" === "found")
@@ -115,6 +91,25 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     assert(!ds.exists(_.site == "l5_scrapes"), ds)
     assert(flat.count() == 2)
+  }
+
+  test("prepareLink on a fresh Dicts persists and caches only the two key tables") {
+    // an entity count no other suite uses: persisting a plan equal to one
+    // cached earlier would add no cache entry
+    val dicts = Pipeline.dictsFromCorpus(spark,
+      SyntheticCorpus.generate(nPages = 20, nEntities = 90))
+    val entries0 = CacheState.entries(spark)
+    val persisted0 = CacheState.persisted(spark).keySet
+    val prep = Pipeline.prepareLink(spark, dicts, KgConfig.default)
+    val keyRdds = prep.all.map(CacheState.rddOf(spark, _).id).toSet
+    assert(keyRdds.size == 2)
+    val added = CacheState.persisted(spark).filter { case (id, _) => !persisted0(id) }
+    assert(added.keySet == keyRdds, "persisted beside the key tables:\n" +
+      added.values.map(CacheState.describe).mkString("\n"))
+    val addedEntries = CacheState.entries(spark).filterNot(e => entries0.exists(_ eq e))
+    assert(addedEntries.map(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id)
+      .toSet == keyRdds && addedEntries.size == 2,
+      s"cache entries added beside the key tables: ${addedEntries.map(_.plan)}")
   }
 
   test("runMaterialized reuses one set of link artifacts per Dicts and config") {

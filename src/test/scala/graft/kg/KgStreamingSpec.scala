@@ -1,6 +1,6 @@
 package graft.kg
 
-import graft.SparkSpec
+import graft.{CacheState, SparkSpec}
 import java.nio.file.{Files, Paths}
 
 /** Incremental (Structured Streaming, Trigger.AvailableNow) KG
@@ -9,18 +9,6 @@ import java.nio.file.{Files, Paths}
   * exactly-once file-level processing across invocations. */
 class KgStreamingSpec extends SparkSpec {
   import spark.implicits._
-
-  /** (CacheManager entries, persistent RDDs) of the session: a batch that
-    * leaves either behind grows them from one batch to the next. The entry
-    * list is private to the CacheManager, so it is read by reflection. */
-  private def caches(): (Int, Int) = {
-    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-    val f = cm.getClass.getDeclaredField("cachedData")
-    f.setAccessible(true)
-    (f.get(cm).asInstanceOf[Seq[_]].size,
-      spark.sparkContext.getPersistentRDDs.size)
-  }
 
   private def edgeSet(df: org.apache.spark.sql.DataFrame) =
     df.select("url", "subject", "predicate", "object", "inferred")
@@ -41,7 +29,10 @@ class KgStreamingSpec extends SparkSpec {
     assert(b1 >= 1)
     val afterSeg1 = edgeSet(spark.read.parquet(s"$outDir/kg_edges"))
     assert(afterSeg1.nonEmpty)
-    val cachedAfterSeg1 = caches()
+    // a batch that leaves a cache entry or a persisted RDD behind adds it
+    // after this snapshot
+    val entriesAfterSeg1 = CacheState.entries(spark).size
+    val persistedAfterSeg1 = CacheState.persisted(spark).keySet
 
     // rerun with nothing new: checkpoint skips all seen files
     StreamingPipeline.runAvailableNow(spark, pagesDir, dicts, outDir, ckpt)
@@ -53,8 +44,12 @@ class KgStreamingSpec extends SparkSpec {
     StreamingPipeline.runAvailableNow(spark, pagesDir, dicts, outDir, ckpt)
     // each batch releases what it cached; the link artifacts it reuses
     // were built once, by the first invocation
-    assert(caches() == cachedAfterSeg1,
-      "a micro-batch left cache entries or persisted RDDs behind")
+    val entries = CacheState.entries(spark).size
+    assert(entries == entriesAfterSeg1, "a micro-batch left cache entries behind")
+    val added = CacheState.persisted(spark).filter { case (id, _) =>
+      !persistedAfterSeg1(id) }
+    assert(added.isEmpty, "a micro-batch left persisted RDDs behind:\n" +
+      added.values.map(CacheState.describe).mkString("\n"))
 
     // streaming accumulation == one-shot batch run over all 80 pages
     val batch = Pipeline.run(spark,
