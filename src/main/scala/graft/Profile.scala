@@ -67,9 +67,10 @@ object Profile {
     }
   }
 
-  /** The link chain over Pipeline-shaped entity rows and the dictionaries'
-    * persisted link artifacts, as every pipeline run links: broadcast
-    * with no exchange, salted with three mention-row exchanges. */
+  /** The link chain over Pipeline-shaped entity rows (the L5 text gated
+    * per key) and the dictionaries' persisted link artifacts, as every
+    * pipeline run links: broadcast with no exchange, salted with one
+    * mention-row exchange. */
   private def linkFlat(spark: SparkSession, cfg: KgConfig): DataFrame = {
     val dicts = graft.ops.MentionOps.dictsFor(spark)
     val prep = Pipeline.prepareLink(spark, dicts, cfg)
@@ -77,10 +78,7 @@ object Profile {
     val pages = spark.range(100).repartition(8)
       .mapPartitions(it => it.map(i => factory.page(i.toInt)))(Encoders.product[PageRow])
     val docOut = KgExtract.run(spark, pages, dicts, cfg).toDF()
-    val scrapes =
-      if (Pipeline.carryScrape(cfg)) spark.emptyDataFrame
-      else Pipeline.scrapeRows(docOut)
-    Linking.linkFlat(spark, Pipeline.entityRows(docOut, cfg), prep, scrapes, cfg)
+    Linking.linkFlat(spark, Pipeline.entityRows(docOut, prep), prep, cfg)
   }
 
   private def emit(out: Option[String], file: String, text: String): Unit =

@@ -28,13 +28,12 @@ final case class KgConfig(
     // with a dictionary can be listed here).
     extraLanguages: Seq[String] = Nil,
     nSalt: Int = 8,                     // skew salting factor of the gated joins
-    // Linking.dictJoin gate of the three joins whose probe can hold a hot
-    // key (link_key_flags, link_key_payload, wd_ref_labels): dictionaries
-    // estimated under this are broadcast; larger ones, or ones without an
-    // estimate, take the salted shuffle-hash path
+    // Linking.dictJoin gate of the two joins whose probe can hold a hot
+    // key (link_key_payload, wd_ref_labels): dictionaries estimated under
+    // this are broadcast; larger ones, or ones without an estimate, take
+    // the salted shuffle-hash path
     dictBroadcastMaxBytes: Long = 64L << 20,
-    // tests: pin those three joins to the salted path at small scale (and
-    // keep entity rows narrow, Pipeline.carryScrape)
+    // tests: pin those two joins to the salted path at small scale
     forceSaltedJoins: Boolean = false
 )
 

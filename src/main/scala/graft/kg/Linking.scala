@@ -18,18 +18,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * Every linked field except the L5 text depends only on the mention's
   * (entity, qid) key, as the reference's per-lookup-key response caches
   * do (utils/cache_utils.py:7-56). So [[prepare]] runs the chain ONCE per
-  * key of the gazetteer, dictionary-side, and [[linkFlat]] has one shape
-  * in every regime: join each key's `resolved4` flag onto the mention
-  * rows (`link_plan` site `link_key_flags`), attach the L5 text (carried
-  * `p_extract`, or the one scrape join on url, `l5_scrapes`), and join
-  * the per-key payload last (`link_key_payload`), so its output feeds the
-  * node write directly.
+  * key of the gazetteer, dictionary-side, and so does the L5 gate: only a
+  * key L1-L4 leave unresolved ([[Prepared.unresolved]]) reads the page
+  * text, and the entity rows carry `p_extract` only on such keys. So
+  * [[linkFlat]] has one shape in every regime: ONE join-back of the
+  * per-key payload onto the mention rows (`link_plan` site
+  * `link_key_payload`), then the L5 projection over the text the rows
+  * carry; its output feeds the node write directly.
   *
   * Scale design, one rule: salt only a join whose probe side can hold a
   * hot key. The key chain probes with distinct keys, which hold none, so
   * its dictionary joins are plain left joins and Spark picks broadcast or
-  * shuffle at runtime. Three sites go through the size-gated `dictJoin`:
-  * the two mention-row join-backs, where a hub key (country, person)
+  * shuffle at runtime. Two sites go through the size-gated `dictJoin`:
+  * the mention-row join-back, where a hub key (country, person)
   * repeats over many mention rows, and `wd_ref_labels`, whose probe is the
   * exploded referenced ids of the Wikidata dictionary, where hub qids
   * repeat. A dictionary whose plan-estimated size fits under
@@ -181,7 +182,7 @@ object Linking {
   }
 
   /** Size-gated dictionary join, for a join whose probe side can hold a
-    * hot key (the three sites of the object header): broadcast when the
+    * hot key (the two sites of the object header): broadcast when the
     * dictionary's plan-estimated size fits under
     * `cfg.dictBroadcastMaxBytes` and `cfg.forceSaltedJoins` is off; salted
     * shuffle-hash otherwise. The decision reads the optimized plan's
@@ -280,9 +281,10 @@ object Linking {
     * carry. The key tables run the L1-L4/L7 → Wikidata → DBpedia chain
     * over them on first use: `keyWiki` is the Wikipedia result, which
     * decides `resolved4`; `keyPayload` adds Wikidata and DBpedia to it.
-    * [[linkFlat]] reads only these two, and [[Pipeline.prepareLink]]
-    * persists only these two. `decisions` holds the gated join site
-    * decided here (`wd_ref_labels`), for each run's `link_plan` rows. */
+    * [[linkFlat]] reads only `keyPayload`, the extract's L5 gate only
+    * `unresolved`, and [[Pipeline.prepareLink]] persists only the two key
+    * tables. `decisions` holds the gated join site decided here
+    * (`wd_ref_labels`), for each run's `link_plan` rows. */
   final case class Prepared(
       // `primary` is NOT consumed by the link chain (its payload is
       // pre-composed into l1Dict/osPick) — kept only as the build lineage
@@ -296,10 +298,17 @@ object Linking {
       mlExtra: Seq[(String, DataFrame)],
       keys: DataFrame, cfg: KgConfig, decisions: Seq[JoinDecision]) {
     lazy val keyWiki: DataFrame = wikipedia(keys, this)
-    lazy val keyPayload: DataFrame =
-      dbpedia(wikidata(keyWiki, this), this).drop("resolved4")
+    lazy val keyPayload: DataFrame = dbpedia(wikidata(keyWiki, this), this)
     /** The two key tables, in build order. */
     def all: Seq[DataFrame] = Seq(keyWiki, keyPayload)
+    /** The (entity, qid) keys L1-L4 leave unresolved: the only keys whose
+      * rows read the L5 page text. Collected once from `keyWiki`, so
+      * O(gazetteer keys), the bound of the alias automaton the extract
+      * already broadcasts. A null qid stays a null member, as the
+      * null-safe key join-back matches it. */
+    lazy val unresolved: Set[(String, String)] =
+      keyWiki.filter(!col("resolved4")).select("entity", "qid").collect()
+        .iterator.map(r => (r.getString(0), r.getString(1))).toSet
   }
 
   /** Build every dictionary-derived table of the link stage, and the
@@ -745,7 +754,9 @@ object Linking {
   }
 
   /** Full L-chain: Wikipedia → Wikidata → DBpedia (orchestrator order),
-    * assembling the nested node shape (SURVEY §1.1). */
+    * assembling the nested node shape (SURVEY §1.1), for callers that hold
+    * the L5 text as a separate (p_url, p_extract) table: its text is
+    * attached to the entity rows by url first. */
   def linkAll(
       spark: SparkSession,
       entities: DataFrame,
@@ -753,7 +764,9 @@ object Linking {
       scrapes: DataFrame,
       cfg: KgConfig,
       rec: JoinRecorder = JoinRecorder.noop): DataFrame =
-    nest(linkFlat(spark, entities, prep, scrapes, cfg, rec))
+    nest(linkFlat(spark,
+      entities.join(scrapes, col("url") === col("p_url"), "left").drop("p_url"),
+      prep, cfg, rec))
 
   /** The link chain with a FLAT output schema: one top-level column per
     * node field. This is the form Pipeline.run CACHES: Spark's in-memory
@@ -768,49 +781,28 @@ object Linking {
     * back to the flat column (SimplifyExtractValueOps), so consumers of a
     * few fields scan only those columns.
     *
-    * One shape in every regime (object header): the per-key `resolved4`
-    * flags join, the L5 text, the per-key payload join. Both join-backs go
-    * through [[dictJoinOn]] on the null-safe key, so entities without a
-    * qid still meet their key row; `prep` must hold every key the rows
-    * carry. L5 (fallback 4) is the deterministic "scrape": the page text
-    * the extract pass already produced (so the 100 TB html column is read
-    * once per extract pass), consulted only by rows that L1-L4 left
-    * unresolved. Rows that CARRY it (`p_extract`, Pipeline.run's default)
-    * need no join. Otherwise it comes from `scrapes` (p_url, p_extract) by
-    * ONE UNSALTED shuffle-hash join: scrapes is a document-scale table, so
-    * dictJoin would always exceed the broadcast budget and replicate the
-    * full page-text table nSalt× into the shuffle; its url keys are
-    * high-cardinality and skewless. Already-resolved rows keep a per-row
-    * NON-matching key (NUL-prefixed url) rather than NULL: null keys all
-    * hash to one reducer, and the resolved majority would collapse into a
-    * single straggler partition. */
+    * One shape in every regime (object header): the per-key payload join,
+    * then the L5 projection. The join-back goes through [[dictJoinOn]] on
+    * the null-safe key, so entities without a qid still meet their key
+    * row; `prep` must hold every key the rows carry. L5 (fallback 4) is the
+    * deterministic "scrape": the page text the extract pass already
+    * produced (so the 100 TB html column is read once per extract pass),
+    * consulted only by rows that L1-L4 left unresolved. The rows carry it
+    * as `p_extract`; Pipeline's entity rows carry it only where the key is
+    * in [[Prepared.unresolved]], so the resolved majority crosses the
+    * join-back narrow, and text on a resolved row is ignored. */
   def linkFlat(
       spark: SparkSession,
-      entities: DataFrame,
+      entities: DataFrame, // with p_extract: the L5 text of the row's page
       prep: Prepared,
-      scrapes: DataFrame, // (p_url, p_extract): L5 text for narrow rows
       cfg: KgConfig,
       rec: JoinRecorder = JoinRecorder.noop): DataFrame = {
     prep.decisions.foreach(rec.add)
-    val onKey = col("entity") <=> col("k_entity") && col("qid") <=> col("k_qid")
-    def joinBack(rows: DataFrame, perKey: DataFrame, site: String): DataFrame =
-      dictJoinOn(rows,
-        perKey.withColumnsRenamed(Map("entity" -> "k_entity", "qid" -> "k_qid")),
-        onKey, cfg, col("url"), "left", site, rec).drop("k_entity", "k_qid")
-    val flagged = joinBack(entities,
-      prep.keyWiki.select("entity", "qid", "resolved4"), "link_key_flags")
+    val linked = dictJoinOn(entities,
+      prep.keyPayload.withColumnsRenamed(Map("entity" -> "k_entity", "qid" -> "k_qid")),
+      col("entity") <=> col("k_entity") && col("qid") <=> col("k_qid"),
+      cfg, col("url"), "left", "link_key_payload", rec).drop("k_entity", "k_qid")
     val needs5 = !col("resolved4")
-    val withText =
-      if (entities.columns.contains("p_extract")) flagged
-      else {
-        rec.add(JoinDecision("l5_scrapes", "shuffle_hash",
-          scrapes.queryExecution.optimizedPlan.stats.sizeInBytes))
-        val l5Key = when(needs5, col("url"))
-          .otherwise(concat(lit("\u0000"), col("url")))
-        flagged.join(scrapes.hint("shuffle_hash"), l5Key === col("p_url"), "left")
-          .drop("p_url")
-      }
-    val linked = joinBack(withText, prep.keyPayload, "link_key_payload")
     val ok5 = needs5 && col("p_extract").isNotNull &&
       length(col("p_extract")) >= cfg.minExtractLen
     linked.select(

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import java.util.concurrent.ConcurrentHashMap
@@ -176,8 +176,8 @@ object Pipeline {
   }
 
   /** `run`: the extract output and the edges (statistics scans them twice)
-    * are persisted whole; the entity and scrape projections stay UNCACHED
-    * (the link chain consumes each exactly once, so a second cache would
+    * are persisted whole; the entity projection stays UNCACHED (the link
+    * chain consumes it exactly once, so a second cache would
     * only add a BlockManager round-trip — the round-2 scaling profile
     * showed cache fill/read as the bound). The cache holds the FLAT link
     * output with the nested shape assembled on top: the in-memory cache
@@ -203,8 +203,9 @@ object Pipeline {
     * [[KgTables.write]], whose by-name body means a stage the manifest marks
     * done builds no plan and runs no job, so a no-op resume only reads the
     * manifest and re-opens the tables. Nothing is cached: the extract pass
-    * re-runs for each extract table, and downstream stages scan pruned
-    * parquet. */
+    * re-runs for each of the two extract tables (kg_entities, whose rows
+    * carry the gated L5 text, and kg_edges), and downstream stages scan
+    * pruned parquet. */
   private final class InTables(tables: KgTables, runId: String, fp: String)
       extends Store {
     def extract(docOut: DataFrame): DataFrame = docOut
@@ -233,16 +234,16 @@ object Pipeline {
     // the columns it reads. Lazy: a resume that skips every extract stage
     // builds no extract plan.
     lazy val docOut = store.extract(KgExtract.run(spark, pages, dicts, cfg).toDF())
+    // the link artifacts, shared by the entity rows' L5 gate and the link
+    // stage; lazy, so a resume that skips both builds none
+    lazy val prep = prepared.getOrElse(prepareLink(spark, dicts, cfg))
     val entities = store.stage("extract_entities", "kg_entities")(
-      entityRows(docOut, cfg))
+      entityRows(docOut, prep))
     // a partitioned table reads back with its partition column last; the
     // select keeps one edge column order in both stores
     val edges = store.stage("extract_edges", "kg_edges", reused = true,
       partitionBy = Seq("inferred"))(edgeRows(docOut))
       .select(EdgeColumns.map(col): _*)
-    val scrapes =
-      if (carryScrape(cfg)) spark.emptyDataFrame
-      else store.stage("extract_scrapes", "kg_scrapes")(scrapeRows(docOut))
 
     // ---- link: Wikipedia → Wikidata → DBpedia dictionary joins ----
     // Lazy and shared with the metrics stage: when the link stage resumes
@@ -250,8 +251,7 @@ object Pipeline {
     // executed) link plan itself, so its link_plan decisions still reach
     // the metrics; when both resume, no link artifact is built at all.
     val rec = new Linking.JoinRecorder
-    lazy val flat = Linking.linkFlat(spark, entities,
-      prepared.getOrElse(prepareLink(spark, dicts, cfg)), scrapes, cfg, rec)
+    lazy val flat = Linking.linkFlat(spark, entities, prep, cfg, rec)
     val nodes = store.nodes(flat)
 
     // ---- canonicalize: connected components over alias/redirect edges ----
@@ -279,35 +279,19 @@ object Pipeline {
       release = () => store.cached.foreach(_.unpersist()))
   }
 
-  /** Scrape placement regime, read by the projections and the resume
-    * fingerprint. Broadcast dictionaries (the small-dictionary gate
-    * outcome): each entity row CARRIES its page's L5 text `p_extract`, so
-    * Linking.linkFlat needs no L5 join and, with broadcast key tables, no
-    * shuffle; a table-backed run writes no scrape table (one fewer
-    * corpus-width write and extract pass), duplicating the text per entity
-    * (~3x) instead. Salted (forceSaltedJoins — the at-scale shape where
-    * every dictionary exceeds the broadcast budget): entity rows stay
-    * NARROW, so each of linkFlat's three mention-row exchanges (the salted
-    * resolved4 flags, ONE unsalted shuffle-hash join that re-attaches the
-    * scrape text at L5, the salted per-key payload) moves narrow rows, and
-    * the html-derived text crosses the wire exactly once. */
-  private[graft] def carryScrape(cfg: KgConfig): Boolean = !cfg.forceSaltedJoins
-
-  private def pageText: Column =
-    when(length(col("scrape")) > 0, col("scrape")).as("p_extract")
-
-  /** Entity rows off the extract output, with `p_extract` when the regime
-    * carries the scrape text. */
-  private[graft] def entityRows(docOut: DataFrame, cfg: KgConfig): DataFrame =
-    if (carryScrape(cfg))
-      docOut.select(pageText, explode(col("entities")).as("e"))
-        .select(col("e.*"), col("p_extract"))
-    else docOut.select(explode(col("entities")).as("e")).select("e.*")
-
-  /** The L5 text per page, (p_url, p_extract): the link input beside narrow
-    * entity rows. */
-  private[graft] def scrapeRows(docOut: DataFrame): DataFrame =
-    docOut.select(col("url").as("p_url"), pageText)
+  /** Entity rows off the extract output. `p_extract`, the L5 text, is the
+    * page's scrape text on a row whose (entity, qid) key L1-L4 leave
+    * unresolved ([[Linking.Prepared.unresolved]], broadcast) and null on
+    * every other row, so no regime carries text that linkFlat would not
+    * read, nor needs a join to find it. */
+  private[graft] def entityRows(docOut: DataFrame,
+      prep: Linking.Prepared): DataFrame = {
+    val keys = docOut.sparkSession.sparkContext.broadcast(prep.unresolved)
+    val unresolved = udf((e: String, q: String) => keys.value.contains((e, q)))
+    docOut.select(col("scrape"), explode(col("entities")).as("e"))
+      .select(col("e.*"), when(length(col("scrape")) > 0 &&
+        unresolved(col("e.entity"), col("e.qid")), col("scrape")).as("p_extract"))
+  }
 
   private def edgeRows(docOut: DataFrame): DataFrame =
     docOut.select(explode(col("triples")).as("t")).select("t.*")
@@ -329,19 +313,17 @@ object Pipeline {
     * file-backed (the Iceberg-snapshot-id stand-in); otherwise a hash of
     * the canonicalized logical plan. The previous `pages.count()` was a
     * complete extra pass over the corpus — at 10^12 rows, a full scan spent
-    * only on naming the run. The scrape-placement REGIME (broadcast:
-    * p_extract carried on kg_entities, no kg_scrapes table; salted: narrow
-    * kg_entities + kg_scrapes) is folded in too: the regimes write
-    * different kg_entities schemas, so a config flip must invalidate the
-    * extract stages instead of resuming into a mismatched layout (the L5
-    * compat join would otherwise hit a missing p_url column, or silently
-    * reuse the other regime's layout). */
+    * only on naming the run. The join REGIME (`carry`: gated dictJoin
+    * sites may broadcast; `salted`: forceSaltedJoins) is folded in too:
+    * both regimes write the same tables, but kg_metrics records the join
+    * paths the link stage took, so a config flip must not resume the other
+    * regime's metrics. */
   private def fingerprintOf(pages: Dataset[PageRow], cfg: KgConfig): String = {
     val files = pages.inputFiles
     val src = if (files.nonEmpty) files.sorted.mkString("\n")
               else s"plan:${pages.queryExecution.logical.semanticHash()}"
     val md = java.security.MessageDigest.getInstance("SHA-1")
-    val regime = if (carryScrape(cfg)) "carry" else "salted"
+    val regime = if (cfg.forceSaltedJoins) "salted" else "carry"
     "in=" + md.digest(src.getBytes("UTF-8")).take(8)
       .map(b => f"${b & 0xff}%02x").mkString + s"+$regime"
   }

@@ -111,10 +111,10 @@ class DictJoinGateSpec extends SparkSpec {
     val sites = res.metrics
       .filter(col("stage") === "link_plan" && col("metric").startsWith("dict_join"))
       .select("key").as[String].collect().toSet
-    // only the joins whose probe can hold a hot key are gated: the two
-    // mention-row join-backs and the referenced-label join of the
-    // Wikidata dictionary
-    assert(sites == Set("wd_ref_labels", "link_key_flags", "link_key_payload"),
+    // only the joins whose probe can hold a hot key are gated: the one
+    // mention-row join-back and the referenced-label join of the Wikidata
+    // dictionary; resolved4 rides on the payload, so no flags join-back
+    assert(sites == Set("wd_ref_labels", "link_key_payload"),
       s"gated join sites: $sites")
     // the key chain's joins are plain joins
     for (s <- Seq("l1_syn_primary", "l2_secondary", "l3_opensearch",
@@ -128,15 +128,17 @@ class DictJoinGateSpec extends SparkSpec {
         s"pre-composed stage $s must not appear as a probe join site")
   }
 
-  test("salted-regime Pipeline records the single L5 shuffle_hash scrape join") {
+  test("salted-regime Pipeline records no L5 scrape join") {
     val corpus = SyntheticCorpus.generate(nPages = 20, seed = 7L)
     val pages = spark.createDataset(corpus.pages)
     val res = Pipeline.run(spark, pages, Pipeline.dictsFromCorpus(spark, corpus),
       KgConfig.default.copy(forceSaltedJoins = true, nSalt = 4))
-    val l5 = res.metrics
-      .filter(col("stage") === "link_plan" && col("key") === "l5_scrapes")
-      .select("metric").as[String].collect().toSeq
-    assert(l5 == Seq("dict_join_shuffle_hash"),
-      s"L5 must be ONE unsalted shuffle_hash join in the salted regime, got $l5")
+    val plan = res.metrics.filter(col("stage") === "link_plan")
+      .select("metric", "key").as[(String, String)].collect().toSet
+    // the entity rows carry the L5 text where their key is unresolved, so
+    // the salted regime joins no scrape table
+    assert(plan == Set(("dict_join_salted", "wd_ref_labels"),
+      ("dict_join_salted", "link_key_payload")),
+      s"salted link_plan rows: $plan")
   }
 }

@@ -7,12 +7,13 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
-/** The keyed link shape in both regimes: salted, building its plan over
-  * stats-less inputs runs no Spark job (the dictJoin gate reads plan
-  * estimates only); broadcast, the materialized key tables join back onto
-  * rows that carry their L5 text without any shuffle; Pipeline.prepareLink
-  * keeps only the two key tables; and runs without prepared tables link
-  * over the artifacts that it built once for their Dicts and config. */
+/** The keyed link shape in both regimes, one payload join-back onto rows
+  * that carry their L5 text: salted, building its plan over stats-less
+  * inputs runs no Spark job (the dictJoin gate reads plan estimates only);
+  * broadcast, the materialized payload table joins back without any
+  * shuffle; Pipeline.prepareLink keeps only the two key tables; and runs
+  * without prepared tables link over the artifacts that it built once for
+  * their Dicts and config. */
 class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -41,26 +42,27 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       EntityRow("u1", "de", "i1", e(0).name, e(0).qid, e(0).typ, e(0).name, 0, 1, "explicit", 1),
       EntityRow("u2", "de", "i2", e(0).name, e(0).qid, e(0).typ, e(0).name, 0, 1, "explicit", 1),
       EntityRow("u2", "de", "i3", e(7).name, null, e(7).typ, e(7).name, 2, 3, "explicit", 1))
-    val entities = statsLess(rows.toDF())
-    val scrapes = statsLess(Seq(("u1", "a" * 150), ("u2", "b" * 150))
-      .toDF("p_url", "p_extract"))
+    // the rows carry their L5 text, as Pipeline's entity rows do
+    val texts = Seq(("u1", "a" * 150), ("u2", "b" * 150)).toDF("p_url", "p_extract")
+    val entities = statsLess(rows.toDF()
+      .join(texts, $"url" === $"p_url", "left").drop("p_url"))
     assert(entities.queryExecution.optimizedPlan.stats.sizeInBytes >=
       BigInt(Long.MaxValue) / 8, "input must be stats-less")
 
     val rec = new Linking.JoinRecorder
     val (flat, jobs) = JobFence.jobsOf(spark) {
-      val f = Linking.linkFlat(spark, entities, prep, scrapes, cfg, rec)
+      val f = Linking.linkFlat(spark, entities, prep, cfg, rec)
       f.queryExecution.executedPlan
       f
     }
     assert(jobs.isEmpty, s"plan building ran jobs: $jobs")
 
     val ds = rec.drain()
-    for (site <- Seq("link_key_flags", "link_key_payload")) {
-      val d = ds.filter(_.site == site)
-      assert(d.size == 1, s"expected one decision for $site, got $d")
-      assert(d.head.path == "salted", d.head.toString)
-    }
+    // one mention-row join-back: the per-key payload, which carries resolved4
+    val d = ds.filter(_.site == "link_key_payload")
+    assert(d.size == 1, s"expected one decision for link_key_payload, got $d")
+    assert(d.head.path == "salted", d.head.toString)
+    assert(ds.map(_.site).toSet == Set("wd_ref_labels", "link_key_payload"), ds)
     // the plan still answers: one node per entity row, null qid included
     assert(flat.count() == rows.size)
     assert(flat.filter($"entity" === e(0).name && $"wiki_status" === "found")
@@ -78,18 +80,16 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       EntityRow("u2", "de", "i2", e(1).name, e(1).qid, e(1).typ, e(1).name, 0, 1, "explicit", 1))
       .toDF().withColumn("p_extract", lit("a" * 150))
     val rec = new Linking.JoinRecorder
-    val flat = Linking.linkFlat(spark, entities, prep, spark.emptyDataFrame,
-      KgConfig.default, rec)
+    val flat = Linking.linkFlat(spark, entities, prep, KgConfig.default, rec)
     val shuffles = collect(flat.queryExecution.executedPlan) {
       case s: ShuffleExchangeLike => s
     }
     assert(shuffles.isEmpty, s"the flat plan shuffles: $shuffles")
     val ds = rec.drain()
-    for (site <- Seq("link_key_flags", "link_key_payload")) {
-      val d = ds.filter(_.site == site)
-      assert(d.size == 1 && d.head.broadcast, s"$site: $d")
-    }
-    assert(!ds.exists(_.site == "l5_scrapes"), ds)
+    val d = ds.filter(_.site == "link_key_payload")
+    assert(d.size == 1 && d.head.broadcast, s"link_key_payload: $d")
+    // no flags join-back and no L5 scrape join
+    assert(ds.map(_.site).toSet == Set("wd_ref_labels", "link_key_payload"), ds)
     assert(flat.count() == 2)
   }
 
@@ -140,11 +140,10 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the persisted key tables carry their real sizes: no row-count probe
     // (512 B per row) stands in for them
     val keys = corpus.aliases.map(a => (a.canonical, a.qid)).distinct.size
-    for (site <- Seq("link_key_flags", "link_key_payload")) {
-      val d = plan.filter(_._2 == site)
-      assert(d.map(_._1) == Seq("dict_join_broadcast"), s"$site: $d")
-      assert(d.head._3 != keys * 512.0, s"$site: $d")
-    }
+    val d = plan.filter(_._2 == "link_key_payload")
+    assert(d.map(_._1) == Seq("dict_join_broadcast"), s"link_key_payload: $d")
+    assert(d.head._3 != keys * 512.0, s"link_key_payload: $d")
+    assert(!plan.exists(_._2 == "link_key_flags"), s"flags join-back: $plan")
     assert(!plan.exists(_._1 == "dict_join_salted"), s"salted sites: $plan")
   }
 }

@@ -25,8 +25,8 @@ class ResumeSpec extends SparkSpec {
     // rebuild the rest
     val manifest = Files.readString(java.nio.file.Paths.get(dir, "_snapshots.jsonl"))
     assert(manifest.contains("\"stage\":\"extract_edges\""))
-    // broadcast regime: the L5 text rides on kg_entities — no separate
-    // kg_scrapes stage table (it exists only in the salted regime)
+    // the L5 text rides on kg_entities — no separate kg_scrapes stage
+    // table (in either regime)
     assert(!manifest.contains("\"stage\":\"extract_scrapes\""))
     assert(!Files.exists(java.nio.file.Paths.get(dir, "kg_scrapes")))
     val t2 = new KgTables(spark, dir)
@@ -65,7 +65,7 @@ class ResumeSpec extends SparkSpec {
       "the resume persisted RDDs")
   }
 
-  test("salted-regime materialized run writes kg_scrapes and matches broadcast") {
+  test("salted-regime materialized run writes no kg_scrapes and matches broadcast") {
     val corpus = SyntheticCorpus.generate(nPages = 40, seed = 7L)
     val pages = spark.createDataset(corpus.pages).repartition(4)
     val dicts = Pipeline.dictsFromCorpus(spark, corpus)
@@ -82,9 +82,12 @@ class ResumeSpec extends SparkSpec {
     val bcast = nodesOf(KgConfig.default, dirB)
     assert(salted == bcast)
     assert(salted.nonEmpty)
-    // the salted regime keeps entities narrow and materializes the text once
-    assert(Files.exists(java.nio.file.Paths.get(dirS, "kg_scrapes")))
-    assert(!Files.exists(java.nio.file.Paths.get(dirB, "kg_scrapes")))
+    // both regimes carry the L5 text on kg_entities, gated per key
+    for (dir <- Seq(dirS, dirB)) {
+      assert(!Files.exists(java.nio.file.Paths.get(dir, "kg_scrapes")), dir)
+      assert(!Files.readString(java.nio.file.Paths.get(dir, "_snapshots.jsonl"))
+        .contains("\"stage\":\"extract_scrapes\""), dir)
+    }
   }
 
   test("a resumed link stage still records its link_plan rows") {
@@ -98,7 +101,7 @@ class ResumeSpec extends SparkSpec {
         .as[(String, String)].collect().toSet
     val first = planRows(Pipeline.runMaterialized(spark, pages, dicts,
       new KgTables(spark, dir), cfg, runId = "r1"))
-    assert(first.contains(("dict_join_salted", "link_key_flags")))
+    assert(!first.exists(_._2 == "link_key_flags"), first)
     assert(first.contains(("dict_join_salted", "link_key_payload")))
 
     // simulate a kill after kg_nodes reached the manifest but before

@@ -12,10 +12,8 @@ class LinkOpsSpec extends SparkSpec {
     val (_, jobs) = JobFence.jobsOf(spark) {
       LinkOps.kgLinkChain(spark, dir).queryExecution.executedPlan
     }
-    // spark.read.parquet infers the file schema with a job on every read,
-    // and the query reads the documents table twice; those jobs belong to
-    // the input, not to the link stage
-    val schemaReads = jobs.filter(_.startsWith("parquet at Tables.scala"))
-    assert(jobs == schemaReads, s"the second build ran jobs: $jobs")
+    // neither the link artifacts nor the documents table's file schema
+    // (inferred once per session) are built again
+    assert(jobs.isEmpty, s"the second build ran jobs: $jobs")
   }
 }
