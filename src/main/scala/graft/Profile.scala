@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicReference
+import scala.util.matching.Regex
 
 /** The profiling entry: one SparkSession, four modes.
   *
@@ -78,7 +79,7 @@ object Profile {
     val pages = spark.range(100).repartition(8)
       .mapPartitions(it => it.map(i => factory.page(i.toInt)))(Encoders.product[PageRow])
     val docOut = KgExtract.run(spark, pages, dicts, cfg).toDF()
-    Linking.linkFlat(spark, Pipeline.entityRows(docOut, prep), prep, cfg)
+    Linking.linkFlat(spark, Pipeline.entityRows(docOut, prep), prep)
   }
 
   private def emit(out: Option[String], file: String, text: String): Unit =
@@ -89,14 +90,67 @@ object Profile {
 
   private def header(name: String): String = s"\n================ $name ================\n"
 
-  /** The formatted physical plan of each target, as planned (pre-AQE). */
+  /** The formatted physical plan of each target, as planned (pre-AQE),
+    * each cached relation printed as a leaf ([[cachedAsLeaves]]) and with
+    * stable ids ([[stableIds]]), so two runs print the same text. */
   def plan(spark: SparkSession, names: Seq[String], sf: String = DefaultSf,
       out: Option[String] = None): String =
     targets(spark, sf, names).map { case (name, df) =>
-      val text = df().queryExecution.explainString(FormattedMode)
+      val text = stableIds(cachedAsLeaves(
+        df().queryExecution.explainString(FormattedMode)))
       emit(out, s"$name.txt", text)
       header(name) + text
     }.mkString
+
+  /** A formatted plan with each InMemoryRelation as a leaf: the cached
+    * plan under it, its tree lines and its nodes' detail entries, is
+    * dropped, and the operator ids left are renumbered 1..n in order. That
+    * plan is the cache's own, already executed, so its final AQE shape can
+    * vary from run to run. ExplainUtils numbers a node's inner children
+    * right after the node, so the cached plan under relation r holds
+    * exactly the ids r+1 .. the id of its root, the line after r. */
+  private[graft] def cachedAsLeaves(text: String): String = {
+    val (tree, details) = text.split("\n", -1).toIndexedSeq.span(_.nonEmpty)
+    val nodeId = """(?<= \()\d+(?=\))""".r
+    val entryId = """(?<=^\()\d+(?=\) )""".r
+    def id(re: Regex, line: String): Option[Int] = re.findFirstIn(line).map(_.toInt)
+    val removed = tree.indices.filter(tree(_).contains(" InMemoryRelation ("))
+      .flatMap(i => id(nodeId, tree(i)).zip(tree.lift(i + 1).flatMap(id(nodeId, _))))
+      .flatMap { case (r, root) => r + 1 to root }.toSet
+    if (removed.isEmpty) return text
+    // an id-less tree line (an AQE "== Final Plan ==" header) goes with
+    // the node below it
+    val keptTree = tree.indices.filterNot(i =>
+      tree.iterator.drop(i).flatMap(id(nodeId, _)).nextOption().exists(removed))
+      .map(tree)
+    var dropping = false
+    val keptDetails = details.filter { line =>
+      id(entryId, line).foreach(i => dropping = removed(i))
+      !dropping
+    }
+    val newId = (keptTree.flatMap(id(nodeId, _)) ++ keptDetails.flatMap(id(entryId, _)))
+      .distinct.sorted.zipWithIndex.map { case (old, i) => s"$old" -> s"${i + 1}" }.toMap
+    def renumbered(re: Regex)(line: String): String =
+      re.replaceAllIn(line, m => newId.getOrElse(m.matched, m.matched))
+    (keptTree.map(renumbered(nodeId)) ++ keptDetails.map(renumbered(entryId)))
+      .mkString("\n")
+  }
+
+  /** `text` with the parts of a formatted plan that differ between two
+    * runs of one build made equal: expression ids and exchange plan_ids,
+    * both taken from JVM-wide counters that the cached plans' own AQE
+    * re-planning advances by a varying amount, renumbered in order of
+    * appearance, and lambda class names without their JVM-assigned suffix
+    * and identity hash. */
+  private[graft] def stableIds(text: String): String = {
+    def renumbered(text: String, prefix: String): String = {
+      val re = (Regex.quote(prefix) + """(\d+)""").r
+      val order = re.findAllMatchIn(text).map(_.group(1)).distinct.zipWithIndex.toMap
+      re.replaceAllIn(text, m => s"$prefix${order(m.group(1)) + 1}")
+    }
+    """\$\$Lambda[^@\s,]*@[0-9a-f]+""".r.replaceAllIn(
+      renumbered(renumbered(text, "plan_id="), "#"), Regex.quoteReplacement("$$Lambda"))
+  }
 
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()

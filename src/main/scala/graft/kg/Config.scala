@@ -27,13 +27,11 @@ final case class KgConfig(
     // wiki dictionaries via Wikidata sitelinks (data-bound: only languages
     // with a dictionary can be listed here).
     extraLanguages: Seq[String] = Nil,
-    nSalt: Int = 8,                     // skew salting factor of the gated joins
-    // Linking.dictJoin gate of the two joins whose probe can hold a hot
-    // key (link_key_payload, wd_ref_labels): dictionaries estimated under
-    // this are broadcast; larger ones, or ones without an estimate, take
-    // the salted shuffle-hash path
-    dictBroadcastMaxBytes: Long = 64L << 20,
-    // tests: pin those two joins to the salted path at small scale
+    // pin the two gated joins whose probe can hold a hot key
+    // (link_key_payload, wd_ref_labels) to the salted shuffle-hash path,
+    // which Linking.decide otherwise takes only for a dictionary too large
+    // to broadcast: tests and benchmarks run the at-scale shape at small
+    // scale
     forceSaltedJoins: Boolean = false
 )
 

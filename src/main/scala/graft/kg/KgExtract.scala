@@ -23,22 +23,6 @@ object KgExtract {
   final case class DocOut(url: String, scrape: String,
       entities: Seq[EntityRow], triples: Seq[TripleRow])
 
-  /** A10 runtime counters (wikipedia/service.py:786-931 batch stats): the
-    * Spark-native form of the reference's per-service counters — named
-    * accumulators, visible in the UI/history server per stage. */
-  final case class Counters(
-      pages: org.apache.spark.util.LongAccumulator,
-      mentions: org.apache.spark.util.LongAccumulator,
-      entities: org.apache.spark.util.LongAccumulator,
-      triples: org.apache.spark.util.LongAccumulator)
-  object Counters {
-    def apply(spark: SparkSession): Counters = Counters(
-      spark.sparkContext.longAccumulator("kg.pages_processed"),
-      spark.sparkContext.longAccumulator("kg.mentions_total"),
-      spark.sparkContext.longAccumulator("kg.entities_emitted"),
-      spark.sparkContext.longAccumulator("kg.triples_emitted"))
-  }
-
   /** Broadcastable gazetteer: automaton + per-pattern candidate lists +
     * the L14 TF-IDF disambiguation tables (candidate description vectors,
     * L2-normalized, and the description-corpus IDF map). The vectors exist
@@ -231,8 +215,7 @@ object KgExtract {
       spark: SparkSession,
       pages: Dataset[PageRow],
       dicts: Pipeline.Dicts,
-      cfg: KgConfig,
-      counters: Option[Counters] = None): Dataset[DocOut] = {
+      cfg: KgConfig): Dataset[DocOut] = {
     import spark.implicits._
     val bcGaz: Broadcast[Gazetteer] = spark.sparkContext.broadcast(
       buildGazetteer(dicts.aliases, dicts.wdDesc, Some(dicts.idf)))
@@ -240,7 +223,6 @@ object KgExtract {
     val bcPartOf = spark.sparkContext.broadcast(dicts.wdPartOf)
     val bcCfg = spark.sparkContext.broadcast(cfg)
     val bcQidInfo = spark.sparkContext.broadcast(qidInfo(dicts.aliases))
-    val cnt = counters.getOrElse(Counters(spark))
 
     pages.mapPartitions { it =>
       val gaz = bcGaz.value
@@ -253,10 +235,6 @@ object KgExtract {
         val ms = rawMentions(text, gaz, partOf, c.tfidfWeight)
         val (ents, trips) = DocProcess.process(p.url, text, p.lang, ms, pats,
           partOf, c, qidInfo)
-        cnt.pages.add(1)
-        cnt.mentions.add(ms.size)
-        cnt.entities.add(ents.size)
-        cnt.triples.add(trips.size)
         DocOut(p.url, text.take(1200), ents, trips)
       }
     }

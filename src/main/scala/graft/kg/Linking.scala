@@ -2,7 +2,6 @@ package graft.kg
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Entity linking as dictionary joins + staged left-anti fallback narrowing
   * (SURVEY §2.4 L1-L13): the deterministic Spark re-expression of the
@@ -29,16 +28,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * Scale design, one rule: salt only a join whose probe side can hold a
   * hot key. The key chain probes with distinct keys, which hold none, so
   * its dictionary joins are plain left joins and Spark picks broadcast or
-  * shuffle at runtime. Two sites go through the size-gated `dictJoin`:
-  * the mention-row join-back, where a hub key (country, person)
-  * repeats over many mention rows, and `wd_ref_labels`, whose probe is the
-  * exploded referenced ids of the Wikidata dictionary, where hub qids
-  * repeat. A dictionary whose plan-estimated size fits under
-  * `cfg.dictBroadcastMaxBytes` is broadcast; a larger one, or one without
-  * a size estimate, takes the salted shuffle-hash path (`saltedJoin`),
-  * whose salt spreads a hot key over `cfg.nSalt` buckets (SURVEY §4.2).
-  * `cfg.forceSaltedJoins` pins the salted path so tests exercise it at
-  * small scale (PipelineParitySpec).
+  * shuffle at runtime. Two sites are gated: the mention-row join-back,
+  * where a hub key (country, person) repeats over many mention rows, and
+  * `wd_ref_labels`, whose probe is the exploded referenced ids of the
+  * Wikidata dictionary, where hub qids repeat. Each gate is decided once
+  * per prepared link ([[Prepared.decisions]]) by [[decide]]: a dictionary
+  * whose plan-estimated size fits under `BroadcastMaxBytes` is broadcast;
+  * a larger one, or one without a size estimate, takes the salted
+  * shuffle-hash path ([[saltedJoin]]), whose salt spreads a hot key over
+  * `NSalt` buckets (SURVEY §4.2). `cfg.forceSaltedJoins` pins the salted
+  * path so tests exercise it at small scale (PipelineParitySpec).
   */
 object Linking {
 
@@ -99,45 +98,26 @@ object Linking {
     call_function("clean_categories", categories)
   }
 
-  private def containsMap(dt: DataType): Boolean = dt match {
-    case _: MapType => true
-    case a: ArrayType => containsMap(a.elementType)
-    case s: StructType => s.fields.exists(f => containsMap(f.dataType))
-    case _ => false
-  }
+  /** Skew salting factor of the gated joins' salted path. */
+  private val NSalt = 8
 
-  /** Default probe-salt source: hash of all hashable (non-map) probe
-    * columns — row-unique in practice, so hot-key rows spread evenly. A
-    * caller with a known row-id column should pass it explicitly (cheaper
-    * than hashing fat rows). */
-  private def defaultSaltSource(probe: DataFrame): Column = {
-    val cols = probe.schema.fields
-      .filter(f => !containsMap(f.dataType)).map(f => probe(f.name))
-    xxhash64(cols.toIndexedSeq: _*)
-  }
+  /** The gated joins broadcast a dictionary whose plan-estimated size
+    * fits under this. */
+  private[kg] val BroadcastMaxBytes: Long = 64L << 20
 
-  /** Salted equi-join for skewed build-side keys: explodes the dictionary
-    * side `nSalt` ways and routes probe rows by a hash bucket, so one hot
-    * key (e.g. "Deutschland" at web scale) spreads over nSalt reducers.
-    * The probe salt derives from `saltSource` (a row-unique expression —
-    * NOT the join key, which would put every hot-key row in one bucket).
-    * With nSalt=1 this degenerates to a plain equi-join; output is
-    * invariant in nSalt (property-tested). */
+  /** Salted equi-join for skewed build-side keys, over an equi-join
+    * condition `on` (e.g. a multi-column null-safe key): explodes the
+    * dictionary side `nSalt` ways and routes probe rows by a hash bucket
+    * of `saltSource`, so one hot key (e.g. "Deutschland" at web scale)
+    * spreads over nSalt reducers. `saltSource` must vary over a hot key's
+    * rows (a row id, the page url): NOT the join key, which would put
+    * every hot-key row in one bucket. With nSalt=1 this degenerates to a
+    * plain equi-join; output is invariant in nSalt (property-tested). */
   def saltedJoin(
-      probe: DataFrame, dict: DataFrame, probeKey: Column, dictKey: Column,
-      nSalt: Int, joinType: String = "left",
-      saltSource: Option[Column] = None): DataFrame =
-    saltedJoinOn(probe, dict, probeKey === dictKey, nSalt, joinType, saltSource)
-
-  /** [[saltedJoin]] over an arbitrary equi-join condition `on` (e.g. a
-    * multi-column null-safe key); the salt equality is added to it. */
-  def saltedJoinOn(
       probe: DataFrame, dict: DataFrame, on: Column,
-      nSalt: Int, joinType: String,
-      saltSource: Option[Column]): DataFrame = {
-    val src = saltSource.getOrElse(defaultSaltSource(probe))
+      nSalt: Int, saltSource: Column, joinType: String = "left"): DataFrame = {
     val saltedProbe = probe.withColumn("__salt",
-      pmod(xxhash64(src), lit(nSalt)).cast("int"))
+      pmod(xxhash64(saltSource), lit(nSalt)).cast("int"))
     // shuffle_hash: dictionary rows are the smaller side per salt bucket;
     // hashing them avoids sort-merge's sort of the fat probe rows
     val saltedDict = dict.withColumn("__salt",
@@ -147,70 +127,36 @@ object Linking {
       joinType).drop("__salt")
   }
 
-  /** One dictJoin plan decision: which path a join site took
-    * ("broadcast" | "salted" | "shuffle_hash") and the size evidence behind
-    * it. Surfaced by Pipeline into the metrics table so plan drift at scale
-    * is observable, not silent. */
+  /** The plan decision of one gated join site: "broadcast" or "salted",
+    * and the size estimate behind it. [[Prepared.decisions]] holds one per
+    * site, and Pipeline writes them as `link_plan` metric rows, so plan
+    * drift at scale is observable, not silent. */
   final case class JoinDecision(site: String, path: String, estBytes: BigInt) {
     def broadcast: Boolean = path == "broadcast"
   }
 
-  /** Per-run join-decision recorder: created by the caller that will
-    * surface the decisions (Pipeline.run / runMaterialized) and threaded
-    * through the link stage explicitly. The round-3 version was a
-    * JVM-global queue — decisions recorded by a concurrent pipeline, a
-    * bench warm-up, or a prepare() in the same JVM were attributed to
-    * whichever run drained next. */
-  class JoinRecorder {
-    private val q = new java.util.concurrent.ConcurrentLinkedQueue[JoinDecision]()
-    def add(d: JoinDecision): Unit = q.add(d)
-    /** Drain all decisions recorded so far (plan-construction time,
-      * driver-side — dictJoin decides eagerly when the plan is built). */
-    def drain(): Seq[JoinDecision] = {
-      val buf = Seq.newBuilder[JoinDecision]
-      var d = q.poll()
-      while (d != null) { buf += d; d = q.poll() }
-      buf.result()
-    }
-  }
-  object JoinRecorder {
-    /** Discards all decisions — for callers that don't surface plan
-      * metrics (utility/test call sites). */
-    val noop: JoinRecorder = new JoinRecorder {
-      override def add(d: JoinDecision): Unit = ()
-    }
-  }
-
-  /** Size-gated dictionary join, for a join whose probe side can hold a
-    * hot key (the two sites of the object header): broadcast when the
-    * dictionary's plan-estimated size fits under
-    * `cfg.dictBroadcastMaxBytes` and `cfg.forceSaltedJoins` is off; salted
-    * shuffle-hash otherwise. The decision reads the optimized plan's
-    * estimate alone and starts no job. A plan without size statistics
-    * estimates the defaultSizeInBytes sentinel (8 EiB), which exceeds any
-    * budget, so it takes the salted path, correct at any size. Every
-    * decision is recorded in the caller's per-run [[JoinRecorder]] and
-    * surfaced as a metrics row per join site. */
-  def dictJoin(
-      probe: DataFrame, dict: DataFrame, probeKey: Column, dictKey: Column,
-      cfg: KgConfig, saltSource: Column, joinType: String = "left",
-      site: String = "anon",
-      rec: JoinRecorder = JoinRecorder.noop): DataFrame =
-    dictJoinOn(probe, dict, probeKey === dictKey, cfg, saltSource, joinType,
-      site, rec)
-
-  /** [[dictJoin]] over an arbitrary equi-join condition `on` (e.g. a
-    * multi-column null-safe key). */
-  def dictJoinOn(
-      probe: DataFrame, dict: DataFrame, on: Column,
-      cfg: KgConfig, saltSource: Column, joinType: String,
-      site: String, rec: JoinRecorder): DataFrame = {
+  /** The gate of a join whose probe side can hold a hot key (the two
+    * sites of the object header): broadcast when `dict`'s plan-estimated
+    * size fits under `BroadcastMaxBytes` and `cfg.forceSaltedJoins` is
+    * off, salted otherwise. It reads the optimized plan's estimate alone
+    * and starts no job. A plan without size statistics estimates the
+    * defaultSizeInBytes sentinel (8 EiB), which exceeds any budget, so it
+    * takes the salted path, correct at any size. */
+  private[kg] def decide(site: String, dict: DataFrame,
+      cfg: KgConfig): JoinDecision = {
     val est = dict.queryExecution.optimizedPlan.stats.sizeInBytes
-    val small = !cfg.forceSaltedJoins && est <= cfg.dictBroadcastMaxBytes
-    rec.add(JoinDecision(site, if (small) "broadcast" else "salted", est))
-    if (small) probe.join(broadcast(dict), on, joinType)
-    else saltedJoinOn(probe, dict, on, cfg.nSalt, joinType, Some(saltSource))
+    val small = !cfg.forceSaltedJoins && est <= BroadcastMaxBytes
+    JoinDecision(site, if (small) "broadcast" else "salted", est)
   }
+
+  /** A gated dictionary join on `on`, by the decision [[decide]] took on
+    * this `dict`: a broadcast join, or [[saltedJoin]] salted by
+    * `saltSource`. */
+  def dictJoin(
+      probe: DataFrame, dict: DataFrame, on: Column, decision: JoinDecision,
+      saltSource: Column, joinType: String = "left"): DataFrame =
+    if (decision.broadcast) probe.join(broadcast(dict), on, joinType)
+    else saltedJoin(probe, dict, on, NSalt, saltSource, joinType)
 
   /** The L3 prefix index (lengths 3..40 per title, ~38 rows/title): the
     * largest prepared artifact — ~4·10^9 rows at 10^8 titles, built ONCE
@@ -283,8 +229,10 @@ object Linking {
     * decides `resolved4`; `keyPayload` adds Wikidata and DBpedia to it.
     * [[linkFlat]] reads only `keyPayload`, the extract's L5 gate only
     * `unresolved`, and [[Pipeline.prepareLink]] persists only the two key
-    * tables. `decisions` holds the gated join site decided here
-    * (`wd_ref_labels`), for each run's `link_plan` rows. */
+    * tables. `decisions` holds the gate of both gated joins, which every
+    * run over this link takes and writes as its `link_plan` rows:
+    * `wd_ref_labels`, decided when the Wikidata dictionary is enriched,
+    * and `link_key_payload`, decided on first read of `payloadJoin`. */
   final case class Prepared(
       // `primary` is NOT consumed by the link chain (its payload is
       // pre-composed into l1Dict/osPick) — kept only as the build lineage
@@ -296,11 +244,21 @@ object Linking {
       // (mlx_qid_l, mlx_l:struct<label,url,description>) dictionary built
       // from that language's wiki pages via Wikidata sitelinks
       mlExtra: Seq[(String, DataFrame)],
-      keys: DataFrame, cfg: KgConfig, decisions: Seq[JoinDecision]) {
+      keys: DataFrame, cfg: KgConfig, refLabelsJoin: JoinDecision) {
     lazy val keyWiki: DataFrame = wikipedia(keys, this)
     lazy val keyPayload: DataFrame = dbpedia(wikidata(keyWiki, this), this)
     /** The two key tables, in build order. */
     def all: Seq[DataFrame] = Seq(keyWiki, keyPayload)
+    /** `keyPayload` with its key renamed, the side [[linkFlat]] joins back. */
+    private[kg] lazy val payloadDict: DataFrame = keyPayload
+      .withColumnsRenamed(Map("entity" -> "k_entity", "qid" -> "k_qid"))
+    /** The gate of the mention-row join-back, decided on first read:
+      * [[Pipeline.prepareLink]] reads it once the key tables are persisted
+      * and counted, so it sees their real size. */
+    lazy val payloadJoin: JoinDecision =
+      decide("link_key_payload", payloadDict, cfg)
+    /** Both gated joins' decisions, in the order a run writes them. */
+    def decisions: Seq[JoinDecision] = Seq(refLabelsJoin, payloadJoin)
     /** The (entity, qid) keys L1-L4 leave unresolved: the only keys whose
       * rows read the L5 page text. Collected once from `keyWiki`, so
       * O(gazetteer keys), the bound of the alias automaton the extract
@@ -310,6 +268,14 @@ object Linking {
       keyWiki.filter(!col("resolved4")).select("entity", "qid").collect()
         .iterator.map(r => (r.getString(0), r.getString(1))).toSet
   }
+
+  /** `cfg` reduced to the fields [[prepare]] and [[linkFlat]] read: configs
+    * that differ only in extract settings (entity types, inference,
+    * relation limits) link alike, so they can share one [[Prepared]]. */
+  private[kg] def linkConfig(cfg: KgConfig): KgConfig = KgConfig(
+    language = cfg.language, minExtractLen = cfg.minExtractLen,
+    extraLanguages = cfg.extraLanguages,
+    forceSaltedJoins = cfg.forceSaltedJoins)
 
   /** Build every dictionary-derived table of the link stage, and the
     * per-key tables over `keys` (distinct (entity, qid) pairs). */
@@ -322,7 +288,6 @@ object Linking {
       synonyms: DataFrame,
       keys: DataFrame,
       cfg: KgConfig): Prepared = {
-    val rec = new JoinRecorder
     val minLen = cfg.minExtractLen
     val primary = wiki.filter(col("lang") === cfg.language)
       .select(col("title").as("w_title"), col("url").as("w_url"),
@@ -417,14 +382,14 @@ object Linking {
     }
     val mlLangs = cfg.extraLanguages
       .filter(l => l != cfg.language && l != secondaryLang).distinct
-    val enrichedWd = enrichWdDict(wd, cfg, rec)
+    val (enrichedWd, refLabelsJoin) = enrichWdDict(wd, cfg)
     Prepared(
       primary = primary, l1Dict = l1Dict, l2Dict = l2Dict,
       osPick = opensearchPick(lookupTerms, primary, minLen),
       enrichedWd = enrichedWd,
       dbpSel = dbpSel, lookupPick = lookupPick,
       mlExtra = mlLangs.map(l => l -> mlTable(l)),
-      keys = keys, cfg = cfg, decisions = rec.drain())
+      keys = keys, cfg = cfg, refLabelsJoin = refLabelsJoin)
   }
 
   /** L1-L4 + L7: Wikipedia linking with the reference's staged fallback
@@ -620,9 +585,10 @@ object Linking {
     * as plain columns. O(dictionary), runs before any fat entity row is
     * touched; never collects to the driver (the round-1 version
     * materialized the full label map driver-side — a driver OOM at the
-    * 10^8-row dictionary scale). */
-  def enrichWdDict(wd: DataFrame, cfg: KgConfig,
-      rec: JoinRecorder = JoinRecorder.noop): DataFrame = {
+    * 10^8-row dictionary scale). Returns the enriched dictionary and the
+    * decision of its gated label join (`wd_ref_labels`). */
+  private def enrichWdDict(wd: DataFrame,
+      cfg: KgConfig): (DataFrame, JoinDecision) = {
     val scalarCols = Seq("aliases", "coordinates", "image_url",
       "date_of_birth", "date_founded", "date_of_death", "end_time",
       "official_website", "gnd_id", "isni_id")
@@ -650,8 +616,9 @@ object Linking {
         .as(Seq("pos", "sid")))
       .select(col("wd_qid"), col("pos"),
         col("sid.src").as("src"), col("sid.id").as("id"))
-    val joined = dictJoin(pairs, labels, col("id"), col("ref_qid"), cfg,
-      xxhash64(col("wd_qid"), col("pos")), site = "wd_ref_labels", rec = rec)
+    val refLabelsJoin = decide("wd_ref_labels", labels, cfg)
+    val joined = dictJoin(pairs, labels, col("id") === col("ref_qid"),
+      refLabelsJoin, xxhash64(col("wd_qid"), col("pos")))
     def regroupedOf(tag: String, name: String): Column =
       transform(filter(col("all"), x => x("src") === tag),
         x => struct(x("id").as("id"), x("label").as("label"))).as(name)
@@ -667,13 +634,14 @@ object Linking {
     def restored(g: String, name: String): Column =
       coalesce(col(g),
         array().cast("array<struct<id:string,label:string>>")).as(name)
-    base.join(regrouped, col("wd_qid") === col("g_qid"), "left")
+    val enriched = base.join(regrouped, col("wd_qid") === col("g_qid"), "left")
       .select(Seq(col("wd_qid"), col("wd_labels"), col("wd_descriptions"),
         restored("g_instance_of", "wd_instance_of"),
         restored("g_subclass_of", "wd_subclass_of"),
         restored("g_part_of", "wd_part_of"),
         restored("g_has_part", "wd_has_part")) ++
         scalarCols.map(c => col(s"wd_$c")): _*)
+    (enriched, refLabelsJoin)
   }
 
   /** L9-L12: Wikidata enrichment — qid from gazetteer/wiki pageprops, then
@@ -761,12 +729,10 @@ object Linking {
       spark: SparkSession,
       entities: DataFrame,
       prep: Prepared,
-      scrapes: DataFrame,
-      cfg: KgConfig,
-      rec: JoinRecorder = JoinRecorder.noop): DataFrame =
+      scrapes: DataFrame): DataFrame =
     nest(linkFlat(spark,
       entities.join(scrapes, col("url") === col("p_url"), "left").drop("p_url"),
-      prep, cfg, rec))
+      prep))
 
   /** The link chain with a FLAT output schema: one top-level column per
     * node field. This is the form Pipeline.run CACHES: Spark's in-memory
@@ -782,9 +748,10 @@ object Linking {
     * few fields scan only those columns.
     *
     * One shape in every regime (object header): the per-key payload join,
-    * then the L5 projection. The join-back goes through [[dictJoinOn]] on
-    * the null-safe key, so entities without a qid still meet their key
-    * row; `prep` must hold every key the rows carry. L5 (fallback 4) is the
+    * then the L5 projection. The join-back goes through [[dictJoin]] on
+    * the null-safe key, by the prepared decision `prep.payloadJoin`, so
+    * entities without a qid still meet their key row; `prep` must hold
+    * every key the rows carry, and its config is the one linked under. L5 (fallback 4) is the
     * deterministic "scrape": the page text the extract pass already
     * produced (so the 100 TB html column is read once per extract pass),
     * consulted only by rows that L1-L4 left unresolved. The rows carry it
@@ -794,17 +761,13 @@ object Linking {
   def linkFlat(
       spark: SparkSession,
       entities: DataFrame, // with p_extract: the L5 text of the row's page
-      prep: Prepared,
-      cfg: KgConfig,
-      rec: JoinRecorder = JoinRecorder.noop): DataFrame = {
-    prep.decisions.foreach(rec.add)
-    val linked = dictJoinOn(entities,
-      prep.keyPayload.withColumnsRenamed(Map("entity" -> "k_entity", "qid" -> "k_qid")),
+      prep: Prepared): DataFrame = {
+    val linked = dictJoin(entities, prep.payloadDict,
       col("entity") <=> col("k_entity") && col("qid") <=> col("k_qid"),
-      cfg, col("url"), "left", "link_key_payload", rec).drop("k_entity", "k_qid")
+      prep.payloadJoin, col("url")).drop("k_entity", "k_qid")
     val needs5 = !col("resolved4")
     val ok5 = needs5 && col("p_extract").isNotNull &&
-      length(col("p_extract")) >= cfg.minExtractLen
+      length(col("p_extract")) >= prep.cfg.minExtractLen
     linked.select(
       col("url"), col("lang"), col("entity_id").as("id"), col("entity"),
       col("entity_type"), col("inferred"), col("citation"),

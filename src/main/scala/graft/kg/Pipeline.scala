@@ -26,9 +26,9 @@ object Pipeline {
     * restricted to alias-table qids, descriptions to ambiguous surfaces'
     * candidates, idf the distributed-df vocabulary map — driver memory
     * O(gazetteer + vocabulary), not O(all dictionary entities). Everything
-    * derived from the dictionaries alone (the link artifacts per config,
-    * the connected components) is built once per Dicts, on first use, and
-    * shared by every run over it. */
+    * derived from the dictionaries alone (the link artifacts per link
+    * config, the connected components) is built once per Dicts, on first
+    * use, and shared by every run over it. */
   final case class Dicts(
       aliases: Seq[AliasRow],
       patterns: Seq[PatternRow],
@@ -40,8 +40,8 @@ object Pipeline {
       wdPartOf: Map[String, Set[String]],
       wdDesc: Map[String, String],
       idf: Map[String, Double]) {
-    /** The link artifacts of [[Pipeline.prepareLink]], one per config,
-      * each built on first use. */
+    /** The link artifacts of [[Pipeline.prepareLink]], one per link
+      * config ([[Linking.linkConfig]]), each built on first use. */
     private[kg] val links = new ConcurrentHashMap[KgConfig, Linking.Prepared]()
 
     /** Connected components of the alias → canonical and redirect graph
@@ -96,24 +96,27 @@ object Pipeline {
       idf = lt.idf)
   }
 
-  /** The link artifacts, built once per Dicts and config on first use
-    * ([[Dicts.links]]), so every run over these dictionaries, with or
+  /** The link artifacts, built once per Dicts and link config on first
+    * use ([[Dicts.links]]), so every run over these dictionaries, with or
     * without `prepared`, links over the same persisted AND materialized
-    * key tables, whose join-backs then see real sizes. Only the two key
-    * tables are kept: the dictionary tables are read once, by the key
-    * chain. The key payload is planned over the cached Wikipedia result,
-    * so it follows that one. The keys are the distinct (canonical, qid)
-    * pairs of the alias table: every (entity, qid) an extract can produce
-    * — explicit mentions take them from a gazetteer candidate, E4
-    * implicit entities from the alias-derived qid info. */
+    * key tables. Only the two key tables are kept: the dictionary tables
+    * are read once, by the key chain. The key payload is planned over the
+    * cached Wikipedia result, so it follows that one. Both gated joins are
+    * decided here, the payload join-back once the key tables are counted,
+    * from their real size (a plan estimate, no job). The keys are the
+    * distinct (canonical, qid) pairs of the alias table: every
+    * (entity, qid) an extract can produce — explicit mentions take them
+    * from a gazetteer candidate, E4 implicit entities from the
+    * alias-derived qid info. */
   def prepareLink(spark: SparkSession, dicts: Dicts,
       cfg: KgConfig = KgConfig.default): Linking.Prepared =
-    dicts.links.computeIfAbsent(cfg, _ => {
+    dicts.links.computeIfAbsent(Linking.linkConfig(cfg), linkCfg => {
       import spark.implicits._
       val keys = dicts.aliases.map(a => (a.canonical, a.qid)).distinct
       val p = Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
-        dicts.dbp, dicts.synonyms, keys.toDF("entity", "qid"), cfg)
+        dicts.dbp, dicts.synonyms, keys.toDF("entity", "qid"), linkCfg)
       p.all.foreach(_.persist(MEMORY_AND_DISK).count())
+      p.payloadJoin // decided now, on the counted key tables
       p
     })
 
@@ -234,8 +237,9 @@ object Pipeline {
     // the columns it reads. Lazy: a resume that skips every extract stage
     // builds no extract plan.
     lazy val docOut = store.extract(KgExtract.run(spark, pages, dicts, cfg).toDF())
-    // the link artifacts, shared by the entity rows' L5 gate and the link
-    // stage; lazy, so a resume that skips both builds none
+    // the link artifacts, shared by the entity rows' L5 gate, the link
+    // stage and the link_plan rows; lazy, so a resume that skips all
+    // three builds none
     lazy val prep = prepared.getOrElse(prepareLink(spark, dicts, cfg))
     val entities = store.stage("extract_entities", "kg_entities")(
       entityRows(docOut, prep))
@@ -246,24 +250,19 @@ object Pipeline {
       .select(EdgeColumns.map(col): _*)
 
     // ---- link: Wikipedia → Wikidata → DBpedia dictionary joins ----
-    // Lazy and shared with the metrics stage: when the link stage resumes
-    // but the metrics stage runs, the metrics stage builds the (never
-    // executed) link plan itself, so its link_plan decisions still reach
-    // the metrics; when both resume, no link artifact is built at all.
-    val rec = new Linking.JoinRecorder
-    lazy val flat = Linking.linkFlat(spark, entities, prep, cfg, rec)
-    val nodes = store.nodes(flat)
+    // by name: a resumed link stage builds no link plan
+    val nodes = store.nodes(Linking.linkFlat(spark, entities, prep))
 
     // ---- canonicalize: connected components over alias/redirect edges ----
     val components = store.leaf("canonicalize", "kg_components")(dicts.components)
 
     // ---- statistics + metrics ----
-    // dictJoin path decisions (broadcast vs salted, with the size evidence)
-    // are recorded at plan-construction time — surfaced as metric rows so
-    // plan drift at scale is observable in the run output, not just in
-    // executor logs
+    // the gated joins' decisions (broadcast vs salted, with the size
+    // evidence) are fixed in the prepared link and written as link_plan
+    // rows, so plan drift at scale is observable in the run output; a
+    // metrics stage that re-runs after a resumed link writes the same rows
+    // without planning the link
     val metrics = store.stage("metrics", "kg_metrics") {
-      flat // records the link decisions if the link stage resumed
       val stats =
         if (!finishStats) Nil
         else {
@@ -272,7 +271,7 @@ object Pipeline {
           store.cached ++= caches
           Seq(rows)
         }
-      (stats ++ store.lineage(edges) :+ joinDecisionRows(spark, runId, rec))
+      (stats ++ store.lineage(edges) :+ joinDecisionRows(spark, runId, prep))
         .reduce(_.unionByName(_))
     }
     Result(nodes, edges, components(), metrics,
@@ -300,9 +299,9 @@ object Pipeline {
     Encoders.product[TripleRow].schema.fieldNames.toSeq
 
   private def joinDecisionRows(spark: SparkSession, runId: String,
-      rec: Linking.JoinRecorder): DataFrame = {
+      prep: Linking.Prepared): DataFrame = {
     import spark.implicits._
-    rec.drain().map { d =>
+    prep.decisions.map { d =>
       MetricRow(runId, "link_plan", s"dict_join_${d.path}", d.site,
         d.estBytes.toDouble)
     }.toDF()

@@ -145,7 +145,7 @@ object LinkOps {
       .select(concat(lit("doc://"), col("doc_id")).as("p_url"),
         when(length(col("text")) > 0, col("text")).as("p_extract"))
     Linking.linkAll(spark, entities,
-      Pipeline.prepareLink(spark, fixtureDicts(spark), LinkCfg), scrapes, LinkCfg)
+      Pipeline.prepareLink(spark, fixtureDicts(spark), LinkCfg), scrapes)
   }
 
   /** The production link chain over documents-derived mentions. */

@@ -13,6 +13,21 @@ class ProfileSpec extends SparkSpec {
     assert(text.contains("BroadcastHashJoin"))
   }
 
+  test("plan prints each cached relation as a leaf, ids numbered 1..n") {
+    val text = Profile.plan(spark, Seq("link_flat_salted"))
+    val tree = text.linesIterator.dropWhile(_ != "== Physical Plan ==")
+      .takeWhile(_.nonEmpty).toSeq
+    assert(tree.count(_.contains(" InMemoryRelation (")) == 1, tree.mkString("\n"))
+    // the cached key table's plan was executed when it was counted
+    assert(!text.contains("== Final Plan =="), "a cached plan is still printed")
+    val ids = tree.flatMap(l => " \\((\\d+)\\)".r.findFirstMatchIn(l))
+      .map(_.group(1).toInt)
+    val entries = text.linesIterator.flatMap(l =>
+      "^\\((\\d+)\\) ".r.findPrefixMatchOf(l)).map(_.group(1).toInt).toSeq
+    assert(ids.sorted == (1 to ids.size) && entries == (1 to ids.size),
+      s"tree ids $ids, detail entries $entries")
+  }
+
   test("executed prints each final plan and its codegen summary") {
     val text = Profile.executed(spark, targets)
     targets.foreach(t => assert(text.contains(s"[codegen] $t: wholeStage=")))

@@ -1,14 +1,16 @@
 package graft.kg
 
 import graft.{JobFence, SparkSpec}
-import org.apache.spark.sql.Row
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** dictJoin size gate: a stats-less plan (the 8-EiB defaultSizeInBytes
-  * sentinel) takes the salted path without a job, and once persisted and
-  * counted reports its row count and broadcasts; the per-run decision
-  * recorder, and the join-path metric rows surfaced by Pipeline. */
+/** The gate of the dictJoin sites: a stats-less plan (the 8-EiB
+  * defaultSizeInBytes sentinel) takes the salted path without a job, and
+  * once persisted and counted reports its row count and broadcasts; the
+  * prepared link holds both sites' decisions, and every run writes them
+  * as its link_plan metric rows. */
 class DictJoinGateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -21,19 +23,17 @@ class DictJoinGateSpec extends SparkSpec {
       StructType(Seq(StructField("dk", StringType), StructField("dv", StringType))))
     assert(dict.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(Long.MaxValue) / 8)
 
-    val rec = new Linking.JoinRecorder
-    val (joined, jobs) = JobFence.jobsOf(spark) {
-      val j = Linking.dictJoin(probe, dict, col("k"), col("dk"),
-        KgConfig.default, col("k"), site = "gate_test", rec = rec)
+    val ((joined, d), jobs) = JobFence.jobsOf(spark) {
+      val d = Linking.decide("gate_test", dict, KgConfig.default)
+      val j = Linking.dictJoin(probe, dict, col("k") === col("dk"), d, col("k"))
       j.queryExecution.executedPlan
-      j
+      (j, d)
     }
     assert(jobs.isEmpty, s"building the plan ran jobs: $jobs")
     assert(joined.count() == 2)
-    val ds = rec.drain().filter(_.site == "gate_test")
-    assert(ds.size == 1)
-    assert(ds.head.path == "salted", "a stats-less dict must take the salted path")
-    assert(ds.head.estBytes > KgConfig.default.dictBroadcastMaxBytes)
+    assert(d.site == "gate_test")
+    assert(d.path == "salted", "a stats-less dict must take the salted path")
+    assert(d.estBytes > Linking.BroadcastMaxBytes)
   }
 
   test("stats-less dict (RDD-backed, sentinel estimate) falls back to row count") {
@@ -52,56 +52,33 @@ class DictJoinGateSpec extends SparkSpec {
       val stats = counted.queryExecution.optimizedPlan.stats
       assert(stats.rowCount.contains(BigInt(2)), s"cached plan stats: $stats")
 
-      val rec = new Linking.JoinRecorder
-      val (joined, jobs) = JobFence.jobsOf(spark) {
-        val j = Linking.dictJoin(probe, counted, col("k"), col("dk"),
-          KgConfig.default, col("k"), site = "gate_rows", rec = rec)
+      val ((joined, d), jobs) = JobFence.jobsOf(spark) {
+        val d = Linking.decide("gate_rows", counted, KgConfig.default)
+        val j = Linking.dictJoin(probe, counted, col("k") === col("dk"), d,
+          col("k"))
         j.queryExecution.executedPlan
-        j
+        (j, d)
       }
       assert(jobs.isEmpty, s"building the plan ran jobs: $jobs")
       assert(joined.count() == 2)
-      val ds = rec.drain().filter(_.site == "gate_rows")
-      assert(ds.size == 1)
-      assert(ds.head.broadcast, "the counted 2-row dict must broadcast")
-      assert(ds.head.estBytes <= KgConfig.default.dictBroadcastMaxBytes)
+      assert(d.broadcast, "the counted 2-row dict must broadcast")
+      assert(d.estBytes <= Linking.BroadcastMaxBytes)
     } finally dict.unpersist(blocking = true)
   }
 
   test("plan-estimated small dict broadcasts without a row-count job") {
-    val rec = new Linking.JoinRecorder
-    val probe = Seq(("a", 1)).toDF("k", "v")
     val dict = Seq(("a", "x")).toDF("dk", "dv") // LocalRelation: real stats
-    Linking.dictJoin(probe, dict, col("k"), col("dk"),
-      KgConfig.default, col("k"), site = "gate_local", rec = rec)
-    val d = rec.drain().filter(_.site == "gate_local").head
-    assert(d.broadcast)
+    assert(Linking.decide("gate_local", dict, KgConfig.default).broadcast)
   }
 
   test("forceSaltedJoins pins the salted path and is recorded") {
-    val rec = new Linking.JoinRecorder
     val probe = Seq(("a", 1)).toDF("k", "v")
     val dict = Seq(("a", "x")).toDF("dk", "dv")
-    val out = Linking.dictJoin(probe, dict, col("k"), col("dk"),
-      KgConfig.default.copy(forceSaltedJoins = true), col("k"),
-      site = "gate_salted", rec = rec)
-    assert(out.count() == 1)
-    val d = rec.drain().filter(_.site == "gate_salted").head
+    val d = Linking.decide("gate_salted", dict,
+      KgConfig.default.copy(forceSaltedJoins = true))
     assert(d.path == "salted")
-  }
-
-  test("recorder is per-run: decisions in one recorder never leak to another") {
-    val recA = new Linking.JoinRecorder
-    val recB = new Linking.JoinRecorder
-    val probe = Seq(("a", 1)).toDF("k", "v")
-    val dict = Seq(("a", "x")).toDF("dk", "dv")
-    Linking.dictJoin(probe, dict, col("k"), col("dk"),
-      KgConfig.default, col("k"), site = "run_a", rec = recA)
-    Linking.dictJoin(probe, dict, col("k"), col("dk"),
-      KgConfig.default, col("k"), site = "run_b", rec = recB)
-    assert(recA.drain().map(_.site) == Seq("run_a"))
-    assert(recB.drain().map(_.site) == Seq("run_b"))
-    assert(recA.drain().isEmpty, "drain must consume")
+    val out = Linking.dictJoin(probe, dict, col("k") === col("dk"), d, col("k"))
+    assert(out.count() == 1)
   }
 
   test("Pipeline surfaces one metrics row per dictionary join site") {
@@ -132,7 +109,7 @@ class DictJoinGateSpec extends SparkSpec {
     val corpus = SyntheticCorpus.generate(nPages = 20, seed = 7L)
     val pages = spark.createDataset(corpus.pages)
     val res = Pipeline.run(spark, pages, Pipeline.dictsFromCorpus(spark, corpus),
-      KgConfig.default.copy(forceSaltedJoins = true, nSalt = 4))
+      KgConfig.default.copy(forceSaltedJoins = true))
     val plan = res.metrics.filter(col("stage") === "link_plan")
       .select("metric", "key").as[(String, String)].collect().toSet
     // the entity rows carry the L5 text where their key is unresolved, so
@@ -140,5 +117,54 @@ class DictJoinGateSpec extends SparkSpec {
     assert(plan == Set(("dict_join_salted", "wd_ref_labels"),
       ("dict_join_salted", "link_key_payload")),
       s"salted link_plan rows: $plan")
+  }
+
+  test("link_plan rows are the prepared decisions in every run mode") {
+    val corpus = SyntheticCorpus.generate(nPages = 20, seed = 7L)
+    val pages = spark.createDataset(corpus.pages).repartition(2)
+    val dicts = Pipeline.dictsFromCorpus(spark, corpus)
+    val pagesDir = Files.createTempDirectory("kg_plan_pages").toString
+    pages.write.mode("append").parquet(pagesDir)
+    def planRows(metrics: DataFrame): Seq[(String, String, Double)] =
+      metrics.filter(col("stage") === "link_plan")
+        .select("metric", "key", "value").as[(String, String, Double)]
+        .collect().toSeq.sorted
+    for (cfg <- Seq(KgConfig.default, KgConfig.default.copy(forceSaltedJoins = true))) {
+      val regime = if (cfg.forceSaltedJoins) "salted" else "broadcast"
+      val prep = Pipeline.prepareLink(spark, dicts, cfg)
+      assert(prep.decisions.map(_.site).sorted ==
+        Seq("link_key_payload", "wd_ref_labels"), s"$regime: ${prep.decisions}")
+      val want = prep.decisions
+        .map(d => (s"dict_join_${d.path}", d.site, d.estBytes.toDouble)).sorted
+
+      val inMemory = Pipeline.run(spark, pages, dicts, cfg)
+      assert(planRows(inMemory.metrics) == want, s"$regime run")
+      inMemory.release()
+
+      val dir = Files.createTempDirectory("kg_plan_tables").toString
+      def materialized(): Seq[(String, String, Double)] = {
+        val res = Pipeline.runMaterialized(spark, pages, dicts,
+          new KgTables(spark, dir), cfg)
+        try planRows(res.metrics) finally res.release()
+      }
+      assert(materialized() == want, s"$regime fresh runMaterialized")
+      // a kill between the kg_nodes and kg_metrics manifest lines: only
+      // the metrics stage re-runs
+      val manifest = Paths.get(dir, "_snapshots.jsonl")
+      val lines = Files.readAllLines(manifest)
+      lines.removeIf(_.contains("\"stage\":\"metrics\""))
+      Files.write(manifest, lines)
+      assert(materialized() == want, s"$regime resumed runMaterialized")
+      assert(Files.readAllLines(manifest).toArray.map(_.toString)
+        .count(_.contains("\"stage\":\"link\"")) == 1,
+        s"$regime: the link stage must resume, not re-run")
+
+      val out = Files.createTempDirectory("kg_plan_stream").toString
+      val ckpt = Files.createTempDirectory("kg_plan_ckpt").toString
+      assert(StreamingPipeline.runAvailableNow(spark, pagesDir, dicts, out,
+        ckpt, cfg) == 1)
+      assert(planRows(spark.read.parquet(s"$out/kg_metrics")) == want,
+        s"$regime streaming batch")
+    }
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 
 /** The keyed link shape in both regimes, one payload join-back onto rows
   * that carry their L5 text: salted, building its plan over stats-less
-  * inputs runs no Spark job (the dictJoin gate reads plan estimates only);
+  * inputs runs no Spark job (the join-back's gate reads plan estimates
+  * only);
   * broadcast, the materialized payload table joins back without any
   * shuffle; Pipeline.prepareLink keeps only the two key tables; and runs
   * without prepared tables link over the artifacts that it built once for
@@ -31,7 +32,7 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val corpus = generated.copy(aliases = generated.aliases :+
       AliasRow("Nullbegriff", e(7).name, null, e(7).typ, 1.0, "de"))
     val dicts = Pipeline.dictsFromCorpus(spark, corpus)
-    val cfg = KgConfig.default.copy(forceSaltedJoins = true, nSalt = 4)
+    val cfg = KgConfig.default.copy(forceSaltedJoins = true)
     // not materialized: the key chain is planned inside linkFlat, and its
     // stats-less key tables reach the join-backs
     val keys = statsLess(corpus.aliases.map(a => (a.canonical, a.qid)).distinct
@@ -49,15 +50,14 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(entities.queryExecution.optimizedPlan.stats.sizeInBytes >=
       BigInt(Long.MaxValue) / 8, "input must be stats-less")
 
-    val rec = new Linking.JoinRecorder
     val (flat, jobs) = JobFence.jobsOf(spark) {
-      val f = Linking.linkFlat(spark, entities, prep, cfg, rec)
+      val f = Linking.linkFlat(spark, entities, prep)
       f.queryExecution.executedPlan
       f
     }
     assert(jobs.isEmpty, s"plan building ran jobs: $jobs")
 
-    val ds = rec.drain()
+    val ds = prep.decisions
     // one mention-row join-back: the per-key payload, which carries resolved4
     val d = ds.filter(_.site == "link_key_payload")
     assert(d.size == 1, s"expected one decision for link_key_payload, got $d")
@@ -79,13 +79,12 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       EntityRow("u1", "de", "i1", e(0).name, e(0).qid, e(0).typ, e(0).name, 0, 1, "explicit", 1),
       EntityRow("u2", "de", "i2", e(1).name, e(1).qid, e(1).typ, e(1).name, 0, 1, "explicit", 1))
       .toDF().withColumn("p_extract", lit("a" * 150))
-    val rec = new Linking.JoinRecorder
-    val flat = Linking.linkFlat(spark, entities, prep, KgConfig.default, rec)
+    val flat = Linking.linkFlat(spark, entities, prep)
     val shuffles = collect(flat.queryExecution.executedPlan) {
       case s: ShuffleExchangeLike => s
     }
     assert(shuffles.isEmpty, s"the flat plan shuffles: $shuffles")
-    val ds = rec.drain()
+    val ds = prep.decisions
     val d = ds.filter(_.site == "link_key_payload")
     assert(d.size == 1 && d.head.broadcast, s"link_key_payload: $d")
     // no flags join-back and no L5 scrape join
@@ -145,5 +144,21 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(d.head._3 != keys * 512.0, s"link_key_payload: $d")
     assert(!plan.exists(_._2 == "link_key_flags"), s"flags join-back: $plan")
     assert(!plan.exists(_._1 == "dict_join_salted"), s"salted sites: $plan")
+  }
+
+  test("configs that differ outside the link fields share one prepared link") {
+    val dicts = Pipeline.dictsFromCorpus(spark,
+      SyntheticCorpus.generate(nPages = 20, seed = 7L))
+    // the kg_pipeline_triples and kg_pipeline_restricted configs: they
+    // differ only in extract settings
+    val Seq(triples, restricted) = Golden.variants.map(_._3)
+    assert(triples != restricted)
+    val prep = Pipeline.prepareLink(spark, dicts, triples)
+    assert(Pipeline.prepareLink(spark, dicts, restricted) eq prep)
+    val salted = Pipeline.prepareLink(spark, dicts,
+      restricted.copy(forceSaltedJoins = true))
+    assert(!(salted eq prep))
+    assert(salted.payloadJoin.path == "salted" && prep.payloadJoin.broadcast)
+    assert(dicts.links.size == 2)
   }
 }

@@ -50,7 +50,7 @@ class L4ComposeSpec extends SparkSpec {
     Linking.linkAll(spark, rows,
       Linking.prepare(spark, wiki, redirects, wd, dbp, synonyms,
         rows.select("entity", "qid").distinct(), KgConfig.default),
-      scrapes, KgConfig.default)
+      scrapes)
       .select(col("entity"),
         col("sources.wikipedia.status").as("st"),
         col("sources.wikipedia.fallback_source").as("fb"),

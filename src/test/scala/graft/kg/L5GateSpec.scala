@@ -19,7 +19,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 class L5GateSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
-  private val salted = KgConfig.default.copy(forceSaltedJoins = true, nSalt = 4)
+  private val salted = KgConfig.default.copy(forceSaltedJoins = true)
 
   /** The final plan of each parquet table write `body` runs, by table. */
   private def writesOf(body: => Unit): Map[String, SparkPlan] = {

@@ -43,7 +43,7 @@ class LinkComposeSpec extends SparkSpec {
     Linking.linkAll(spark, rows,
       Linking.prepare(spark, wiki, redirects, wd, dbp, synonyms,
         rows.select("entity", "qid").distinct(), KgConfig.default),
-      scrapes, KgConfig.default)
+      scrapes)
       .select(col("entity"),
         col("sources.wikipedia.status").as("st"),
         col("sources.wikipedia.fallback_source").as("fb"),

@@ -26,7 +26,7 @@ class LinkingStagesSpec extends SparkSpec {
     Linking.linkAll(spark, rows,
       Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd, dicts.dbp,
         dicts.synonyms, rows.select("entity", "qid").distinct(), cfg),
-      scrapes, cfg)
+      scrapes)
       .select(col("entity"),
         col("sources.wikipedia.status").as("wp_status"),
         col("sources.wikipedia.fallback_source").as("wp_fb"),

@@ -68,7 +68,7 @@ class ModeParitySpec extends SparkSpec {
       val pages = spark.createDataset(c.pages).repartition(4)
       val dicts = Pipeline.dictsFromCorpus(spark, c)
       val base = KgConfig.default.copy(inferEntities = infer)
-      val salted = base.copy(forceSaltedJoins = true, nSalt = 4)
+      val salted = base.copy(forceSaltedJoins = true)
 
       // the test data really holds the cases
       val ents = KgExtract.run(spark, pages, dicts, base)

@@ -45,7 +45,7 @@ class MultilangSpec extends SparkSpec {
       Linking.prepare(spark, wiki, Seq.empty[RedirectRow].toDF(), wd,
         Seq.empty[DbpediaRow].toDF(), Seq.empty[SynonymRow].toDF(),
         entities.select("entity", "qid").distinct(), cfg),
-      empty.toDF("p_url", "p_extract"), cfg)
+      empty.toDF("p_url", "p_extract"))
   }
 
   private def ml(entity: String) = nodes

@@ -36,7 +36,7 @@ class PipelineParitySpec extends SparkSpec {
   test("salted/shuffle dictionary joins (forceSaltedJoins) produce identical nodes+edges") {
     val pages = spark.createDataset(corpus.pages).repartition(8)
     val salted = Pipeline.run(spark, pages, Pipeline.dictsFromCorpus(spark, corpus),
-      cfg.copy(forceSaltedJoins = true, nSalt = 4))
+      cfg.copy(forceSaltedJoins = true))
     def nodeKeys(r: Pipeline.Result) = r.nodes.select(
       $"url", $"entity", $"sources.wikipedia.status", $"sources.wikidata.status",
       $"sources.dbpedia.status", $"sources.wikipedia.fallback_source",

@@ -21,7 +21,8 @@ class SaltedJoinSpec extends SparkSpec {
       .as[(String, String, String)].collect().toSet
 
     Seq(1, 2, 8, 32).foreach { n =>
-      val salted = Linking.saltedJoin(probe, dict, col("k"), col("dk"), n)
+      val salted = Linking.saltedJoin(probe, dict, col("k") === col("dk"), n,
+        col("row_id"))
         .select("row_id", "k", "qid")
         .as[(String, String, String)].collect().toSet
       assert(salted == plain, s"nSalt=$n")
@@ -33,7 +34,8 @@ class SaltedJoinSpec extends SparkSpec {
     val dict = (0 to 3).map(i => (s"k$i", i)).toDF("dk", "v")
     val plain = probe.join(dict, col("k") === col("dk"), "inner")
       .select("id", "v").as[(Long, Int)].collect().toSet
-    val salted = Linking.saltedJoin(probe, dict, col("k"), col("dk"), 4, "inner")
+    val salted = Linking.saltedJoin(probe, dict, col("k") === col("dk"), 4,
+      col("id"), "inner")
       .select("id", "v").as[(Long, Int)].collect().toSet
     assert(salted == plain)
   }

@@ -34,18 +34,4 @@ class TrainingSinkSpec extends SparkSpec {
       }
     }
   }
-
-  test("A10 accumulators: extract pass counts pages/mentions/entities/triples") {
-    val corpus = SyntheticCorpus.generate(nPages = 30, seed = 42L)
-    val pages = spark.createDataset(corpus.pages).repartition(4)
-    val dicts = Pipeline.dictsFromCorpus(spark, corpus)
-    val cnt = KgExtract.Counters(spark)
-    val out = KgExtract.run(spark, pages, dicts, KgConfig.default,
-      counters = Some(cnt))
-    val nEnts = out.flatMap(_.entities).count()
-    assert(cnt.pages.value == 30)
-    assert(cnt.entities.value == nEnts)
-    assert(cnt.mentions.value >= cnt.entities.value)
-    assert(cnt.triples.value > 0)
-  }
 }
