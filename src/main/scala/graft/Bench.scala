@@ -52,7 +52,7 @@ object Bench {
       spark, graft.kg.SyntheticCorpus.generate(0))
     // dictionary artifacts are static per deployment — built once per
     // session, excluded from the per-run timing (amortized to ~0 at 10^12)
-    val prepared = prep.getOrElse(graft.kg.Pipeline.prepareLink(spark, dicts))
+    val prepared = prep.getOrElse(graft.kg.Pipeline.prepareLink(spark, dicts, cfg))
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val (triples, secs) = time {
       val res = graft.kg.Pipeline.run(spark, pages, dicts, cfg, prepared = Some(prepared))
@@ -189,8 +189,10 @@ object Bench {
     // raw "efficiency" from 0.28 to 1.14 across otherwise-identical runs).
     // Interleaving + min-per-level makes each level sample several windows.
     // Host-ceiling microbenchmarks run once per rep; MEDIAN ratio reported.
-    def prepFor(s: SparkSession) = graft.kg.Pipeline.prepareLink(s,
-      graft.kg.Pipeline.dictsFromCorpus(s, graft.kg.SyntheticCorpus.generate(0)))
+    def prepFor(s: SparkSession,
+        cfg: graft.kg.KgConfig = graft.kg.KgConfig.default) =
+      graft.kg.Pipeline.prepareLink(s,
+        graft.kg.Pipeline.dictsFromCorpus(s, graft.kg.SyntheticCorpus.generate(0)), cfg)
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
     // Rep count is WALL-CLOCK-BUDGETED: at least 2 pairs, up to maxReps
@@ -281,8 +283,9 @@ object Bench {
     // of the corpus bounds its wall-clock share of the bench
     val saltedRun = {
       val s = session(32)
-      val prep = prepFor(s)
       val salted = graft.kg.KgConfig.default.copy(forceSaltedJoins = true)
+      // the link's regime is the prepared link's: prepare it salted too
+      val prep = prepFor(s, salted)
       val saltedPages = math.max(kgPages / 3, 10000)
       // warmup at /10 + min-of-2, mirroring the scaling reps: the salted
       // plan has its own codegen/shuffle paths to JIT, and a single rep

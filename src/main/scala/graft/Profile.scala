@@ -3,9 +3,13 @@ package graft
 import graft.kg.{DocProcess, KgConfig, KgExtract, Linking, PageRow, Pipeline,
   SyntheticCorpus, TextExtract, TextUtils}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.execution.{FilterExec, FormattedMode, InputAdapter,
-  ProjectExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.{ExplainUtils, FilterExec, InputAdapter,
+  LeafExecNode, ProjectExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -90,50 +94,30 @@ object Profile {
 
   private def header(name: String): String = s"\n================ $name ================\n"
 
-  /** The formatted physical plan of each target, as planned (pre-AQE),
-    * each cached relation printed as a leaf ([[cachedAsLeaves]]) and with
-    * stable ids ([[stableIds]]), so two runs print the same text. */
+  /** The formatted physical plan of each target, as planned (pre-AQE):
+    * the plan inside the adaptive root, each cached-table scan printed as
+    * a leaf ([[CachedScan]]), with stable ids ([[stableIds]]), so two runs
+    * print the same text. */
   def plan(spark: SparkSession, names: Seq[String], sf: String = DefaultSf,
       out: Option[String] = None): String =
     targets(spark, sf, names).map { case (name, df) =>
-      val text = stableIds(cachedAsLeaves(
-        df().queryExecution.explainString(FormattedMode)))
+      val planned = ExplainUtils.stripAQEPlan(df().queryExecution.executedPlan)
+        .transform { case s: InMemoryTableScanExec => CachedScan(s.output) }
+      val formatted = new StringBuilder("== Physical Plan ==\n")
+      ExplainUtils.processPlan(planned, formatted.append(_))
+      val text = stableIds(formatted.toString)
       emit(out, s"$name.txt", text)
       header(name) + text
     }.mkString
 
-  /** A formatted plan with each InMemoryRelation as a leaf: the cached
-    * plan under it, its tree lines and its nodes' detail entries, is
-    * dropped, and the operator ids left are renumbered 1..n in order. That
-    * plan is the cache's own, already executed, so its final AQE shape can
-    * vary from run to run. ExplainUtils numbers a node's inner children
-    * right after the node, so the cached plan under relation r holds
-    * exactly the ids r+1 .. the id of its root, the line after r. */
-  private[graft] def cachedAsLeaves(text: String): String = {
-    val (tree, details) = text.split("\n", -1).toIndexedSeq.span(_.nonEmpty)
-    val nodeId = """(?<= \()\d+(?=\))""".r
-    val entryId = """(?<=^\()\d+(?=\) )""".r
-    def id(re: Regex, line: String): Option[Int] = re.findFirstIn(line).map(_.toInt)
-    val removed = tree.indices.filter(tree(_).contains(" InMemoryRelation ("))
-      .flatMap(i => id(nodeId, tree(i)).zip(tree.lift(i + 1).flatMap(id(nodeId, _))))
-      .flatMap { case (r, root) => r + 1 to root }.toSet
-    if (removed.isEmpty) return text
-    // an id-less tree line (an AQE "== Final Plan ==" header) goes with
-    // the node below it
-    val keptTree = tree.indices.filterNot(i =>
-      tree.iterator.drop(i).flatMap(id(nodeId, _)).nextOption().exists(removed))
-      .map(tree)
-    var dropping = false
-    val keptDetails = details.filter { line =>
-      id(entryId, line).foreach(i => dropping = removed(i))
-      !dropping
-    }
-    val newId = (keptTree.flatMap(id(nodeId, _)) ++ keptDetails.flatMap(id(entryId, _)))
-      .distinct.sorted.zipWithIndex.map { case (old, i) => s"$old" -> s"${i + 1}" }.toMap
-    def renumbered(re: Regex)(line: String): String =
-      re.replaceAllIn(line, m => newId.getOrElse(m.matched, m.matched))
-    (keptTree.map(renumbered(nodeId)) ++ keptDetails.map(renumbered(entryId)))
-      .mkString("\n")
+  /** An in-memory table scan, printed without the cached plan under it.
+    * That plan is the cache's own, executed when the cache was filled, so
+    * its final AQE shape can vary from run to run. Only printed, never
+    * run. */
+  private final case class CachedScan(output: Seq[Attribute]) extends LeafExecNode {
+    override def nodeName: String = "InMemoryTableScan"
+    override protected def doExecute(): RDD[InternalRow] =
+      throw new UnsupportedOperationException("a printed plan node")
   }
 
   /** `text` with the parts of a formatted plan that differ between two

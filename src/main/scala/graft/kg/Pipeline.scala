@@ -120,8 +120,20 @@ object Pipeline {
       p
     })
 
+  /** Fails unless `prepared` is the link of `cfg`'s link settings
+    * ([[Linking.linkConfig]]). The link reads the prepared link's own
+    * config, so a run handed another config's link would link, and write
+    * its link_plan rows, in that config's regime. */
+  private[kg] def requireLinkOf(cfg: KgConfig,
+      prepared: Option[Linking.Prepared]): Unit =
+    prepared.foreach(p => require(p.cfg == Linking.linkConfig(cfg),
+      s"the prepared link was built for ${p.cfg}, not for the run's link " +
+        s"settings ${Linking.linkConfig(cfg)}: prepare it with this config"))
+
   /** In-memory run (tests, benchmarks, each streaming micro-batch): no
-    * table layer; returns live DataFrames over this run's caches. */
+    * table layer; returns live DataFrames over this run's caches.
+    * `prepared`, when given, must be the link of `cfg`
+    * ([[requireLinkOf]]). */
   def run(
       spark: SparkSession,
       pages: Dataset[PageRow],
@@ -230,6 +242,7 @@ object Pipeline {
       dicts: Dicts, cfg: KgConfig, runId: String,
       prepared: Option[Linking.Prepared], store: Store,
       finishStats: Boolean): Result = {
+    requireLinkOf(cfg, prepared)
     // ---- extract: fused map pass (E1-E3, R1-R4, D3, D6) ----
     // A DATAFRAME, not a typed Dataset: a typed flatMap would deserialize
     // the whole DocOut row (including the fat scrape column) in every

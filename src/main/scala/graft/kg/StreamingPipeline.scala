@@ -55,6 +55,7 @@ object StreamingPipeline {
       cfg: KgConfig = KgConfig.default,
       prepared: Option[Linking.Prepared] = None): Long = {
     import spark.implicits._
+    Pipeline.requireLinkOf(cfg, prepared)
     val prep = prepared.getOrElse(Pipeline.prepareLink(spark, dicts, cfg))
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
     val stream = spark.readStream

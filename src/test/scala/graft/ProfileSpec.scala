@@ -17,9 +17,10 @@ class ProfileSpec extends SparkSpec {
     val text = Profile.plan(spark, Seq("link_flat_salted"))
     val tree = text.linesIterator.dropWhile(_ != "== Physical Plan ==")
       .takeWhile(_.nonEmpty).toSeq
-    assert(tree.count(_.contains(" InMemoryRelation (")) == 1, tree.mkString("\n"))
+    assert(tree.count(_.contains(" InMemoryTableScan (")) == 1, tree.mkString("\n"))
     // the cached key table's plan was executed when it was counted
-    assert(!text.contains("== Final Plan =="), "a cached plan is still printed")
+    assert(!text.contains("InMemoryRelation") && !text.contains("== Final Plan =="),
+      "a cached plan is still printed")
     val ids = tree.flatMap(l => " \\((\\d+)\\)".r.findFirstMatchIn(l))
       .map(_.group(1).toInt)
     val entries = text.linesIterator.flatMap(l =>

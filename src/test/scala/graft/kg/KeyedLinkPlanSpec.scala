@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * broadcast, the materialized payload table joins back without any
   * shuffle; Pipeline.prepareLink keeps only the two key tables; and runs
   * without prepared tables link over the artifacts that it built once for
-  * their Dicts and config. */
+  * their Dicts and config, while a run handed another link config's
+  * prepared tables fails. */
 class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -160,5 +161,22 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!(salted eq prep))
     assert(salted.payloadJoin.path == "salted" && prep.payloadJoin.broadcast)
     assert(dicts.links.size == 2)
+  }
+
+  test("a run handed the prepared link of another link config fails") {
+    val corpus = SyntheticCorpus.generate(nPages = 20, seed = 7L)
+    val dicts = Pipeline.dictsFromCorpus(spark, corpus)
+    val pages = spark.createDataset(corpus.pages)
+    val Seq(triples, restricted) = Golden.variants.map(_._3)
+    val prep = Some(Pipeline.prepareLink(spark, dicts, triples))
+    // a config that differs only in extract settings links alike
+    Pipeline.run(spark, pages, dicts, restricted, prepared = prep).release()
+    val salted = triples.copy(forceSaltedJoins = true)
+    val err = intercept[IllegalArgumentException](
+      Pipeline.run(spark, pages, dicts, salted, prepared = prep))
+    assert(err.getMessage.contains("prepared link"), err.getMessage)
+    val dir = Files.createTempDirectory("kg_link_mismatch").toString
+    intercept[IllegalArgumentException](StreamingPipeline.runAvailableNow(
+      spark, s"$dir/pages", dicts, s"$dir/tables", s"$dir/ckpt", salted, prep))
   }
 }
