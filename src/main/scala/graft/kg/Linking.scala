@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Entity linking as dictionary joins + staged left-anti fallback narrowing
   * (SURVEY §2.4 L1-L13): the deterministic Spark re-expression of the
@@ -16,14 +17,17 @@ import org.apache.spark.sql.functions._
   *
   * Every linked field except the L5 text depends only on the mention's
   * (entity, qid) key, as the reference's per-lookup-key response caches
-  * do (utils/cache_utils.py:7-56). So [[prepare]] runs the chain ONCE per
-  * key of the gazetteer, dictionary-side, and so does the L5 gate: only a
-  * key L1-L4 leave unresolved ([[Prepared.unresolved]]) reads the page
-  * text, and the entity rows carry `p_extract` only on such keys. So
-  * [[linkFlat]] has one shape in every regime: ONE join-back of the
-  * per-key payload onto the mention rows (`link_plan` site
-  * `link_key_payload`), then the L5 projection over the text the rows
-  * carry; its output feeds the node write directly.
+  * do (utils/cache_utils.py:7-56). So [[prepare]], the one builder of the
+  * link artifact ([[Prepared]]), runs the chain ONCE per key of the
+  * gazetteer, dictionary-side: it persists and counts the two key tables,
+  * then decides both gated joins and collects the keys the L5 gate
+  * opens, so a run over the artifact only reads values. Only a key L1-L4
+  * leave unresolved ([[Prepared.unresolved]]) reads the page text, and
+  * the entity rows carry `p_extract` only on such keys. So [[linkFlat]]
+  * has one shape in every regime: ONE join-back of the per-key payload
+  * onto the mention rows (`link_plan` site `link_key_payload`), then the
+  * L5 projection over the text the rows carry; its output feeds the node
+  * write directly.
   *
   * Scale design, one rule: salt only a join whose probe side can hold a
   * hot key. The key chain probes with distinct keys, which hold none, so
@@ -219,55 +223,31 @@ object Linking {
       .select(col("term").as("syn_hit_term"), col("syn.*"))
   }
 
-  /** The dictionary-derived link tables and the two key tables built
-    * over them. Nothing here depends on the entity rows: the dictionary
-    * tables are O(dictionary), the key tables O(keys).
-    *
-    * `keys` are the distinct (entity, qid) pairs the mention rows can
-    * carry. The key tables run the L1-L4/L7 → Wikidata → DBpedia chain
-    * over them on first use: `keyWiki` is the Wikipedia result, which
-    * decides `resolved4`; `keyPayload` adds Wikidata and DBpedia to it.
-    * [[linkFlat]] reads only `keyPayload`, the extract's L5 gate only
-    * `unresolved`, and [[Pipeline.prepareLink]] persists only the two key
-    * tables. `decisions` holds the gate of both gated joins, which every
-    * run over this link takes and writes as its `link_plan` rows:
-    * `wd_ref_labels`, decided when the Wikidata dictionary is enriched,
-    * and `link_key_payload`, decided on first read of `payloadJoin`. */
-  final case class Prepared(
-      // `primary` is NOT consumed by the link chain (its payload is
-      // pre-composed into l1Dict/osPick) — kept only as the build lineage
-      // for diagnostics (the bench's prefix-index size metric)
-      primary: DataFrame, l1Dict: DataFrame, l2Dict: DataFrame,
-      osPick: DataFrame,
-      enrichedWd: DataFrame, dbpSel: DataFrame, lookupPick: DataFrame,
-      // L7 extra-language multilang tables: per language l, a
-      // (mlx_qid_l, mlx_l:struct<label,url,description>) dictionary built
-      // from that language's wiki pages via Wikidata sitelinks
-      mlExtra: Seq[(String, DataFrame)],
-      keys: DataFrame, cfg: KgConfig, refLabelsJoin: JoinDecision) {
-    lazy val keyWiki: DataFrame = wikipedia(keys, this)
-    lazy val keyPayload: DataFrame = dbpedia(wikidata(keyWiki, this), this)
+  /** The link artifact, as [[prepare]] leaves it: the two key tables,
+    * persisted and counted, and the values a run reads off them, all
+    * strict, so reading one starts no job. `keyWiki` is the Wikipedia
+    * result over the distinct (entity, qid) keys, which decides
+    * `resolved4`; `keyPayload` adds Wikidata and DBpedia. [[linkFlat]]
+    * joins back only `keyPayload`; the extract's L5 gate reads only
+    * `unresolved`, the keys L1-L4 leave unresolved (O(gazetteer keys), a
+    * null qid kept, as the null-safe join-back matches it). `cfg` is the
+    * [[linkConfig]] linked under. `primary` is not read by the link (it
+    * is pre-composed into the L1 and L3 dictionaries): the bench sizes
+    * the prefix index from it. */
+  final case class Prepared(primary: DataFrame, keyWiki: DataFrame,
+      keyPayload: DataFrame, unresolved: Set[(String, String)], cfg: KgConfig,
+      refLabelsJoin: JoinDecision, payloadJoin: JoinDecision) {
     /** The two key tables, in build order. */
     def all: Seq[DataFrame] = Seq(keyWiki, keyPayload)
-    /** `keyPayload` with its key renamed, the side [[linkFlat]] joins back. */
-    private[kg] lazy val payloadDict: DataFrame = keyPayload
-      .withColumnsRenamed(Map("entity" -> "k_entity", "qid" -> "k_qid"))
-    /** The gate of the mention-row join-back, decided on first read:
-      * [[Pipeline.prepareLink]] reads it once the key tables are persisted
-      * and counted, so it sees their real size. */
-    lazy val payloadJoin: JoinDecision =
-      decide("link_key_payload", payloadDict, cfg)
     /** Both gated joins' decisions, in the order a run writes them. */
     def decisions: Seq[JoinDecision] = Seq(refLabelsJoin, payloadJoin)
-    /** The (entity, qid) keys L1-L4 leave unresolved: the only keys whose
-      * rows read the L5 page text. Collected once from `keyWiki`, so
-      * O(gazetteer keys), the bound of the alias automaton the extract
-      * already broadcasts. A null qid stays a null member, as the
-      * null-safe key join-back matches it. */
-    lazy val unresolved: Set[(String, String)] =
-      keyWiki.filter(!col("resolved4")).select("entity", "qid").collect()
-        .iterator.map(r => (r.getString(0), r.getString(1))).toSet
+    /** `keyPayload` with its key renamed: the side [[linkFlat]] joins
+      * back, and the plan `payloadJoin` was decided on. */
+    private[kg] val payloadDict: DataFrame = keyed(keyPayload)
   }
+
+  private def keyed(keyPayload: DataFrame): DataFrame =
+    keyPayload.withColumnsRenamed(Map("entity" -> "k_entity", "qid" -> "k_qid"))
 
   /** `cfg` reduced to the fields [[prepare]] and [[linkFlat]] read: configs
     * that differ only in extract settings (entity types, inference,
@@ -277,8 +257,58 @@ object Linking {
     extraLanguages = cfg.extraLanguages,
     forceSaltedJoins = cfg.forceSaltedJoins)
 
-  /** Build every dictionary-derived table of the link stage, and the
-    * per-key tables over `keys` (distinct (entity, qid) pairs). */
+  /** The `lang` pages, as the `<p>_*` columns the link reads (`w` for
+    * the primary language, `w2` for the secondary). */
+  private[kg] def pagesOf(wiki: DataFrame, lang: String, p: String): DataFrame =
+    wiki.filter(col("lang") === lang)
+      .select(col("title").as(s"${p}_title"), col("url").as(s"${p}_url"),
+        col("extract").as(s"${p}_extract"), col("categories").as(s"${p}_categories"),
+        col("internal_links").as(s"${p}_links"), col("wikidata_id").as(s"${p}_wikidata_id"))
+
+  /** The L1 dictionary, keyed on the raw entity surface (`l1_key`), with
+    * the redirect hop PRE-COMPOSED dictionary-side: the probe takes ONE
+    * join on the entity surface instead of redirect-resolve + primary —
+    * one fewer probe-side exchange when the joins shuffle (at scale),
+    * where every probe join reshuffles the key rows. Key space: every
+    * redirect source `redir` (from_title, to_title) holds (payload = the
+    * target page, possibly absent — the resolved lookup term must survive
+    * for L3 even when the target page does not exist) plus every primary
+    * title that is NOT itself a redirect source (a redirect shadows the
+    * direct title, exactly as the sequential hop did: the probe row
+    * followed from_title→to_title and never consulted its own title).
+    *
+    * L4 is PRE-COMPOSED into it too (round 6): the synonym pick
+    * (wikipedia/fallbacks.py:160-234 + synonym_utils.py — per term, the
+    * first ranked synonym with a usable page) is keyed on the RAW entity
+    * surface, the SAME probe key L1 uses, so a dictionary-side full-outer
+    * join lets ONE probe exchange serve both stages. Keys present only in
+    * the synonym table behave exactly like an L1 miss (null l1_lookup and
+    * w_* payload); keys present in both carry both payloads, and the
+    * probe consults syn_* only under the needs4 gate — the staged order
+    * (opensearch before synonym) is enforced at projection time. */
+  private[kg] def l1Dict(primary: DataFrame, redir: DataFrame,
+      synonyms: DataFrame, minLen: Int): DataFrame = {
+    val pCols = primary.columns.map(primary(_)).toIndexedSeq
+    redir
+      .join(primary, col("to_title") === col("w_title"), "left")
+      .select(col("from_title").as("l1_key") +:
+        col("to_title").as("l1_lookup") +: pCols: _*)
+      .unionByName(primary
+        .join(redir, primary("w_title") === redir("from_title"), "left_anti")
+        .select(primary("w_title").as("l1_key") +:
+          primary("w_title").as("l1_lookup") +: pCols: _*))
+      .join(synonymPick(synonyms, primary, minLen),
+        col("l1_key") === col("syn_hit_term"), "full_outer")
+      .withColumn("l1_key", coalesce(col("l1_key"), col("syn_hit_term")))
+      .drop("syn_hit_term")
+  }
+
+  /** Build the link artifact: every dictionary-derived table of the link,
+    * the two key tables over `keys` (distinct (entity, qid) pairs), each
+    * persisted and counted, and then, from the counted tables, the
+    * decisions and the unresolved keys. The only builder of a
+    * [[Prepared]]: Pipeline.prepareLink memoizes it per Dicts and link
+    * config, and a spec that calls it links as a run does. */
   def prepare(
       spark: SparkSession,
       wiki: DataFrame,
@@ -288,16 +318,11 @@ object Linking {
       synonyms: DataFrame,
       keys: DataFrame,
       cfg: KgConfig): Prepared = {
+    val linkCfg = linkConfig(cfg)
     val minLen = cfg.minExtractLen
-    val primary = wiki.filter(col("lang") === cfg.language)
-      .select(col("title").as("w_title"), col("url").as("w_url"),
-        col("extract").as("w_extract"), col("categories").as("w_categories"),
-        col("internal_links").as("w_links"), col("wikidata_id").as("w_wikidata_id"))
+    val primary = pagesOf(wiki, cfg.language, "w")
     val secondaryLang = if (cfg.language == "de") "en" else "de"
-    val secondary = wiki.filter(col("lang") === secondaryLang)
-      .select(col("title").as("w2_title"), col("url").as("w2_url"),
-        col("extract").as("w2_extract"), col("categories").as("w2_categories"),
-        col("internal_links").as("w2_links"), col("wikidata_id").as("w2_wikidata_id"))
+    val secondary = pagesOf(wiki, secondaryLang, "w2")
     val redir = redirects.filter(col("lang") === cfg.language)
       .select(col("from_title"), col("to_title"))
     val sitelinks = wd.select(col("qid"),
@@ -305,39 +330,6 @@ object Linking {
     val links2 = sitelinks
       .filter(col("site") === s"${secondaryLang}wiki")
       .select(col("qid").as("sl_qid"), col("title").as("sl_title"))
-    // L1 dictionary with the redirect hop PRE-COMPOSED dictionary-side:
-    // the probe takes ONE join on the entity surface instead of
-    // redirect-resolve + primary — one fewer probe-side exchange when the
-    // joins shuffle (at scale), where every probe join reshuffles the
-    // key rows. Key space: every redirect source (payload = the target
-    // page, possibly absent — the resolved lookup term must survive for
-    // L3 even when the target page does not exist) plus every primary
-    // title that is NOT itself a redirect source (a redirect shadows the
-    // direct title, exactly as the sequential hop did: the probe row
-    // followed from_title→to_title and never consulted its own title).
-    val pCols = primary.columns.map(primary(_)).toIndexedSeq
-    val l1Base = redir
-      .join(primary, col("to_title") === col("w_title"), "left")
-      .select(col("from_title").as("l1_key") +:
-        col("to_title").as("l1_lookup") +: pCols: _*)
-      .unionByName(primary
-        .join(redir, primary("w_title") === redir("from_title"), "left_anti")
-        .select(primary("w_title").as("l1_key") +:
-          primary("w_title").as("l1_lookup") +: pCols: _*))
-    // L4 PRE-COMPOSED into the L1 dictionary (round 6): the synonym pick
-    // (wikipedia/fallbacks.py:160-234 + synonym_utils.py — per term, the
-    // first ranked synonym with a usable page) is keyed on the RAW entity
-    // surface, the SAME probe key L1 uses, so a dictionary-side full-outer
-    // join lets ONE probe exchange serve both stages. Keys present only in
-    // the synonym table behave exactly like an L1 miss (null l1_lookup and
-    // w_* payload); keys present in both carry both payloads, and the
-    // probe consults syn_* only under the needs4 gate — the staged order
-    // (opensearch before synonym) is enforced at projection time.
-    val l1Dict = l1Base
-      .join(synonymPick(synonyms, primary, minLen),
-        col("l1_key") === col("syn_hit_term"), "full_outer")
-      .withColumn("l1_key", coalesce(col("l1_key"), col("syn_hit_term")))
-      .drop("syn_hit_term")
     // L2 dictionary with the sitelink hop PRE-COMPOSED: qid → secondary
     // page directly (sitelink titles without a secondary page drop out —
     // indistinguishable from a probe miss, since sl_title itself is never
@@ -380,16 +372,28 @@ object Linking {
           struct(col("mlw_title").as("label"), col("mlw_url").as("url"),
             col("mlw_extract").as("description")).as(s"mlx_$l"))
     }
-    val mlLangs = cfg.extraLanguages
+    val mlExtra = cfg.extraLanguages
       .filter(l => l != cfg.language && l != secondaryLang).distinct
-    val (enrichedWd, refLabelsJoin) = enrichWdDict(wd, cfg)
-    Prepared(
-      primary = primary, l1Dict = l1Dict, l2Dict = l2Dict,
-      osPick = opensearchPick(lookupTerms, primary, minLen),
-      enrichedWd = enrichedWd,
-      dbpSel = dbpSel, lookupPick = lookupPick,
-      mlExtra = mlLangs.map(l => l -> mlTable(l)),
-      keys = keys, cfg = cfg, refLabelsJoin = refLabelsJoin)
+      .map(l => l -> mlTable(l))
+    val (enrichedWd, refLabelsJoin) = enrichWdDict(wd, linkCfg)
+
+    // the key chain, each key table persisted and counted before the next
+    // is planned over it, so the payload chain reads the cached Wikipedia
+    // result and every decision below sees the tables' real size
+    def materialized(df: DataFrame): DataFrame = {
+      df.persist(MEMORY_AND_DISK).count()
+      df
+    }
+    val keyWiki = materialized(wikipedia(keys,
+      l1Dict(primary, redir, synonyms, minLen), l2Dict,
+      opensearchPick(lookupTerms, primary, minLen), mlExtra, linkCfg))
+    val keyPayload = materialized(dbpedia(wikidata(keyWiki, enrichedWd),
+      dbpSel, lookupPick))
+    val unresolved = keyWiki.filter(!col("resolved4")).select("entity", "qid")
+      .collect().iterator.map(r => (r.getString(0), r.getString(1))).toSet
+    Prepared(primary = primary, keyWiki = keyWiki, keyPayload = keyPayload,
+      unresolved = unresolved, cfg = linkCfg, refLabelsJoin = refLabelsJoin,
+      payloadJoin = decide("link_key_payload", keyed(keyPayload), linkCfg))
   }
 
   /** L1-L4 + L7: Wikipedia linking with the reference's staged fallback
@@ -397,21 +401,24 @@ object Linking {
     * → L2 language fallback → L3 opensearch → L4 synonym. Each fallback
     * resolves ONLY the still-unresolved remainder. Every field it adds
     * depends on the key (entity, qid) alone, so it runs over the distinct
-    * `keys` ([[Prepared.keyWiki]]). Adds wiki_url, wiki_url_alt,
-    * wiki_categories, wiki_links, wiki_wikidata_id, wiki_multilang, plus
+    * `keys` ([[Prepared.keyWiki]]), against the L1, L2 and L3
+    * dictionaries and the L7 tables [[prepare]] built. Adds wiki_url,
+    * wiki_url_alt, wiki_categories, wiki_links, wiki_wikidata_id,
+    * wiki_multilang, plus
     * the L5 inputs resolved4, any_extract, wx_extract and wx_fallback that
     * [[linkFlat]] turns into wiki_extract, wiki_fallback_source and
     * wiki_status. Distinct keys hold no hot key, so every dictionary join
     * here is a plain left join.
     */
-  private def wikipedia(keys: DataFrame, prep: Prepared): DataFrame = {
-    val cfg = prep.cfg
+  private def wikipedia(keys: DataFrame, l1Dict: DataFrame, l2Dict: DataFrame,
+      osPick: DataFrame, mlExtra: Seq[(String, DataFrame)],
+      cfg: KgConfig): DataFrame = {
     val minLen = cfg.minExtractLen
     val secondaryLang = if (cfg.language == "de") "en" else "de"
 
     // L1 + L4: ONE probe join. The redirect hop (round 5,
     // async_fetchers.py:231 redirects:true) AND the synonym pick (round 6)
-    // are PRE-COMPOSED into prep.l1Dict dictionary-side — both stages key
+    // are PRE-COMPOSED into l1Dict dictionary-side — both stages key
     // on the raw entity surface, so the key rows cross a single exchange
     // for the two of them when the join shuffles (at scale). The
     // syn_* payload rides along and is consulted only under the needs4
@@ -419,7 +426,7 @@ object Linking {
     // wikipedia/fallbacks.py:82-234). w_lookup (the resolved lookup term,
     // consumed by L3's cleaned retry key) falls back to the entity surface
     // on a miss, as the sequential coalesce did.
-    val s1 = keys.join(prep.l1Dict, keys("entity") === col("l1_key"), "left")
+    val s1 = keys.join(l1Dict, keys("entity") === col("l1_key"), "left")
       .withColumn("w_lookup", coalesce(col("l1_lookup"), col("entity")))
       .drop("l1_key", "l1_lookup")
 
@@ -430,9 +437,9 @@ object Linking {
 
     // L2 (fallback 1): other-language wiki via Wikidata sitelinks (L8/L9
     // mechanism); only consulted where stage 1 is unresolved. The
-    // sitelink→secondary-page hop is pre-composed into prep.l2Dict, so the
+    // sitelink→secondary-page hop is pre-composed into l2Dict, so the
     // probe joins once on the qid.
-    val s2 = s1.join(prep.l2Dict, s1("qid") === col("sl_qid"), "left")
+    val s2 = s1.join(l2Dict, s1("qid") === col("sl_qid"), "left")
       .drop("sl_qid")
     val ok2 = col("w2_extract").isNotNull && length(col("w2_extract")) >= minLen
 
@@ -461,14 +468,14 @@ object Linking {
     // matches, and when the pick table is broadcast they induce no
     // shuffle at all.
     //
-    // L3 (fallback 2): opensearch suggestion pick (prep.osPick is built
+    // L3 (fallback 2): opensearch suggestion pick (osPick is built
     // entirely DICTIONARY-side — key space: all Wikidata primary-language
     // labels + redirect targets, the gazetteer's canonical vocabulary).
     // The lookup term is U2-cleaned first (trailing "(qualifier)" dropped,
     // whitespace collapsed) — the reference's clean_title applied to
     // retry lookups (translation_utils.py:123).
     val needs3 = !(ok1 || ok2)
-    val s3 = s2c.join(prep.osPick,
+    val s3 = s2c.join(osPick,
       when(needs3, cleanTitleCol(lower(col("w_lookup")))) === col("os_hit_key"),
       "left")
     val ok3 = col("os_extract").isNotNull // null unless needs3 (gated key)
@@ -554,13 +561,13 @@ object Linking {
     // collapsed narrow rows cross the ml exchanges. Each table is
     // O(dictionary) and joins as the other key-chain joins do.
     val effQid = coalesce(col("qid"), col("wiki_wikidata_id"))
-    val withMl = prep.mlExtra.foldLeft(s3c) { case (df, (l, tbl)) =>
+    val withMl = mlExtra.foldLeft(s3c) { case (df, (l, tbl)) =>
       df.join(tbl, effQid === col(s"mlx_qid_$l"), "left").drop(s"mlx_qid_$l")
     }
 
     // extra-language entries from the joined sitelink tables (absent
     // languages contribute an empty map, like the reference's omission)
-    val mlExtras = prep.mlExtra.map { case (l, _) =>
+    val mlExtras = mlExtra.map { case (l, _) =>
       when(col(s"mlx_$l").isNotNull, map(lit(l), col(s"mlx_$l")))
         .otherwise(mlEmpty)
     }
@@ -646,10 +653,10 @@ object Linking {
 
   /** L9-L12: Wikidata enrichment — qid from gazetteer/wiki pageprops, then
     * ONE dictionary join against the pre-enriched dict (enrichWdDict). */
-  private def wikidata(linked: DataFrame, prep: Prepared): DataFrame = {
+  private def wikidata(linked: DataFrame, enrichedWd: DataFrame): DataFrame = {
     val withKey = linked.withColumn("wd_key",
       coalesce(col("qid"), col("wiki_wikidata_id")))
-    withKey.join(prep.enrichedWd, col("wd_key") === col("wd_qid"), "left")
+    withKey.join(enrichedWd, col("wd_key") === col("wd_qid"), "left")
       .withColumn("wd_status",
         when(col("wd_qid").isNotNull, lit("found")).otherwise(lit("not_found")))
       .drop("wd_key")
@@ -662,7 +669,8 @@ object Linking {
     * remainder: a name→resource lookup keyed on the lowercased English
     * label, first candidate by uri order — the deterministic stand-in for
     * the Lookup service's relevance-ranked first hit. */
-  private def dbpedia(linked: DataFrame, prep: Prepared): DataFrame = {
+  private def dbpedia(linked: DataFrame, dbpSel: DataFrame,
+      lookupPick: DataFrame): DataFrame = {
     // P10 URI construction as a native expression ([[graft.functions
     // .DbpediaUri]]) — keeps the L13 key projection inside
     // WholeStageCodegen (a ScalaUDF node would break the span).
@@ -672,17 +680,17 @@ object Linking {
       .withColumn("dbp_label_src",
         coalesce(element_at(col("wd_labels"), "en"), col("entity")))
       .withColumn("dbp_uri", call_function("dbpedia_uri", col("dbp_label_src")))
-    val joined = withUri.join(prep.dbpSel,
+    val joined = withUri.join(dbpSel,
       col("dbp_uri") === col("dbp_uri_dict"), "left")
     val strictOk = col("dbp_uri").isNotNull && col("dbp_label").isNotNull &&
       col("dbp_abstract").isNotNull
 
     // S6 Lookup fallback: dictionary-side pick of the first
-    // strict-satisfying resource per lowercased label (prep.lookupPick),
+    // strict-satisfying resource per lowercased label (lookupPick),
     // joined in a GATED single pass (null key for strict hits — no
     // filter+union, which would re-execute the whole upstream link chain
     // per branch)
-    val withLookup = joined.join(prep.lookupPick,
+    val withLookup = joined.join(lookupPick,
       when(!strictOk, lower(col("dbp_label_src"))) === col("lk_key"), "left")
     val lookupOk = col("lk_uri").isNotNull &&
       // the Lookup hit must not be the same resource the construction

@@ -96,28 +96,21 @@ object Pipeline {
       idf = lt.idf)
   }
 
-  /** The link artifacts, built once per Dicts and link config on first
-    * use ([[Dicts.links]]), so every run over these dictionaries, with or
-    * without `prepared`, links over the same persisted AND materialized
-    * key tables. Only the two key tables are kept: the dictionary tables
-    * are read once, by the key chain. The key payload is planned over the
-    * cached Wikipedia result, so it follows that one. Both gated joins are
-    * decided here, the payload join-back once the key tables are counted,
-    * from their real size (a plan estimate, no job). The keys are the
-    * distinct (canonical, qid) pairs of the alias table: every
-    * (entity, qid) an extract can produce — explicit mentions take them
-    * from a gazetteer candidate, E4 implicit entities from the
-    * alias-derived qid info. */
+  /** The link artifact of `cfg`'s link settings, built by
+    * [[Linking.prepare]] once per Dicts and link config, on first use
+    * ([[Dicts.links]]), so every run over these dictionaries, with or
+    * without `prepared`, links over the same persisted key tables and
+    * decisions. The keys are the distinct (canonical, qid) pairs of the
+    * alias table: every (entity, qid) an extract can produce — explicit
+    * mentions take them from a gazetteer candidate, E4 implicit entities
+    * from the alias-derived qid info. */
   def prepareLink(spark: SparkSession, dicts: Dicts,
       cfg: KgConfig = KgConfig.default): Linking.Prepared =
     dicts.links.computeIfAbsent(Linking.linkConfig(cfg), linkCfg => {
       import spark.implicits._
       val keys = dicts.aliases.map(a => (a.canonical, a.qid)).distinct
-      val p = Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
+      Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
         dicts.dbp, dicts.synonyms, keys.toDF("entity", "qid"), linkCfg)
-      p.all.foreach(_.persist(MEMORY_AND_DISK).count())
-      p.payloadJoin // decided now, on the counted key tables
-      p
     })
 
   /** Fails unless `prepared` is the link of `cfg`'s link settings

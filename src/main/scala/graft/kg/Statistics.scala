@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *     collapses `sub` (phase 2), ranks, cuts the top-10s and derives the
   *     percents and the relationship total. Its output rows depend only on
   *     the merged state, so `finish(state(A) ∪ state(B))` equals
-  *     `compute(A ∪ B)`.
+  *     `finish(state(A ∪ B))`.
   * A batch run emits `finish(state)`; a streaming micro-batch writes its
   * state, and [[StreamingPipeline.corpusMetrics]] finishes the union.
   *
@@ -82,10 +82,6 @@ object Statistics {
       State(rows.filter(isSum), rows.filter(!isSum))
     }
   }
-
-  def compute(spark: SparkSession, nodesFull: DataFrame, edges: DataFrame,
-      runId: String): DataFrame =
-    finish(state(nodesFull, edges), runId)._1
 
   /** The additive state of one node/edge set (object header). */
   def state(nodesFull: DataFrame, edges: DataFrame): State = {

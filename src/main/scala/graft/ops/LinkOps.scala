@@ -100,29 +100,24 @@ object LinkOps {
   /** Both queries link with the L7 fr entries. */
   private val LinkCfg = KgConfig.default.copy(extraLanguages = Seq("fr"))
 
-  private val dictsCache = new java.util.HashMap[SparkSession, Pipeline.Dicts]()
-
-  /** The fixture as a dictionary set, memoized per session like
-    * [[MentionOps.dictsFor]], so Pipeline.prepareLink builds its link
+  /** The fixture as a dictionary set, memoized per session
+    * ([[MentionOps.perSession]]), so Pipeline.prepareLink builds its link
     * artifacts once per session, as it does for every pipeline run. Its
     * aliases are the (term, qid) pairs of `qidOf`; MentionOps.Terms is
     * qidOf's key set, so these are exactly the keys the mention rows
     * carry. The extract-side members stay empty: no query extracts. */
-  private def fixtureDicts(spark: SparkSession): Pipeline.Dicts =
-    dictsCache.synchronized {
-      dictsCache.keySet.removeIf(s => s.sparkContext.isStopped)
-      dictsCache.computeIfAbsent(spark, s => {
-        import s.implicits._
-        Pipeline.Dicts(
-          aliases = qidOf.toSeq.sorted.map { case (term, qid) =>
-            AliasRow(term, term, qid, "Konzept", 1.0, "de")
-          },
-          patterns = Nil,
-          wiki = wikiFixture.toDF(), redirects = redirectFixture.toDF(),
-          wd = wdFixture.toDF(), dbp = dbpFixture.toDF(),
-          synonyms = synonymFixture.toDF(),
-          wdPartOf = Map.empty, wdDesc = Map.empty, idf = Map.empty)
-      })
+  private val fixtureDicts: SparkSession => Pipeline.Dicts =
+    MentionOps.perSession { s =>
+      import s.implicits._
+      Pipeline.Dicts(
+        aliases = qidOf.toSeq.sorted.map { case (term, qid) =>
+          AliasRow(term, term, qid, "Konzept", 1.0, "de")
+        },
+        patterns = Nil,
+        wiki = wikiFixture.toDF(), redirects = redirectFixture.toDF(),
+        wd = wdFixture.toDF(), dbp = dbpFixture.toDF(),
+        synonyms = synonymFixture.toDF(),
+        wdPartOf = Map.empty, wdDesc = Map.empty, idf = Map.empty)
     }
 
   /** The REAL link chain (Linking.linkAll) over documents-derived mentions
@@ -181,7 +176,7 @@ object LinkOps {
       .orderBy("url", "entity")
   }
 
-  /** A1-A10 statistics (the REAL Statistics.compute pass structure) over
+  /** A1-A10 statistics (the REAL Statistics.state + finish passes) over
     * the link-chain fixture nodes — every metric row is hand-derivable
     * from per-term mention counts over the documents table, giving the
     * statistics stage a driver oracle that shares NO code with the engine

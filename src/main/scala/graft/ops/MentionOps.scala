@@ -48,7 +48,7 @@ object MentionOps {
       .orderBy("doc_id", "rk")
   }
 
-  /** The synthetic dictionaries, memoized per session: they are static
+  /** `build` memoized per session: a dictionary set is static
     * per-deployment data, and so are the link artifacts that
     * Pipeline.prepareLink builds once per Dicts and config. Rebuilding
     * them on every query invocation would charge the 100-page pipeline
@@ -58,14 +58,18 @@ object MentionOps {
     * access — a WeakHashMap cannot do this because the cached DataFrames
     * strongly reference their SparkSession key, keeping the entry
     * reachable forever. */
-  private val dictsCache = new java.util.HashMap[SparkSession, Pipeline.Dicts]()
-
-  private[graft] def dictsFor(spark: SparkSession): Pipeline.Dicts =
-    dictsCache.synchronized {
-      dictsCache.keySet.removeIf(s => s.sparkContext.isStopped)
-      dictsCache.computeIfAbsent(spark,
-        s => Pipeline.dictsFromCorpus(s, SyntheticCorpus.generate(0)))
+  private[graft] def perSession(
+      build: SparkSession => Pipeline.Dicts): SparkSession => Pipeline.Dicts = {
+    val bySession = new java.util.HashMap[SparkSession, Pipeline.Dicts]()
+    spark => bySession.synchronized {
+      bySession.keySet.removeIf(s => s.sparkContext.isStopped)
+      bySession.computeIfAbsent(spark, s => build(s))
     }
+  }
+
+  /** The synthetic dictionaries of the session. */
+  private[graft] val dictsFor: SparkSession => Pipeline.Dicts =
+    perSession(s => Pipeline.dictsFromCorpus(s, SyntheticCorpus.generate(0)))
 
   /** Full KG pipeline on the deterministic synthetic corpus (FIXTURES.md):
     * driver-visible extract→link→relate run, hash-compared against a golden

@@ -43,9 +43,10 @@ class CacheLayoutSpec extends SparkSpec {
   }
 
   test("the statistics metrics plan itself never scans the fat columns") {
-    val metricsOverNodes = Statistics.compute(
-      spark, result.nodes, result.edges, "probe")
+    val (metricsOverNodes, caches) = Statistics.finish(
+      Statistics.state(result.nodes, result.edges), "probe")
     val out = imrScanOutputs(metricsOverNodes)
+    caches.foreach(_.unpersist())
     for (fat <- Seq("wiki_extract", "wiki_multilang", "dbp_abstract", "wd_descriptions"))
       assert(!out.contains(fat),
         s"statistics must not decompress $fat; scans read $out")

@@ -6,11 +6,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The keyed link shape in both regimes, one payload join-back onto rows
-  * that carry their L5 text: salted, building its plan over stats-less
-  * inputs runs no Spark job (the join-back's gate reads plan estimates
-  * only);
+  * that carry their L5 text: Linking.prepare returns the key tables
+  * cached and everything a run reads already decided; salted, building
+  * the link plan over stats-less entity rows runs no Spark job;
   * broadcast, the materialized payload table joins back without any
   * shuffle; Pipeline.prepareLink keeps only the two key tables; and runs
   * without prepared tables link over the artifacts that it built once for
@@ -33,13 +34,10 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val corpus = generated.copy(aliases = generated.aliases :+
       AliasRow("Nullbegriff", e(7).name, null, e(7).typ, 1.0, "de"))
     val dicts = Pipeline.dictsFromCorpus(spark, corpus)
-    val cfg = KgConfig.default.copy(forceSaltedJoins = true)
-    // not materialized: the key chain is planned inside linkFlat, and its
-    // stats-less key tables reach the join-backs
-    val keys = statsLess(corpus.aliases.map(a => (a.canonical, a.qid)).distinct
-      .toDF("entity", "qid"))
     val prep = Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
-      dicts.dbp, dicts.synonyms, keys, cfg)
+      dicts.dbp, dicts.synonyms,
+      corpus.aliases.map(a => (a.canonical, a.qid)).distinct.toDF("entity", "qid"),
+      KgConfig.default.copy(forceSaltedJoins = true))
     val rows = Seq(
       EntityRow("u1", "de", "i1", e(0).name, e(0).qid, e(0).typ, e(0).name, 0, 1, "explicit", 1),
       EntityRow("u2", "de", "i2", e(0).name, e(0).qid, e(0).typ, e(0).name, 0, 1, "explicit", 1),
@@ -69,6 +67,33 @@ class KeyedLinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(flat.filter($"entity" === e(0).name && $"wiki_status" === "found")
       .count() == 2)
     assert(flat.filter($"wd_status".isNull || $"dbp_status".isNull).count() == 0)
+    prep.all.foreach(_.unpersist())
+  }
+
+  test("Linking.prepare returns cached key tables and a decided link") {
+    // an entity count no other suite uses, so no equal plan is cached
+    // already; extract-only fields set, which the link config drops
+    val corpus = SyntheticCorpus.generate(nPages = 0, nEntities = 70)
+    val dicts = Pipeline.dictsFromCorpus(spark, corpus)
+    val keys = corpus.aliases.map(a => (a.canonical, a.qid)).distinct
+      .toDF("entity", "qid")
+    val extractOnly = KgConfig.default.copy(inferEntities = true,
+      allowedEntityTypes = Some(Set("Person", "Ort")))
+    for (cfg <- Seq(extractOnly, extractOnly.copy(forceSaltedJoins = true))) {
+      val prep = Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
+        dicts.dbp, dicts.synonyms, keys, cfg)
+      val where = s"forceSaltedJoins=${cfg.forceSaltedJoins}"
+      assert(prep.all.forall(_.storageLevel == StorageLevel.MEMORY_AND_DISK),
+        s"$where: ${prep.all.map(_.storageLevel)}")
+      val (read, jobs) = JobFence.jobsOf(spark)(
+        (prep.unresolved, prep.payloadJoin, prep.decisions))
+      assert(jobs.isEmpty, s"$where: reading the prepared link ran jobs: $jobs")
+      assert(read._1.nonEmpty, s"$where: no unresolved key")
+      assert(read._2.path == (if (cfg.forceSaltedJoins) "salted" else "broadcast"),
+        s"$where: ${read._2}")
+      assert(prep.cfg == Linking.linkConfig(cfg), s"$where: ${prep.cfg}")
+      prep.all.foreach(_.unpersist())
+    }
   }
 
   test("broadcast key tables join back onto p_extract rows without a shuffle") {

@@ -47,16 +47,16 @@ class L4ComposeSpec extends SparkSpec {
           e, null, "Konzept", e, 0, e.length, "explicit", 1)
       }
     val rows = spark.createDataset(entities).toDF()
-    Linking.linkAll(spark, rows,
-      Linking.prepare(spark, wiki, redirects, wd, dbp, synonyms,
-        rows.select("entity", "qid").distinct(), KgConfig.default),
-      scrapes)
+    val prep = Linking.prepare(spark, wiki, redirects, wd, dbp, synonyms,
+      rows.select("entity", "qid").distinct(), KgConfig.default)
+    try Linking.linkAll(spark, rows, prep, scrapes)
       .select(col("entity"),
         col("sources.wikipedia.status").as("st"),
         col("sources.wikipedia.fallback_source").as("fb"),
         col("sources.wikipedia.url").as("u"))
       .collect().map(r => r.getString(0) ->
         ((r.getString(1), r.getString(2), r.getString(3)))).toMap
+    finally prep.all.foreach(_.unpersist())
   }
 
   test("L1-resolved keys ignore a co-resident synonym payload") {

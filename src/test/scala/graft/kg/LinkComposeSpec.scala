@@ -3,8 +3,8 @@ package graft.kg
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Corner cases of the PRE-COMPOSED L1 dictionary (Linking.prepare builds
-  * the redirect hop into l1Dict; round 5): the composition must reproduce
+/** Corner cases of the PRE-COMPOSED L1 dictionary (Linking.l1Dict builds
+  * the redirect hop into it; round 5): the composition must reproduce
   * the sequential redirect-join → primary-join semantics exactly —
   *   1. a redirect SHADOWS a primary page of the same title (the
   *      sequential probe followed from_title→to_title and never consulted
@@ -40,16 +40,16 @@ class LinkComposeSpec extends SparkSpec {
         e, null, "Konzept", e, 0, e.length, "explicit", 1)
     }
     val rows = spark.createDataset(entities).toDF()
-    Linking.linkAll(spark, rows,
-      Linking.prepare(spark, wiki, redirects, wd, dbp, synonyms,
-        rows.select("entity", "qid").distinct(), KgConfig.default),
-      scrapes)
+    val prep = Linking.prepare(spark, wiki, redirects, wd, dbp, synonyms,
+      rows.select("entity", "qid").distinct(), KgConfig.default)
+    try Linking.linkAll(spark, rows, prep, scrapes)
       .select(col("entity"),
         col("sources.wikipedia.status").as("st"),
         col("sources.wikipedia.fallback_source").as("fb"),
         col("sources.wikipedia.url").as("u"))
       .collect().map(r => r.getString(0) ->
         ((r.getString(1), r.getString(2), r.getString(3)))).toMap
+    finally prep.all.foreach(_.unpersist())
   }
 
   test("plain title resolves directly") {
@@ -75,17 +75,16 @@ class LinkComposeSpec extends SparkSpec {
   }
 
   test("l1Dict composition: shadowed title absent as a direct key") {
-    val prep = Linking.prepare(spark,
-      Seq(
-        WikiPageRow("Alpha", "de", "uA", longA, Nil, Nil, null, Map.empty, null),
-        WikiPageRow("Delta", "de", "uD", longD, Nil, Nil, null, Map.empty, null))
-        .toDF(),
-      Seq(RedirectRow("Delta", "Alpha", "de"),
-        RedirectRow("Missing", "Nowhere", "de")).toDF(),
-      Seq.empty[WdEntityRow].toDF(), Seq.empty[DbpediaRow].toDF(),
-      Seq.empty[SynonymRow].toDF(), Seq.empty[(String, String)].toDF("entity", "qid"),
-      KgConfig.default)
-    val rows = prep.l1Dict
+    val cfg = KgConfig.default
+    val wiki = Seq(
+      WikiPageRow("Alpha", "de", "uA", longA, Nil, Nil, null, Map.empty, null),
+      WikiPageRow("Delta", "de", "uD", longD, Nil, Nil, null, Map.empty, null))
+      .toDF()
+    val redirects = Seq(RedirectRow("Delta", "Alpha", "de"),
+      RedirectRow("Missing", "Nowhere", "de")).toDF()
+    val rows = Linking.l1Dict(Linking.pagesOf(wiki, cfg.language, "w"),
+        redirects.select("from_title", "to_title"), Seq.empty[SynonymRow].toDF(),
+        cfg.minExtractLen)
       .select("l1_key", "l1_lookup", "w_url").as[(String, String, String)]
       .collect().toSet
     assert(rows == Set(

@@ -23,10 +23,9 @@ class LinkingStagesSpec extends SparkSpec {
     }
     val scrapes = Seq.empty[(String, String)].toDF("p_url", "p_extract")
     val rows = spark.createDataset(entities).toDF()
-    Linking.linkAll(spark, rows,
-      Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd, dicts.dbp,
-        dicts.synonyms, rows.select("entity", "qid").distinct(), cfg),
-      scrapes)
+    val prep = Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
+      dicts.dbp, dicts.synonyms, rows.select("entity", "qid").distinct(), cfg)
+    try Linking.linkAll(spark, rows, prep, scrapes)
       .select(col("entity"),
         col("sources.wikipedia.status").as("wp_status"),
         col("sources.wikipedia.fallback_source").as("wp_fb"),
@@ -39,6 +38,7 @@ class LinkingStagesSpec extends SparkSpec {
         ((r.getString(1), r.getString(2), r.getString(3), r.getString(4),
           r.getString(5), r.getString(6), r.getString(7))))
       .toMap
+    finally prep.all.foreach(_.unpersist())
   }
 
   private def deUrl(title: String) =

@@ -1,6 +1,7 @@
 package graft.kg
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** L7 multilang generalization beyond the de/en pair
@@ -15,44 +16,48 @@ class MultilangSpec extends SparkSpec {
   private val longFr = "f" * 120
   private val longRu = "r" * 120
 
-  private lazy val nodes = {
-    val cfg = KgConfig.default.copy(extraLanguages = Seq("fr", "ru"))
-    val wiki = Seq(
-      WikiPageRow("paris", "de", "https://de.wikipedia.org/wiki/paris",
-        longDe, Nil, Nil, "Q1", Map.empty, null),
-      WikiPageRow("Paris (fr)", "fr", "https://fr.wikipedia.org/wiki/Paris",
-        longFr, Nil, Nil, "Q1", Map.empty, null),
-      WikiPageRow("Париж", "ru", "https://ru.wikipedia.org/wiki/Париж",
-        longRu, Nil, Nil, "Q1", Map.empty, null),
-      WikiPageRow("berlin", "de", "https://de.wikipedia.org/wiki/berlin",
-        longDe, Nil, Nil, "Q2", Map.empty, null)).toDF()
-    val wd = Seq(
-      WdEntityRow("Q1", Map("de" -> "paris"), Map.empty, Map.empty,
-        Nil, Nil, Nil, Nil,
-        sitelinks = Map("dewiki" -> "paris", "frwiki" -> "Paris (fr)",
-          "ruwiki" -> "Париж")),
-      WdEntityRow("Q2", Map("de" -> "berlin"), Map.empty, Map.empty,
-        Nil, Nil, Nil, Nil, sitelinks = Map("dewiki" -> "berlin"))).toDF()
-    val entities = Seq(
-      ("doc://1", "de", TextUtils.entityId("doc://1", "paris"), "paris", "Q1",
-        "Ort", "paris", 0, 5, "explicit", 1),
-      ("doc://1", "de", TextUtils.entityId("doc://1", "berlin"), "berlin", "Q2",
-        "Ort", "berlin", 0, 6, "explicit", 1))
-      .toDF("url", "lang", "entity_id", "entity", "qid", "entity_type",
-        "citation", "citation_start", "citation_end", "inferred", "freq")
-    val empty = Seq.empty[(String, String)]
-    Linking.linkAll(spark, entities,
-      Linking.prepare(spark, wiki, Seq.empty[RedirectRow].toDF(), wd,
-        Seq.empty[DbpediaRow].toDF(), Seq.empty[SynonymRow].toDF(),
-        entities.select("entity", "qid").distinct(), cfg),
-      empty.toDF("p_url", "p_extract"))
+  private lazy val wiki = Seq(
+    WikiPageRow("paris", "de", "https://de.wikipedia.org/wiki/paris",
+      longDe, Nil, Nil, "Q1", Map.empty, null),
+    WikiPageRow("Paris (fr)", "fr", "https://fr.wikipedia.org/wiki/Paris",
+      longFr, Nil, Nil, "Q1", Map.empty, null),
+    WikiPageRow("Париж", "ru", "https://ru.wikipedia.org/wiki/Париж",
+      longRu, Nil, Nil, "Q1", Map.empty, null),
+    WikiPageRow("berlin", "de", "https://de.wikipedia.org/wiki/berlin",
+      longDe, Nil, Nil, "Q2", Map.empty, null)).toDF()
+  private lazy val wd = Seq(
+    WdEntityRow("Q1", Map("de" -> "paris"), Map.empty, Map.empty,
+      Nil, Nil, Nil, Nil,
+      sitelinks = Map("dewiki" -> "paris", "frwiki" -> "Paris (fr)",
+        "ruwiki" -> "Париж")),
+    WdEntityRow("Q2", Map("de" -> "berlin"), Map.empty, Map.empty,
+      Nil, Nil, Nil, Nil, sitelinks = Map("dewiki" -> "berlin"))).toDF()
+  private lazy val entities = Seq(
+    ("doc://1", "de", TextUtils.entityId("doc://1", "paris"), "paris", "Q1",
+      "Ort", "paris", 0, 5, "explicit", 1),
+    ("doc://1", "de", TextUtils.entityId("doc://1", "berlin"), "berlin", "Q2",
+      "Ort", "berlin", 0, 6, "explicit", 1))
+    .toDF("url", "lang", "entity_id", "entity", "qid", "entity_type",
+      "citation", "citation_start", "citation_end", "inferred", "freq")
+
+  /** `read` of the fixture's nodes linked with `extraLanguages`; the
+    * prepared key tables are dropped afterwards. */
+  private def linked[T](extraLanguages: Seq[String])(read: DataFrame => T): T = {
+    val prep = Linking.prepare(spark, wiki, Seq.empty[RedirectRow].toDF(), wd,
+      Seq.empty[DbpediaRow].toDF(), Seq.empty[SynonymRow].toDF(),
+      entities.select("entity", "qid").distinct(),
+      KgConfig.default.copy(extraLanguages = extraLanguages))
+    try read(Linking.linkAll(spark, entities, prep,
+      Seq.empty[(String, String)].toDF("p_url", "p_extract")))
+    finally prep.all.foreach(_.unpersist())
   }
 
-  private def ml(entity: String) = nodes
-    .filter(col("entity") === entity)
-    .select(col("sources.wikipedia.multilang"))
-    .as[Map[String, (String, String, String)]]
-    .head()
+  private lazy val multilang = linked(Seq("fr", "ru"))(_
+    .select(col("entity"), col("sources.wikipedia.multilang"))
+    .as[(String, Map[String, (String, String, String)])]
+    .collect().toMap)
+
+  private def ml(entity: String) = multilang(entity)
 
   test("extra-language sitelinks fill their own multilang entries") {
     val m = ml("paris")
@@ -68,12 +73,7 @@ class MultilangSpec extends SparkSpec {
   }
 
   test("extra languages equal to the primary/secondary pair are ignored") {
-    val cfg = KgConfig.default.copy(extraLanguages = Seq("de", "en"))
-    val prep = Linking.prepare(spark,
-      Seq.empty[WikiPageRow].toDF(), Seq.empty[RedirectRow].toDF(),
-      Seq.empty[WdEntityRow].toDF(), Seq.empty[DbpediaRow].toDF(),
-      Seq.empty[SynonymRow].toDF(), Seq.empty[(String, String)].toDF("entity", "qid"),
-      cfg)
-    assert(prep.mlExtra.isEmpty)
+    def nodes(langs: Seq[String]) = linked(langs)(_.collect().toSet)
+    assert(nodes(Seq("de", "en")) == nodes(Nil))
   }
 }

@@ -56,9 +56,10 @@ class StatisticsSpec extends SparkSpec {
       ("b", "mag", "c", "explicit"),
       ("a", "ist teil von", "c", "implicit")))
       .toDF("subject", "predicate", "object", "inferred")
-    Statistics.compute(spark, nodes, edges, "t")
-      .collect().map(r => (r.getString(2), r.getString(3)) -> r.getDouble(4))
+    val (rows, caches) = Statistics.finish(Statistics.state(nodes, edges), "t")
+    try rows.collect().map(r => (r.getString(2), r.getString(3)) -> r.getDouble(4))
       .toMap
+    finally caches.foreach(_.unpersist())
   }
 
   test("a wd-miss node (null arrays) still counts in every family") {
@@ -161,13 +162,14 @@ class StatisticsSpec extends SparkSpec {
     val merged = Statistics.State.of(Statistics.state(nodesA, edgesA).rows
       .unionByName(Statistics.state(nodesB, edgesB).rows))
     val (got, caches) = Statistics.finish(merged, "t")
-    val want = Statistics.compute(spark, nodes, edgesA.unionByName(edgesB), "t")
+    val (want, wantCaches) = Statistics.finish(
+      Statistics.state(nodes, edgesA.unionByName(edgesB)), "t")
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
     assert(rows(got) == rows(want), rows(got).diff(rows(want)))
-    caches.foreach(_.unpersist())
 
     // the whole-corpus rows the merge has to reproduce
     val m = want.collect().map(r => (r.getString(2), r.getString(3)) -> r.getDouble(4)).toMap
+    (caches ++ wantCaches).foreach(_.unpersist())
     assert(m(("entity_connections", "a")) == 3.0) // b, c, d: b counted once
     assert(m(("entity_connections", "b")) == 2.0)
     assert(m.keySet.filter(_._1 == "top10_internal_links").map(_._2) ==
